@@ -94,9 +94,15 @@ def spimi_arrow_rows(batches):
             doc_base = 0
             docs_flat = np.repeat(doc_ids, lens)
         if batch.num_columns >= 4:
-            pos_flat = batch.column(2).flatten() \
-                .to_numpy(**_ZCF).astype(np.int32)
+            pos_vals = batch.column(2).flatten().to_numpy(**_ZCF)
             dl_vals = batch.column(3).to_numpy(**_ZCF)
+            # the posting format stores positions and dl as int32
+            for name, v in (("position", pos_vals), ("dl", dl_vals)):
+                if v.size and int(v.max()) >= 2**31:
+                    raise ValueError(
+                        f"explicit {name} {int(v.max())} does not fit "
+                        "the int32 posting format (max 2^31-1)")
+            pos_flat = pos_vals.astype(np.int32)
             dls_flat = np.repeat(dl_vals, lens).astype(np.int32)
         else:
             starts = np.repeat((np.cumsum(lens) - lens), lens)

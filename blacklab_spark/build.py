@@ -104,12 +104,6 @@ def _shuffle_snapshot(spark) -> tuple[int, int] | None:
         return None
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side, no Spark job —
-    each read-back count() was ~0.5-1s of serial latency per stage)."""
-    return sum(rows for _, rows in _parquet_file_rows(path))
-
-
 def _parquet_file_rows(path: str) -> list[tuple[str, int]]:
     """(file, rows) per output partition file, from the footers.
     This is the stage's per-partition lineage: which task wrote which

@@ -39,12 +39,12 @@ from blacklab_spark.tokenizer import py_tokens_insensitive
 
 
 class SearchEngine:
-    """``cache_size`` > 0 opts into the serving-path result cache
+    """``topk`` runs its jobs inside the call and returns a driver-built
+    frame of ≤k rows; ``find`` and the hit operators stay lazy.
+    ``cache_size`` > 0 opts into the serving-path result cache
     (cache.py): repeated ``topk``/``count_hits`` calls return
     driver-materialized results without re-running Spark jobs, with
-    delete-aware keys. Off by default — the library's lazy-DataFrame
-    contract (and honest benchmarking) stays unchanged unless a
-    long-lived server asks for it."""
+    delete-aware keys. Off by default for honest benchmarking."""
 
     def __init__(self, index: InvertedIndex,
                  settings: SearchSettings | None = None,
@@ -53,17 +53,13 @@ class SearchEngine:
         self.spark = index.spark
         self.settings = settings or SearchSettings()
         self.cache = ResultCache(cache_size)
-        # PLAN-HANDLE memoization (always on; r3 VERDICT #10 — the
-        # serving latency floor): repeated queries return the SAME
-        # DataFrame object, so Spark reuses the prior execution's
-        # shuffle map outputs and re-runs only the result stage —
-        # measured q01 warm collect 0.045s vs 0.86s cold. Unlike the
-        # opt-in RESULT cache this never materializes rows and never
-        # changes semantics: the plan is deterministic in (query,
-        # index artifacts), artifacts are immutable per path, and the
+        # PLAN-HANDLE memoization (always on): repeated queries return
+        # the SAME DataFrame object — for top-k a local frame of its
+        # ≤k rows; for find a lineage whose shuffle map outputs Spark
+        # reuses, re-running only the result stage. Results are
+        # deterministic in (query, immutable index artifacts), and the
         # key embeds the tombstone listing so deletes refresh it. The
-        # LRU bound also bounds the shuffle files the held lineages
-        # pin (ContextCleaner frees them when handles age out).
+        # LRU bound also bounds the shuffle files held lineages pin.
         self._plan_cache = ResultCache(plan_cache_size)
 
     @classmethod

@@ -10,6 +10,9 @@ import json
 import os
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from blacklab_spark.config import BuildConfig
@@ -20,11 +23,11 @@ class InvertedIndex:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        # The handle reads _index_meta.json and detects tombstones via
-        # the local filesystem; a remote URI would open fine through
-        # spark.read but silently MISS tombstones (deleted docs
-        # reappearing with no error). Fail loudly instead; remote
-        # indexes need a Hadoop-FS-aware handle (round-2 ADVICE).
+        # The handle reads _index_meta.json, terms and top-k rows, and
+        # detects tombstones via the local filesystem; a remote URI
+        # would open fine through spark.read but silently MISS
+        # tombstones (deleted docs reappearing with no error). Fail
+        # loudly instead; remote indexes need a Hadoop-FS-aware handle.
         import re as _re
         m = _re.match(r"^([a-z][a-z0-9+.-]*)://", self.path)
         if m and m.group(1) != "file":
@@ -54,6 +57,9 @@ class InvertedIndex:
         # entry is keyed on its file listing and refreshes when a
         # delete lands.
         self._df_cache: dict = {}
+        # driver-side Arrow reads: terms dataset, doc_meta file ranges
+        self._terms_ds: ds.Dataset | None = None
+        self._doc_meta_files: list[tuple[str, int, int]] | None = None
         self._syn_values: frozenset | None = None
 
     @property
@@ -180,25 +186,12 @@ class InvertedIndex:
 
     def _tombstone_listing(self) -> tuple:
         """Sorted tombstone parquet file names — the mutable part of
-        an otherwise-immutable index, used as the doc_meta cache key."""
-        p = self.deletes_path
-        if "://" not in p or p.startswith("file:"):
-            lp = p.split("://", 1)[-1]
-            if not os.path.isdir(lp):
-                return ()
-            return tuple(sorted(f for f in os.listdir(lp)
-                                if f.endswith(".parquet")))
-        # remote index (hdfs://, s3a://, ...): os.path would silently
-        # report "no tombstones" and resurrect deleted docs — go
-        # through the Hadoop FileSystem API instead.
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
+        an otherwise-immutable index, used as the doc_meta cache key
+        (local: ``__init__`` rejects remote paths)."""
+        if not os.path.isdir(self.deletes_path):
             return ()
-        return tuple(sorted(st.getPath().getName()
-                            for st in fs.listStatus(hpath)
-                            if st.getPath().getName().endswith(".parquet")))
+        return tuple(sorted(f for f in os.listdir(self.deletes_path)
+                            if f.endswith(".parquet")))
 
     @property
     def has_deletes(self) -> bool:
@@ -228,16 +221,52 @@ class InvertedIndex:
     # reference: search/lucene/BLSpanMultiTermQueryWrapper.java:53) ----
     def lookup_terms(self, terms: list[str]) -> pd.DataFrame:
         """Exact term lookup → pandas (term, term_id, df, cf, idf).
-        Memoized per index (callers must not mutate the result)."""
+        Memoized per index (callers must not mutate the result). A
+        driver-side Arrow read (no Spark job) that prunes row groups by
+        min/max stats like a Spark scan would."""
         uniq = tuple(sorted(set(terms)))
         key = ("terms", uniq)
         if key not in self._term_cache:
-            pdf = (self.terms.filter(F.col("term").isin(list(uniq)))
-                   .select("term", "term_id", "df", "cf").toPandas())
+            if self._terms_ds is None:
+                self._terms_ds = ds.dataset(
+                    os.path.join(self.path, "terms"), format="parquet")
+            pdf = self._terms_ds.to_table(
+                columns=["term", "term_id", "df", "cf"],
+                filter=ds.field("term").isin(pa.array(uniq, pa.string())),
+            ).to_pandas()
             pdf["idf"] = [bm25_idf(self.n_docs, int(d)) for d in pdf["df"]]
             self._term_cache[key] = \
                 pdf.sort_values("term_id").reset_index(drop=True)
         return self._term_cache[key]
+
+    def doc_rows(self, doc_ids: list[int], columns: list[str]
+                 ) -> pd.DataFrame:
+        """doc_meta ``columns`` of ``doc_ids`` (no tombstone filter),
+        read with Arrow on the driver from only the files whose footer
+        doc-id range holds one of the ids."""
+        if self._doc_meta_files is None:
+            d, ranges = os.path.join(self.path, "doc_meta"), []
+            for f in sorted(os.listdir(d)):
+                if f.startswith((".", "_")) or not f.endswith(".parquet"):
+                    continue
+                md = pq.read_metadata(os.path.join(d, f))
+                col = md.schema.to_arrow_schema().get_field_index("doc_id")
+                st = [md.row_group(g).column(col).statistics
+                      for g in range(md.num_row_groups)]
+                if not st:
+                    continue  # a file with no rows
+                if all(s is not None and s.has_min_max for s in st):
+                    lo, hi = min(s.min for s in st), max(s.max for s in st)
+                else:
+                    lo, hi = -2**63, 2**63 - 1
+                ranges.append((os.path.join(d, f), lo, hi))
+            self._doc_meta_files = ranges  # published whole (threads)
+        files = [p for p, lo, hi in self._doc_meta_files
+                 if any(lo <= i <= hi for i in doc_ids)]
+        return ds.dataset(files, format="parquet").to_table(
+            columns=columns,
+            filter=ds.field("doc_id").isin(pa.array(doc_ids, pa.int64())),
+        ).to_pandas()
 
     def _expand(self, key: tuple, cond: Column, limit: int) -> pd.DataFrame:
         """Dictionary expansion shared path: deterministic term_id

@@ -531,7 +531,7 @@ def window_hits(hits: DataFrame, first: int, size: int,
     TakeOrderedAndProject (per-partition top-(first+size), merged on
     the driver) — no global sort, no single-partition window over the
     full hit set. The row_number window then runs over ≤ first+size
-    rows (one tiny partition, like finish_topk's post-limit rank)."""
+    rows (one tiny partition)."""
     from pyspark.sql import Window as W
     cols = [F.col(c) for c in order_cols]
     head = hits.orderBy(*cols).limit(first + size)

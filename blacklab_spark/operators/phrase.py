@@ -95,7 +95,7 @@ def _phrase_kernel(slots_of: dict[int, list[int]], n_terms: int):
     remaining 42 bits per bucket. ``slots_of`` maps a term_id to EVERY
     phrase slot it occupies — a repeated word ("the" "the") decodes
     once and feeds each of its slots."""
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         slot_keys: list[list[np.ndarray]] = [[] for _ in range(n_terms)]
         for term_id, blob_doc, blob_tf, blob_pos in zip(
                 pdf["term_id"], pdf["doc_ids"], pdf["tfs"], pdf["positions"]):

@@ -22,11 +22,9 @@ reference: test/test/hits.js:55-57).
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, types as T
 
 from blacklab_spark import codec
@@ -54,7 +52,7 @@ def score_bucket_kernel(idf_by_term: dict[int, float], k1: float, b: float,
     optional local top-k (tie-break score desc → doc_id asc so the cut
     never drops a global winner). Shared by the exhaustive and WAND
     paths — identical arithmetic by construction."""
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         docs_out, tids_out, contribs_out = [], [], []
         for term_id, blob_doc, blob_tf, blob_dl in zip(
                 pdf["term_id"], pdf["doc_ids"], pdf["tfs"], pdf["dls"]):
@@ -95,8 +93,7 @@ def score_bucket_kernel_filtered(idf_by_term: dict[int, float], k1: float,
     metadata filter); only allowed docs are decoded into the sum.
     Same canonical (doc_id, term_id)-ordered summation, so scores are
     bit-identical to the unfiltered kernel for the surviving docs."""
-    def kernel(key, blocks_pdf: pd.DataFrame,
-               allowed_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, blocks_pdf, allowed_pdf):
         empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                               "score": pd.Series([], dtype="float64")})
         if blocks_pdf.empty or allowed_pdf.empty:
@@ -163,47 +160,25 @@ def doc_scores(index: InvertedIndex, terms: list[str],
     return scores
 
 
-# Above this corpus size the winners' metadata is fetched via a
-# collected doc_id IN-list (row-group pruning); below it the one-job
-# lazy broadcast join is cheaper (Spark job latency dominates a scan
-# this small).
-TOPK_PUSHDOWN_MIN_DOCS = 10_000_000
-
-
-def finish_topk(index: InvertedIndex, scores: DataFrame, k: int,
-                pushdown: bool | None = None) -> DataFrame:
-    """orderBy+limit (TakeOrderedAndProject) → fetch the ≤k winners'
-    metadata → rank.
-
-    At scale (``pushdown``, auto above TOPK_PUSHDOWN_MIN_DOCS docs)
-    the winners are collected (bounded by k) and their ids pushed into
-    the doc_meta scan as ``doc_id IN (...)``: a broadcast join would
-    still read every row group of doc_meta just to print k rows; the
-    IN-list prunes row groups via parquet min/max stats (the _fiseq
-    anchor pattern, VERDICT r02 #4). Small corpora keep the
-    single-job lazy broadcast join — one fewer Spark job round-trip."""
-    if pushdown is None:
-        pushdown = index.n_docs >= TOPK_PUSHDOWN_MIN_DOCS
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    if not pushdown:
-        topk = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        meta = index.doc_meta.select("doc_id", "conv_id", "turn_idx", "text")
-        out = F.broadcast(topk).join(meta, "doc_id")
-        return (out.withColumn("rank", F.row_number().over(w).cast("int"))
-                .select("rank", "doc_id", "conv_id", "turn_idx", "score",
-                        "text"))
+def finish_topk(index: InvertedIndex, scores: DataFrame, k: int) -> DataFrame:
+    """orderBy+limit (TakeOrderedAndProject) → collect the ≤k winners
+    → attach their conv_id/turn_idx/text with a driver-side read
+    (InvertedIndex.doc_rows; a k-row result needs no cluster job) →
+    rank. Winners are tombstone-free already: doc_scores anti-joins
+    the tombstones, and WAND reroutes to the filtered plan when
+    deletes exist. Collecting the local result runs no Spark job."""
     top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
     if not top:
         return index.spark.createDataFrame([], TOPK_SCHEMA)
-    winners = index.spark.createDataFrame(
-        [(int(r["doc_id"]), float(r["score"])) for r in top],
-        "doc_id long, score double")
-    meta = (index.doc_meta
-            .filter(F.col("doc_id").isin([int(r["doc_id"]) for r in top]))
-            .select("doc_id", "conv_id", "turn_idx", "text"))
-    out = F.broadcast(winners).join(meta, "doc_id")
-    return (out.withColumn("rank", F.row_number().over(w).cast("int"))
-            .select("rank", "doc_id", "conv_id", "turn_idx", "score", "text"))
+    winners = pd.DataFrame({"doc_id": [int(r["doc_id"]) for r in top],
+                            "score": [float(r["score"]) for r in top]})
+    meta = index.doc_rows(winners["doc_id"].tolist(),
+                          ["doc_id", "conv_id", "turn_idx", "text"])
+    out = winners.merge(meta, on="doc_id")
+    out.insert(0, "rank", np.arange(1, len(out) + 1, dtype=np.int32))
+    return index.spark.createDataFrame(
+        out[["rank", "doc_id", "conv_id", "turn_idx", "score", "text"]],
+        TOPK_SCHEMA)
 
 
 def topk_exhaustive(index: InvertedIndex, terms: list[str], k: int = 10,

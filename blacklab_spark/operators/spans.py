@@ -422,7 +422,7 @@ def _repetition_closure(pos: DataFrame, min_rep: int) -> DataFrame:
 
     cap = max(1, min_rep)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         out_d: list[int] = []
         out_s: list[int] = []
         out_e: list[int] = []

@@ -33,11 +33,9 @@ test/test/hits.js:55-57).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, types as T
 
-from blacklab_spark import codec
 from blacklab_spark.index import InvertedIndex
 from blacklab_spark.operators.scoring import (finish_topk,
                                               score_bucket_kernel,

@@ -337,6 +337,53 @@ def test_spimi_kernel_int64_doc_range_fallback():
     assert list(dec) == [1, 0]           # 'b' is token 0 of doc 2^40
 
 
+def _explicit_positions_batch(seed: int, top: int, dl: int):
+    """Seeded 4-column kernel batch (doc_id, tokens, positions, dl)
+    whose largest explicit position is ``top``."""
+    import pyarrow as pa
+    rng = np.random.default_rng(seed)
+    toks, poss = [], []
+    for _ in range(3):
+        n = int(rng.integers(1, 6))
+        toks.append([str(t) for t in rng.choice(["a", "b", "c"], n)])
+        poss.append(sorted(int(p) for p in rng.integers(0, top, n)))
+    poss[-1][-1] = top
+    return pa.RecordBatch.from_arrays(
+        [pa.array([0, 1, 2], type=pa.int64()),
+         pa.array(toks, type=pa.list_(pa.string())),
+         pa.array(poss, type=pa.list_(pa.int64())),
+         pa.array([dl] * 3, type=pa.int64())],
+        names=["doc_id", "tokens", "positions", "dl"]), toks, poss
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_spimi_kernel_explicit_positions_int32_bound(seed):
+    """Explicit positions and dl are stored as int32: the largest
+    representable value round-trips, one more raises ValueError
+    instead of wrapping."""
+    from blacklab_spark.arrow_kernels import spimi_arrow_rows
+    top = 2**31 - 1
+    batch, toks, poss = _explicit_positions_batch(seed, top, top)
+    out = list(spimi_arrow_rows([batch]))[0].to_pydict()
+    want: dict = {}
+    for d, (ts, ps) in enumerate(zip(toks, poss)):
+        for t, p in zip(ts, ps):
+            want.setdefault((t, d), []).append(p)
+    got = {}
+    for t, d, blob, dl in zip(out["term"], out["doc_id"],
+                              out["positions"], out["dl"]):
+        dec = [int(x) for x in codec.decode_varints(blob)]
+        assert dec[0] == len(dec) - 1 and dl == top
+        got[(t, d)] = list(np.cumsum(dec[1:]))
+    assert got == want
+    with pytest.raises(ValueError, match="position 2147483648"):
+        list(spimi_arrow_rows([_explicit_positions_batch(seed, top + 1,
+                                                         top)[0]]))
+    with pytest.raises(ValueError, match="dl 2147483648"):
+        list(spimi_arrow_rows([_explicit_positions_batch(seed, top,
+                                                         top + 1)[0]]))
+
+
 def test_preprocess_plugin_tagger(spark, tiny_pdf, tmp_path):
     """Convert-and-tag plugin hook (reference ConvertPlugin/TagPlugin/
     DocIndexerConvertAndTag, r4 VERDICT #7): a registered transform
