@@ -49,6 +49,17 @@ def _binary_col(offsets: np.ndarray, data: bytes | np.ndarray,
                          pa.py_buffer(buf)])
 
 
+def bm25_contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
+    """Okapi BM25 contribution of one term to one doc — the engine's
+    ONE copy of the expression: the build's block ``max_score`` and
+    the query's per-bucket scorer both call it, so a block max is
+    bit-identically achieved by some doc's contribution (the WAND
+    bound). Plain arithmetic, so it also takes Spark Columns (the
+    delta engine's dl-free ``max_tf`` bound passes ``dl=0``). The
+    shape matches ``oracle.bm25_score``, the independent referee."""
+    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
 # --------------------------------------------------------------------
 # SPIMI: (doc_id, tokens) batches → pre-encoded posting mini-blocks.
 #
@@ -276,7 +287,8 @@ def finalize_blocks_arrow(cfg: BuildConfig, n_docs: int, avgdl: float):
             gidx = np.cumsum(change) - 1
             g_start = np.nonzero(change)[0]
             block_id = (np.arange(n) - g_start[gidx]).astype(np.int32)
-            if prev_tid is not None and tid[0] == prev_tid                     and bkt[0] == prev_bkt:
+            if (prev_tid is not None and tid[0] == prev_tid
+                    and bkt[0] == prev_bkt):
                 first_len = g_start[1] if g_start.size > 1 else n
                 block_id[:first_len] += prev_next_id
             prev_tid, prev_bkt = int(tid[-1]), int(bkt[-1])
@@ -289,12 +301,11 @@ def finalize_blocks_arrow(cfg: BuildConfig, n_docs: int, avgdl: float):
             dl_vals = codec.decode_varints(dl_data).astype(np.float64)
             v_starts = np.concatenate(([0], np.cumsum(nd)))[:-1]
             idf = np.log(1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5))
-            # exact same expression shape as score_bucket_kernel so the
+            # the query kernel's own expression (bm25_contrib), so the
             # block max is bit-identically *achieved* by some doc —
             # the WAND threshold bound depends on that
-            idf_per_val = np.repeat(idf, nd)
-            contrib = idf_per_val * (tf_vals * (k1 + 1.0)) / (
-                tf_vals + k1 * (1.0 - b + b * dl_vals / avgdl))
+            contrib = bm25_contrib(np.repeat(idf, nd), tf_vals, dl_vals,
+                                   k1, b, avgdl)
             max_score = np.maximum.reduceat(contrib, v_starts)
 
             yield pa.RecordBatch.from_arrays([

@@ -409,13 +409,19 @@ class IndexBuilder:
                             .withColumn("text", strip_tags("text")))
             # two sensitivity layers per annotation (BlackLab @i/@s,
             # SURVEY.md §1.1): `tokens` = lowercased (drives postings +
-            # BM25), `tokens_s` = original case. Format v6 default
-            # stores ONLY `tokens` (see BuildConfig.store_token_arrays
-            # for the storage/probe-latency tradeoff); derived layers
-            # come from annotations.with_token_layers at read time.
-            mode = cfg.store_token_arrays
-            mode = {True: "all", False: "none"}.get(mode, mode)
-            stored = []
+            # BM25), `tokens_s` = original case. Format v6 stores ONLY
+            # `tokens` — the @i layer that drives every hot probe path
+            # (CQL default layer, phrase probe, collocations,
+            # repetition closure, FiSeq verify); parquet
+            # dictionary-encodes it, so on disk it is effectively the
+            # reference's term-id tokens file, and SPIMI reads it
+            # instead of tokenizing a second time. Rarer layers
+            # (tokens_s/ci/di/pos) are DERIVED from text at read time
+            # (annotations.with_token_layers; the tokenizer is a
+            # deterministic JVM expression, so derived ≡ stored).
+            # Deriving every layer measured 3-12× probe-path latency
+            # at sf0.1. Older indexes that stored all layers or none
+            # still read: with_token_layers derives only absent ones.
             pre_layers = [c for c in ("tokens_s", "tokens_pos",
                                       "tokens_lemma")
                           if c in transcripts.columns]
@@ -441,25 +447,12 @@ class IndexBuilder:
                     "tokens", F.transform(F.col("tokens_s"),
                                           fold_insensitive))
                 stored = ["tokens"] + pre_layers
-            elif mode == "all":
-                from blacklab_spark.annotations import with_token_layers
-                doc_meta = with_token_layers(with_ids, cfg.annotations)
-                stored = ["tokens", "tokens_s"] + (
-                    ["tokens_pos"] if "pos" in (cfg.annotations or ())
-                    else [])
-            elif mode == "insensitive":
+            else:
                 doc_meta = with_ids.withColumn(
                     "tokens", tokens_insensitive("text"))
                 stored = ["tokens"]
-            else:
-                doc_meta = with_ids
-            if stored:
-                doc_meta = doc_meta.withColumn(
-                    "n_tokens", F.size("tokens").cast("int"))
-            else:
-                doc_meta = doc_meta.withColumn(
-                    "n_tokens",
-                    F.size(tokens_insensitive("text")).cast("int"))
+            doc_meta = doc_meta.withColumn(
+                "n_tokens", F.size("tokens").cast("int"))
             doc_meta = doc_meta.select(
                 "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
                 "n_tokens", *stored, "text",

@@ -88,25 +88,6 @@ class BuildConfig:
     bucket_size: int = 8192
     # Store token positions in blocks (needed for phrase queries).
     store_positions: bool = True
-    # Which token-array layers are materialized as physical doc_meta
-    # columns ("none" | "insensitive" | "all"; bools accepted as
-    # legacy aliases for "all"/"none"). Default "insensitive"
-    # (format v6): store only `tokens` — the @i layer that drives
-    # every hot probe path (CQL default layer, phrase probe,
-    # collocations, repetition closure, FiSeq verify). Parquet
-    # dictionary-encodes the repeated strings, so on disk this is
-    # term-dictionary indexes + a per-row-group dict — effectively
-    # the reference's term-id tokens file (TokensCodec) without the
-    # per-token invert shuffle a real id assignment would need.
-    # Rarer layers (tokens_s/ci/di/pos) stay DERIVED from text at
-    # read time (annotations.with_token_layers; the tokenizer is a
-    # deterministic JVM expression, so derived ≡ stored).
-    # Format-v5 "none" (derive everything, content store IS the
-    # forward index) minimizes build write volume but re-tokenizes
-    # on every probe query — measured 3-12× probe-path latency at
-    # sf0.1; "insensitive" additionally tokenizes ONCE per build
-    # (SPIMI reads the stored array) instead of twice.
-    store_token_arrays: str | bool = "insensitive"
     # Derived annotation layers materialized at build time (pos costs
     # ~9% build throughput; disable for pure-BM25 corpora at scale).
     annotations: tuple = ("pos",)

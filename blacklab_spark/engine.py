@@ -38,6 +38,12 @@ from blacklab_spark.operators.wand import topk_wand, topk_wand_filtered
 from blacklab_spark.tokenizer import py_tokens_insensitive
 
 
+# Docs below which a filtered top-k with mode="auto" scores
+# exhaustively (SearchEngine._auto_mode); DeltaSearchEngine.topk uses
+# the same size for its own rule.
+AUTO_EXHAUSTIVE_MAX_DOCS = 1_000_000
+
+
 class SearchEngine:
     """``topk`` runs its jobs inside the call and returns a driver-built
     frame of ≤k rows; ``find`` and the hit operators stay lazy.
@@ -111,6 +117,18 @@ class SearchEngine:
             out = out & c
         return out
 
+    def _auto_mode(self, filt: Column | None) -> str:
+        """``mode="auto"`` of :meth:`topk` (and what :meth:`explain`
+        reports): cost-based (≙ ClauseCombinerNfa-style statistics
+        choice) — the filtered-WAND plan adds a fixed number of extra
+        jobs (seed pass, bucket upper-bound prune) that pay off only
+        when block-decode volume dominates; below
+        AUTO_EXHAUSTIVE_MAX_DOCS the single-pass exhaustive scorer +
+        semi-join is cheaper."""
+        if filt is not None and self.index.n_docs < AUTO_EXHAUSTIVE_MAX_DOCS:
+            return "exhaustive"
+        return "wand"
+
     def _terms(self, query: str | list[str]) -> list[str]:
         if isinstance(query, str):
             return py_tokens_insensitive(query)
@@ -130,16 +148,7 @@ class SearchEngine:
 
         def build() -> DataFrame:
             filt = self._doc_filter(role, tool, conv_id, where, filter)
-            m = mode
-            if m == "auto":
-                # cost-based (≙ ClauseCombinerNfa-style statistics
-                # choice): the filtered-WAND plan adds a fixed number
-                # of extra jobs (seed pass, bucket upper-bound prune)
-                # that pay off only when block-decode volume
-                # dominates; below ~1M docs the single-pass
-                # exhaustive scorer + semi-join is cheaper.
-                m = ("exhaustive" if filt is not None
-                     and self.index.n_docs < 1_000_000 else "wand")
+            m = self._auto_mode(filt) if mode == "auto" else mode
             if m == "wand":
                 if filt is not None:
                     # filter-then-score plan: allowed buckets pruned
@@ -379,8 +388,7 @@ class SearchEngine:
         terms = self._terms(query)
         filt = self._doc_filter(**filters)
         info = self.index.lookup_terms(terms)
-        # mirror topk()'s auto cost rule exactly
-        if filt is not None and self.index.n_docs < 1_000_000:
+        if self._auto_mode(filt) == "exhaustive":
             strat = ("exhaustive-then-filter (cost-based: below ~1M docs "
                      "the single-pass scorer beats the pruning plan's "
                      "fixed job overhead)")

@@ -1,7 +1,13 @@
-"""Exhaustive BM25 scorer — the reference path of the dual-path gate.
+"""Exhaustive BM25 scorer — the reference path of the dual-path gate —
+and the one per-bucket kernel every BM25 top-k plan shares.
 
-Scores every posting block of the query terms through the shared
-per-bucket kernel (``score_bucket_kernel``), then finishes with
+``score_buckets`` groups posting blocks by doc-range bucket and runs
+``score_bucket`` on each group, optionally cogrouped with an allowed
+doc-id set and cut to a local top-k. The exhaustive path, the WAND
+paths (operators/wand.py) and the main+delta engine
+(streaming/ingest.py) all score through it; the contribution itself
+is ``arrow_kernels.bm25_contrib``, the same expression the build uses
+for block ``max_score``. The exhaustive path finishes with
 ``orderBy(score desc, doc_id).limit(k)`` (Catalyst compiles this to
 TakeOrderedAndProject — per-partition top-k, no global sort).
 
@@ -28,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, types as T
 
 from blacklab_spark import codec
+from blacklab_spark.arrow_kernels import bm25_contrib
 from blacklab_spark.index import InvertedIndex
 
 SCORE_SCHEMA = T.StructType([
@@ -45,96 +52,71 @@ TOPK_SCHEMA = T.StructType([
 ])
 
 
-def score_bucket_kernel(idf_by_term: dict[int, float], k1: float, b: float,
-                        avgdl: float, local_k: int | None = None):
-    """applyInPandas kernel over one doc-range bucket's blocks: decode,
+def score_bucket(blocks_pdf: pd.DataFrame, idf_by_term: dict[int, float],
+                 k1: float, b: float, avgdl: float,
+                 local_k: int | None = None,
+                 allowed: np.ndarray | None = None) -> pd.DataFrame:
+    """One doc-range bucket's blocks → exact (doc_id, score): decode,
     canonical (doc_id, term_id)-ordered contribution sum per doc,
     optional local top-k (tie-break score desc → doc_id asc so the cut
-    never drops a global winner). Shared by the exhaustive and WAND
-    paths — identical arithmetic by construction."""
-    def kernel(key, pdf):
-        docs_out, tids_out, contribs_out = [], [], []
-        for term_id, blob_doc, blob_tf, blob_dl in zip(
-                pdf["term_id"], pdf["doc_ids"], pdf["tfs"], pdf["dls"]):
-            doc = codec.decode_deltas(blob_doc).astype(np.int64)
-            tf = codec.decode_varints(blob_tf).astype(np.float64)
-            dl = codec.decode_varints(blob_dl).astype(np.float64)
-            idf = idf_by_term[int(term_id)]
-            # expression shape MUST match oracle.bm25_score exactly
-            contrib = idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl))
-            docs_out.append(doc)
-            tids_out.append(np.full(doc.size, int(term_id), dtype=np.int64))
-            contribs_out.append(contrib)
-        d = np.concatenate(docs_out)
-        t = np.concatenate(tids_out)
-        c = np.concatenate(contribs_out)
-        order = np.lexsort((t, d))  # doc asc, then term_id asc
-        d, c = d[order], c[order]
-        starts = np.empty(d.size, dtype=bool)
-        starts[0] = True
-        starts[1:] = d[1:] != d[:-1]
-        s_idx = np.nonzero(starts)[0]
-        uniq = d[s_idx]
-        sums = np.add.reduceat(c, s_idx)
-        if local_k is not None and uniq.size > local_k:
-            top = np.lexsort((uniq, -sums))[:local_k]
-            uniq, sums = uniq[top], sums[top]
-        return pd.DataFrame({"doc_id": uniq, "score": sums})
+    never drops a global winner). ``allowed`` (sorted doc ids of this
+    bucket) keeps only those docs in the sum; an empty bucket or an
+    empty allowed set gives an empty frame. The one scorer of every
+    BM25 path — exhaustive, WAND, filtered and delta."""
+    docs_out, tids_out, contribs_out = [], [], []
+    for term_id, blob_doc, blob_tf, blob_dl in zip(
+            blocks_pdf["term_id"], blocks_pdf["doc_ids"],
+            blocks_pdf["tfs"], blocks_pdf["dls"]):
+        doc = codec.decode_deltas(blob_doc).astype(np.int64)
+        tf = codec.decode_varints(blob_tf).astype(np.float64)
+        dl = codec.decode_varints(blob_dl).astype(np.float64)
+        if allowed is not None:
+            keep = np.isin(doc, allowed)
+            doc, tf, dl = doc[keep], tf[keep], dl[keep]
+        docs_out.append(doc)
+        tids_out.append(np.full(doc.size, int(term_id), dtype=np.int64))
+        contribs_out.append(bm25_contrib(idf_by_term[int(term_id)], tf, dl,
+                                         k1, b, avgdl))
+    d = np.concatenate(docs_out) if docs_out else np.empty(0, np.int64)
+    if d.size == 0:
+        return pd.DataFrame({"doc_id": d, "score": np.empty(0, np.float64)})
+    t = np.concatenate(tids_out)
+    c = np.concatenate(contribs_out)
+    order = np.lexsort((t, d))  # doc asc, then term_id asc
+    d, c = d[order], c[order]
+    starts = np.empty(d.size, dtype=bool)
+    starts[0] = True
+    starts[1:] = d[1:] != d[:-1]
+    s_idx = np.nonzero(starts)[0]
+    uniq = d[s_idx]
+    sums = np.add.reduceat(c, s_idx)
+    if local_k is not None and uniq.size > local_k:
+        top = np.lexsort((uniq, -sums))[:local_k]
+        uniq, sums = uniq[top], sums[top]
+    return pd.DataFrame({"doc_id": uniq, "score": sums})
 
-    return kernel
 
-
-def score_bucket_kernel_filtered(idf_by_term: dict[int, float], k1: float,
-                                 b: float, avgdl: float,
-                                 local_k: int | None = None):
-    """Cogrouped variant of :func:`score_bucket_kernel`: the right
-    side carries the ALLOWED doc ids of this bucket (from the
-    metadata filter); only allowed docs are decoded into the sum.
-    Same canonical (doc_id, term_id)-ordered summation, so scores are
-    bit-identical to the unfiltered kernel for the surviving docs."""
-    def kernel(key, blocks_pdf, allowed_pdf):
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                              "score": pd.Series([], dtype="float64")})
-        if blocks_pdf.empty or allowed_pdf.empty:
-            return empty
-        allowed = np.sort(allowed_pdf["doc_id"].to_numpy(np.int64))
-        docs_out, tids_out, contribs_out = [], [], []
-        for term_id, blob_doc, blob_tf, blob_dl in zip(
-                blocks_pdf["term_id"], blocks_pdf["doc_ids"],
-                blocks_pdf["tfs"], blocks_pdf["dls"]):
-            doc = codec.decode_deltas(blob_doc).astype(np.int64)
-            keep = np.isin(doc, allowed, assume_unique=False)
-            if not keep.any():
-                continue
-            tf = codec.decode_varints(blob_tf).astype(np.float64)[keep]
-            dl = codec.decode_varints(blob_dl).astype(np.float64)[keep]
-            doc = doc[keep]
-            idf = idf_by_term[int(term_id)]
-            contrib = idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl))
-            docs_out.append(doc)
-            tids_out.append(np.full(doc.size, int(term_id), dtype=np.int64))
-            contribs_out.append(contrib)
-        if not docs_out:
-            return empty
-        d = np.concatenate(docs_out)
-        t = np.concatenate(tids_out)
-        c = np.concatenate(contribs_out)
-        order = np.lexsort((t, d))  # doc asc, then term_id asc
-        d, c = d[order], c[order]
-        starts = np.empty(d.size, dtype=bool)
-        starts[0] = True
-        starts[1:] = d[1:] != d[:-1]
-        s_idx = np.nonzero(starts)[0]
-        uniq = d[s_idx]
-        sums = np.add.reduceat(c, s_idx)
-        if local_k is not None and uniq.size > local_k:
-            top = np.lexsort((uniq, -sums))[:local_k]
-            uniq, sums = uniq[top], sums[top]
-        return pd.DataFrame({"doc_id": uniq, "score": sums})
-
-    return kernel
+def score_buckets(blocks: DataFrame, idf_by_term: dict[int, float],
+                  k1: float, b: float, avgdl: float,
+                  local_k: int | None = None,
+                  allowed: DataFrame | None = None) -> DataFrame:
+    """(doc_id, score) of every doc in ``blocks``, one
+    :func:`score_bucket` call per bucket. ``allowed`` — a
+    (doc_id, bucket) frame — is cogrouped by bucket so only those docs
+    enter the sum (metadata filters, live rows of a part with
+    tombstones)."""
+    grouped = (blocks.select("bucket", "term_id", "doc_ids", "tfs", "dls")
+               .groupBy("bucket"))
+    if allowed is None:
+        return grouped.applyInPandas(
+            lambda key, pdf: score_bucket(pdf, idf_by_term, k1, b, avgdl,
+                                          local_k),
+            SCORE_SCHEMA)
+    return grouped.cogroup(allowed.groupBy("bucket")).applyInPandas(
+        lambda key, pdf, apdf: score_bucket(
+            pdf, idf_by_term, k1, b, avgdl, local_k,
+            np.sort(apdf["doc_id"].to_numpy(np.int64))),
+        SCORE_SCHEMA)
 
 
 def doc_scores(index: InvertedIndex, terms: list[str],
@@ -145,15 +127,9 @@ def doc_scores(index: InvertedIndex, terms: list[str],
     if info.empty:
         return spark.createDataFrame([], "doc_id long, score double")
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
-    blocks = index.postings.filter(
-        F.col("term_id").isin([int(t) for t in info["term_id"]]))
-    scores = (blocks.select("bucket", "term_id", "doc_ids", "tfs", "dls")
-              .groupBy("bucket")
-              .applyInPandas(
-                  score_bucket_kernel(idf_map, index.cfg.k1, index.cfg.b,
-                                      index.avgdl),
-                  SCORE_SCHEMA))
-    scores = index.without_deleted(scores)
+    blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
+    scores = index.without_deleted(score_buckets(
+        blocks, idf_map, index.cfg.k1, index.cfg.b, index.avgdl))
     if doc_filter is not None:
         allowed = index.doc_meta.filter(doc_filter).select("doc_id")
         scores = scores.join(allowed, "doc_id", "left_semi")

@@ -12,18 +12,25 @@ does per-segment WAND. Here:
    certified lower bound on the k-th best *total* score (k distinct
    docs each score ≥ their block max). t0 = max over query terms of
    that bound. Pure metadata aggregation — no posting decode.
-2. **Safe pruning (DataFrame ops on block metadata).** Per bucket,
-   ub(bucket) = Σ_terms max(max_score within bucket). A bucket with
-   ub < t0 cannot contain a top-k doc → pruned *before* decode. The
-   pruning predicate lands on the parquet scan of block metadata;
-   posting payloads of pruned buckets are never read (column pruning +
-   the bucket semi-join). Single-term queries prune per *block*
-   (score == contribution, so ``max_score < t0`` is individually safe).
+2. **Safe pruning** (:func:`prune_buckets`, DataFrame ops on block
+   metadata). Per bucket, ub(bucket) = Σ_terms max(max_score within
+   bucket). A bucket with ub < t0 cannot contain a top-k doc → pruned
+   *before* decode; posting payloads of pruned buckets are never read
+   (column pruning + the bucket semi-join). Single-term queries prune
+   per *block* (score == contribution, so ``max_score < t0`` is
+   individually safe).
 3. **Exact per-bucket kernel.** Surviving buckets hold *all* blocks of
    all query terms for their doc range (a doc's postings always land
-   in its own bucket), so the applyInPandas kernel computes exact
+   in its own bucket), so ``scoring.score_buckets`` computes exact
    BM25 totals (numpy sort + reduceat) and emits a local top-k.
 4. Global ``orderBy(score desc, doc_id).limit(k)`` finishes.
+
+Filtered queries, indexes with tombstones and the main+delta engine
+(streaming/ingest.py) share one plan, :func:`parts_scores`: allowed
+set first, an exact seed from the top blocks, the same
+:func:`prune_buckets`, the same kernel. Only the bound differs — the
+stored ``max_score`` for one index, a dl-free ``max_tf`` bound under
+the union statistics of the delta engine.
 
 Rank/score-identical to operators/scoring.py by construction; the
 dual-path pytest enforces it (≙ reference _FI1/_FI2 goldens,
@@ -32,19 +39,11 @@ test/test/hits.js:55-57).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from blacklab_spark.index import InvertedIndex
-from blacklab_spark.operators.scoring import (finish_topk,
-                                              score_bucket_kernel,
-                                              score_bucket_kernel_filtered)
-
-LOCAL_TOPK_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("score", T.DoubleType(), False),
-])
+from blacklab_spark.operators.scoring import finish_topk, score_buckets
 
 # Skip the threshold-seeding pass below this many candidate postings
 # (Σ df over the query terms). Seeding costs one fixed Spark job
@@ -64,6 +63,11 @@ WAND_SEED_MIN_POSTINGS = 1_000_000
 # docs / 8192-doc buckets a stopword has ~1.2×10^8 buckets; S=4096
 # caps the per-task row count at ~3×10^4 either level.
 WAND_SEED_SALT = 4096
+
+# Blocks per part that the exact seed pass of parts_scores decodes
+# (the highest-bound ones): enough to reach k real docs for a usual
+# k, small enough to stay one cheap task.
+WAND_SEED_BLOCKS = 64
 
 
 def _seed_threshold_frame(blocks: DataFrame, k: int) -> DataFrame:
@@ -118,7 +122,7 @@ def topk_wand(index: InvertedIndex, terms: list[str], k: int = 10) -> DataFrame:
     could otherwise certify a threshold that prunes real results).
     """
     if index.has_deletes:
-        return topk_wand_filtered(index, terms, F.lit(True), k)
+        return topk_wand_filtered(index, terms, None, k)
     return finish_topk(index, wand_scores(index, terms, k), k)
 
 
@@ -131,131 +135,138 @@ def wand_scores(index: InvertedIndex, terms: list[str],
     ``seed=None`` decides from term statistics whether the
     threshold-seeding job pays for itself (WAND_SEED_MIN_POSTINGS);
     True/False forces it (tests / debugging)."""
-    spark = index.spark
     info = index.lookup_terms(terms)
     if info.empty:
-        return spark.createDataFrame([], "doc_id long, score double")
-    term_ids = [int(t) for t in info["term_id"]]
+        return index.spark.createDataFrame([], "doc_id long, score double")
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
-    blocks = index.postings.filter(F.col("term_id").isin(term_ids))
-
+    blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
     if seed is None:
         seed = int(info["df"].sum()) >= WAND_SEED_MIN_POSTINGS
     t0 = _seed_threshold(blocks, k) if seed else 0.0
-    if t0 > 0.0:
-        if len(term_ids) == 1:
-            pruned = blocks.filter(F.col("max_score") >= t0)
-        else:
-            per_term = (blocks.groupBy("bucket", "term_id")
-                        .agg(F.max("max_score").alias("term_best")))
-            ub = (per_term.groupBy("bucket")
-                  .agg(F.sum("term_best").alias("ub"))
-                  .filter(F.col("ub") >= t0)
-                  .select("bucket"))
-            # semi-join on bucket ids; AQE picks broadcast when the
-            # surviving bucket list is small (selective queries), SMJ
-            # when it isn't (stopword queries at 10^8+ buckets).
-            pruned = blocks.join(ub, "bucket", "left_semi")
-    else:
-        pruned = blocks
-
-    return (pruned.select("bucket", "term_id", "doc_ids", "tfs", "dls")
-            .groupBy("bucket")
-            .applyInPandas(
-                score_bucket_kernel(idf_map, index.cfg.k1, index.cfg.b,
-                                    index.avgdl, local_k=k),
-                LOCAL_TOPK_SCHEMA))
+    pruned = prune_buckets(blocks, t0, F.col("max_score"), len(idf_map) == 1)
+    return score_buckets(pruned, idf_map, index.cfg.k1, index.cfg.b,
+                         index.avgdl, local_k=k)
 
 
-def _filtered_scores(index: InvertedIndex, blocks: DataFrame,
-                     allowed: DataFrame, idf_map: dict[int, float],
-                     local_k: int | None = None) -> DataFrame:
-    """Score ONLY the allowed docs: cogroup blocks with the allowed
-    doc ids per bucket, so disallowed docs never enter the sum."""
-    kern = score_bucket_kernel_filtered(
-        idf_map, index.cfg.k1, index.cfg.b, index.avgdl, local_k=local_k)
-    return (blocks.select("bucket", "term_id", "doc_ids", "tfs", "dls")
-            .groupBy("bucket")
-            .cogroup(allowed.groupBy("bucket"))
-            .applyInPandas(kern, LOCAL_TOPK_SCHEMA))
+def prune_buckets(blocks: DataFrame, t0: float, ub: Column,
+                  single_term: bool = False) -> DataFrame:
+    """Drop the blocks that cannot hold a doc scoring ≥ ``t0``.
+
+    ``ub`` bounds one doc's contribution from a block's term. Per
+    bucket, Σ_terms max(ub) bounds every doc of the bucket (a doc's
+    postings all live in its own bucket), so buckets below ``t0`` are
+    semi-joined away before any payload decode; AQE broadcasts the
+    surviving bucket list when it is small and sort-merges it when it
+    isn't. A single-term query prunes per block instead (score ==
+    contribution, so ``ub < t0`` is individually safe). ``t0 <= 0``
+    prunes nothing."""
+    if t0 <= 0.0:
+        return blocks
+    if single_term:
+        return blocks.filter(ub >= t0)
+    keep = (blocks.groupBy("bucket", "term_id")
+            .agg(F.max(ub).alias("term_best"))
+            .groupBy("bucket").agg(F.sum("term_best").alias("ub"))
+            .filter(F.col("ub") >= t0).select("bucket"))
+    return blocks.join(keep, "bucket", "left_semi")
+
+
+def parts_scores(parts: list[tuple], k: int, doc_filter: Column | None,
+                 wand: bool, n_postings: int, seed: bool | None = None,
+                 _debug: dict | None = None) -> DataFrame:
+    """Candidate (doc_id, score) rows of a BM25 top-k over one or more
+    index parts in one doc-id space — the plan of the filtered single
+    index (one part) and of the main+delta engine (one part each).
+    Each part is ``(index, doc_id offset, {term_id: idf}, avgdl, ub)``
+    where ``ub`` is a per-block Column bound on one doc's contribution
+    of the block's term. ``wand`` turns on the local top-k cut, the
+    seed and the prune; without it every candidate is scored.
+
+    1. **Allowed set first.** Under ``doc_filter`` — or, when the cut
+       applies, for a part with tombstones — the part's live doc_meta
+       rows (doc_id, bucket) are the allowed set: blocks semi-join on
+       the allowed BUCKETS before any decode, and the kernel sums only
+       allowed docs, so no cut ever drops a live doc for a dead one.
+       Otherwise tombstones are anti-joined from the scores.
+    2. **Seed.** When Σdf ≥ WAND_SEED_MIN_POSTINGS (``seed`` forces
+       it), decode each part's ``WAND_SEED_BLOCKS`` highest-``ub``
+       blocks and take the k-th best exact score of their allowed
+       docs. Those are partial sums of k distinct real docs (part
+       offsets keep ids disjoint) and contributions are non-negative,
+       so the k-th certifies a lower bound ``t0`` on the k-th best
+       total (the eager input filter of External Merge Sort for Top-K,
+       SIGMOD 2020).
+    3. **Prune** each part with :func:`prune_buckets` against ``t0``.
+    4. **Score** each part through ``score_buckets`` (local top-k when
+       ``wand``) and union."""
+    planned = []
+    for index, off, idf_map, avgdl, ub in parts:
+        blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
+        allowed = None
+        if doc_filter is not None or (wand and index.has_deletes):
+            live = index.doc_meta
+            if doc_filter is not None:
+                live = live.filter(doc_filter)
+            # no persist: each reuse recomputes a pushdown-pruned
+            # parquet scan (cheap), and cached frames would otherwise
+            # accumulate per query in a long-lived engine.
+            allowed = live.select(
+                "doc_id", F.expr(f"doc_id div {index.cfg.bucket_size}")
+                .alias("bucket"))
+            blocks = blocks.join(allowed.select("bucket").distinct(),
+                                 "bucket", "left_semi")
+        planned.append((index, off, idf_map, avgdl, ub, blocks, allowed))
+
+    def score(cut, local_k: int | None) -> DataFrame:
+        """Union of every part's scores over ``cut(blocks, ub, idf_map)``."""
+        out = None
+        for index, off, idf_map, avgdl, ub, blocks, allowed in planned:
+            s = score_buckets(cut(blocks, ub, idf_map), idf_map,
+                              index.cfg.k1, index.cfg.b, avgdl, local_k,
+                              allowed)
+            if allowed is None:
+                s = index.without_deleted(s)
+            if off:
+                s = s.select((F.col("doc_id") + off).alias("doc_id"),
+                             "score")
+            out = s if out is None else out.unionByName(s)
+        return out
+
+    def prune(blocks, ub, idf_map):
+        return prune_buckets(blocks, t0, ub, len(idf_map) == 1)
+
+    t0 = 0.0
+    if seed is None:
+        seed = n_postings >= WAND_SEED_MIN_POSTINGS
+    if wand and seed:
+        top = (score(lambda b, ub, _: b.orderBy(ub.desc())
+                     .limit(WAND_SEED_BLOCKS), k)
+               .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect())
+        t0 = float(top[-1]["score"]) if len(top) == k else 0.0
+    if _debug is not None:
+        _debug["t0"] = t0
+        kept = [(b, prune(b, ub, m)) for _, _, m, _, ub, b, _ in planned]
+        _debug["blocks_total"] = sum(b.count() for b, _ in kept)
+        _debug["blocks_after_prune"] = sum(p.count() for _, p in kept)
+    return score(prune, k if wand else None)
 
 
 def topk_wand_filtered(index: InvertedIndex, terms: list[str],
-                       doc_filter: Column, k: int = 10,
-                       seed_blocks: int = 64, seed: bool | None = None,
+                       doc_filter: Column | None, k: int = 10,
+                       seed: bool | None = None,
                        _debug: dict | None = None) -> DataFrame:
-    """Filter-then-score block-max top-k under a metadata filter
-    (VERDICT r01 #3 — the scale-safe filtered plan):
-
-    1. **Allowed set first.** ``doc_meta.filter(...)`` → (doc_id,
-       bucket); blocks of the query terms semi-join on the allowed
-       BUCKETS before any payload decode — postings of buckets with no
-       qualifying doc are never touched.
-    2. **Threshold from filtered candidates.** The unfiltered metadata
-       bound is invalid once candidates are removed (wand.topk_wand
-       docstring), so seed exactly: decode the ``seed_blocks``
-       highest-``max_score`` surviving blocks, score their ALLOWED
-       docs, and take the k-th best. Those are partial sums of real
-       allowed docs (a doc's other-term contributions may live in
-       non-seed blocks), and BM25 contributions are non-negative, so
-       the k-th best partial sum certifies ≥k allowed docs scoring at
-       least t0 — a valid lower bound.
-    3. **Safe pruning.** ub(bucket) = Σ_terms max(max_score) computed
-       on surviving blocks (block maxima are unfiltered per-doc upper
-       bounds, valid for the allowed subset); drop buckets with
-       ub < t0.
-    4. Exact cogrouped kernel over survivors (allowed docs only) →
-       TakeOrderedAndProject.
-
-    Rank/score-identical to exhaustive-then-filter by construction
-    (dual-path tested)."""
+    """Filter-then-score block-max top-k under a metadata filter (or
+    over the live docs of an index with tombstones, ``doc_filter``
+    None): the one-part :func:`parts_scores` plan with the stored
+    block ``max_score`` as the bound. The unfiltered metadata seed is
+    invalid once candidates are removed (:func:`topk_wand`), so the
+    threshold comes from exact scores of allowed docs. Rank- and
+    score-identical to exhaustive-then-filter (dual-path tested)."""
     info = index.lookup_terms(terms)
-    spark = index.spark
     if info.empty:
-        return finish_topk(
-            index, spark.createDataFrame([], "doc_id long, score double"), k)
-    term_ids = [int(t) for t in info["term_id"]]
+        return finish_topk(index, index.spark.createDataFrame(
+            [], "doc_id long, score double"), k)
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
-    bs = index.cfg.bucket_size
-    # no persist: each reuse recomputes a pushdown-pruned parquet scan
-    # (cheap), and cached frames would otherwise accumulate per query
-    # in a long-lived engine.
-    allowed = (index.doc_meta.filter(doc_filter)
-               .select("doc_id",
-                       F.expr(f"doc_id div {bs}").alias("bucket")))
-    abuckets = allowed.select("bucket").distinct()
-    blocks = (index.postings.filter(F.col("term_id").isin(term_ids))
-              .join(abuckets, "bucket", "left_semi"))
-
-    # seed pass: exact partial scores of allowed docs in the top
-    # metadata blocks (tiny: seed_blocks blocks through the kernel).
-    # Statistics-gated like wand_scores: below WAND_SEED_MIN_POSTINGS
-    # candidate postings the two seed/prune jobs cost more wall-clock
-    # than the decode they could save.
-    if seed is None:
-        seed = int(info["df"].sum()) >= WAND_SEED_MIN_POSTINGS
-    t0 = 0.0
-    if seed:
-        sblocks = (blocks.orderBy(F.desc("max_score")).limit(seed_blocks))
-        seed_rows = (_filtered_scores(index, sblocks, allowed, idf_map)
-                     .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                     .collect())
-        t0 = float(seed_rows[-1]["score"]) if len(seed_rows) == k else 0.0
-
-    pruned = blocks
-    if t0 > 0.0:
-        per_term = (blocks.groupBy("bucket", "term_id")
-                    .agg(F.max("max_score").alias("term_best")))
-        ub = (per_term.groupBy("bucket")
-              .agg(F.sum("term_best").alias("ub"))
-              .filter(F.col("ub") >= t0)
-              .select("bucket"))
-        pruned = blocks.join(ub, "bucket", "left_semi")
-    if _debug is not None:
-        _debug["t0"] = t0
-        _debug["blocks_total"] = blocks.count()
-        _debug["blocks_after_prune"] = pruned.count()
-
-    local = _filtered_scores(index, pruned, allowed, idf_map, local_k=k)
-    out = finish_topk(index, local, k)
-    return out
+    part = (index, 0, idf_map, index.avgdl, F.col("max_score"))
+    return finish_topk(index, parts_scores(
+        [part], k, doc_filter, True, int(info["df"].sum()), seed, _debug), k)

@@ -128,25 +128,6 @@ class DeltaSearchEngine:
         total_tokens = sum(p.meta["stats"]["total_tokens"] for p in self.parts)
         self.avgdl = total_tokens / max(1, self.n_docs)
 
-    def _score_blocks(self, p, blocks, idf_map, allowed, k=None):
-        """Exact union-stat BM25 over one part's blocks (cogrouped
-        with the allowed doc set when filtered); tombstones excluded."""
-        from blacklab_spark.operators.scoring import (
-            SCORE_SCHEMA, score_bucket_kernel, score_bucket_kernel_filtered)
-        sel = blocks.select("bucket", "term_id", "doc_ids", "tfs", "dls")
-        if allowed is None:
-            out = sel.groupBy("bucket").applyInPandas(
-                score_bucket_kernel(idf_map, p.cfg.k1, p.cfg.b,
-                                    self.avgdl, local_k=k), SCORE_SCHEMA)
-        else:
-            out = (sel.groupBy("bucket")
-                   .cogroup(allowed.groupBy("bucket"))
-                   .applyInPandas(
-                       score_bucket_kernel_filtered(
-                           idf_map, p.cfg.k1, p.cfg.b, self.avgdl,
-                           local_k=k), SCORE_SCHEMA))
-        return p.without_deleted(out)
-
     def find(self, cql: str) -> DataFrame:
         """CQL over main + deltas (≙ Lucene searching unmerged
         segments): every part is a complete index, positional
@@ -171,91 +152,53 @@ class DeltaSearchEngine:
         return out
 
     def topk(self, terms: list[str], k: int = 10, mode: str = "auto",
-             role=None, tool=None, conv_id=None, seed_blocks: int = 64):
-        """Top-k over main + deltas with union-corpus BM25 stats,
-        metadata filters, and block pruning (VERDICT r02 #6/#7).
+             role=None, tool=None, conv_id=None):
+        """Top-k (doc_id, score) over main + deltas with union-corpus
+        BM25 stats and metadata filters, through the single-index
+        plan: ``operators.wand.parts_scores`` with one part per index
+        (same kernel, seed, prune and tombstone rule).
 
         The stored per-block ``max_score`` was computed with the
         PART's build-time idf/avgdl, so it is not a valid bound under
-        union stats. A dl-free bound from ``max_tf`` is:
-        ``ub = idf_union · max_tf·(k1+1)/(max_tf + k1·(1−b))``
-        (the contribution is increasing in tf and the norm denominator
-        is ≥ tf + k1·(1−b) for any dl/avgdl). The threshold t0 is the
-        k-th best EXACT partial score of seed blocks across parts —
-        ≥k distinct surviving docs (part offsets keep ids disjoint;
-        tombstoned/filtered docs never enter the seed), so pruning
-        buckets with Σ_terms max(ub) < t0 is certified safe.
-        mode: auto (cost rule as SearchEngine.topk) | wand |
+        union stats. A dl-free bound from ``max_tf`` is
+        ``bm25_contrib(idf_union, max_tf, dl=0)`` — the contribution
+        is increasing in tf and decreasing in dl.
+        mode: auto (exhaustive below AUTO_EXHAUSTIVE_MAX_DOCS union
+        docs, filtered or not — unlike SearchEngine.topk, which sends
+        unfiltered queries through WAND at any size) | wand |
         exhaustive (dual verification path)."""
-        from blacklab_spark.engine import SearchEngine
+        from blacklab_spark.arrow_kernels import bm25_contrib
+        from blacklab_spark.engine import (AUTO_EXHAUSTIVE_MAX_DOCS,
+                                           SearchEngine)
+        from blacklab_spark.operators.wand import parts_scores
         from blacklab_spark.oracle import bm25_idf
         filt = SearchEngine._doc_filter(role, tool, conv_id)
         if mode == "auto":
-            mode = "exhaustive" if self.n_docs < 1_000_000 else "wand"
+            mode = ("exhaustive" if self.n_docs < AUTO_EXHAUSTIVE_MAX_DOCS
+                    else "wand")
         # global df per term across parts
         df_by_term: dict[str, int] = {}
-        infos = []
-        for p in self.parts:
-            info = p.lookup_terms(terms)
-            infos.append(info)
+        infos = [p.lookup_terms(terms) for p in self.parts]
+        for info in infos:
             for t, d in zip(info["term"], info["df"]):
                 df_by_term[t] = df_by_term.get(t, 0) + int(d)
 
-        parts_data = []
+        parts = []
         for p, off, info in zip(self.parts, self.offsets, infos):
             if info.empty:
                 continue
             idf_map = {int(tid): bm25_idf(self.n_docs, df_by_term[t])
                        for t, tid in zip(info["term"], info["term_id"])}
-            blocks = p.postings.filter(
-                F.col("term_id").isin([int(t) for t in info["term_id"]]))
-            allowed = None
-            if filt is not None:
-                bs = p.cfg.bucket_size
-                allowed = (p.doc_meta.filter(filt)
-                           .select("doc_id", F.expr(f"doc_id div {bs}")
-                                   .alias("bucket")))
-                blocks = blocks.join(allowed.select("bucket").distinct(),
-                                     "bucket", "left_semi")
-            if mode == "wand":
-                imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
-                                      for x in kv])
-                c = p.cfg.k1 * (1.0 - p.cfg.b)
-                ub = (imap[F.col("term_id")]
-                      * (F.col("max_tf") * (p.cfg.k1 + 1.0))
-                      / (F.col("max_tf") + F.lit(c)))
-                blocks = blocks.withColumn("ub", ub)
-            parts_data.append((p, off, idf_map, blocks, allowed))
-
-        if not parts_data:
+            imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
+                                  for x in kv])
+            ub = bm25_contrib(imap[F.col("term_id")], F.col("max_tf"), 0,
+                              p.cfg.k1, p.cfg.b, self.avgdl)
+            parts.append((p, off, idf_map, self.avgdl, ub))
+        if not parts:
             return self.spark.createDataFrame([], "doc_id long, score double")
-
-        t0 = 0.0
-        if mode == "wand":
-            seed_scores: list[float] = []
-            for p, off, idf_map, blocks, allowed in parts_data:
-                seed = blocks.orderBy(F.desc("ub")).limit(seed_blocks)
-                rows = (self._score_blocks(p, seed, idf_map, allowed, k=k)
-                        .orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(k).collect())
-                seed_scores.extend(float(r["score"]) for r in rows)
-            seed_scores.sort(reverse=True)
-            t0 = seed_scores[k - 1] if len(seed_scores) >= k else 0.0
-
-        scores = None
-        for p, off, idf_map, blocks, allowed in parts_data:
-            if mode == "wand" and t0 > 0.0:
-                per_term = (blocks.groupBy("bucket", "term_id")
-                            .agg(F.max("ub").alias("term_best")))
-                keep = (per_term.groupBy("bucket")
-                        .agg(F.sum("term_best").alias("ubb"))
-                        .filter(F.col("ubb") >= t0).select("bucket"))
-                blocks = blocks.join(keep, "bucket", "left_semi")
-            s = (self._score_blocks(p, blocks, idf_map, allowed,
-                                    k=k if mode == "wand" else None)
-                 .select((F.col("doc_id") + off).alias("doc_id"), "score"))
-            scores = s if scores is None else scores.unionByName(s)
-        return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return (parts_scores(parts, k, filt, mode == "wand",
+                             sum(df_by_term.values()))
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def stream_ingest(spark: SparkSession, source_dir: str, main_dir: str,

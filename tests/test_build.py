@@ -252,6 +252,41 @@ def test_resume_skips_artifact_stages(spark, tiny_pdf, tmp_path):
     assert m2["stages"]["alignments"] == m1["stages"]["alignments"]
 
 
+def _assert_block_max_achieved(idx):
+    """Every stored block ``max_score`` equals (bitwise) the max over
+    the block's docs of ``bm25_contrib`` on its decoded tf and dl —
+    the bound block-max WAND relies on. idf as the build computes it
+    (one vectorized log over the df column)."""
+    from blacklab_spark.arrow_kernels import bm25_contrib
+    blocks = (idx.postings.join(idx.terms.select("term_id", "df"), "term_id")
+              .select("df", "tfs", "dls", "max_score").toPandas())
+    assert len(blocks)
+    dfv = blocks["df"].to_numpy(np.int64)
+    idf = np.log(1.0 + (idx.n_docs - dfv + 0.5) / (dfv + 0.5))
+    cfg = idx.cfg
+    for i, (tfs, dls, want) in enumerate(zip(
+            blocks["tfs"], blocks["dls"], blocks["max_score"])):
+        tf = codec.decode_varints(tfs).astype(np.float64)
+        dl = codec.decode_varints(dls).astype(np.float64)
+        got = bm25_contrib(idf[i], tf, dl, cfg.k1, cfg.b, idx.avgdl).max()
+        assert got == want, (i, got, want)
+
+
+def test_block_max_score_is_achieved(spark, tiny_index_dir):
+    _assert_block_max_achieved(open_index(spark, tiny_index_dir))
+
+
+def test_block_max_score_is_achieved_with_synonyms(spark, tiny_pdf,
+                                                   tmp_path):
+    """Injected values stack tf onto real tokens ("the" gains every
+    "visa" occurrence), so their blocks carry merged tf."""
+    out = str(tmp_path / "syn_max_idx")
+    build_index(spark, spark.createDataFrame(tiny_pdf), out,
+                BuildConfig(block_size=8, bucket_size=16, num_partitions=2,
+                            synonyms={"visa": ["the", "permit"]}))
+    _assert_block_max_achieved(open_index(spark, out))
+
+
 def test_synonym_target_collides_with_real_token(spark, tiny_pdf,
                                                  tmp_path):
     """Injected value = an existing vocabulary token: its postings

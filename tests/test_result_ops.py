@@ -114,6 +114,32 @@ def test_explain(tiny_engine):
     assert "WAND" in s and "visa" in s
 
 
+@pytest.mark.parametrize("threshold,filters,runs,strategy", [
+    (None, {}, "topk_wand", "block-max WAND"),
+    (None, {"role": "user"}, "topk_exhaustive", "exhaustive-then-filter"),
+    (0, {"role": "user"}, "topk_wand_filtered", "filtered block-max WAND"),
+], ids=["unfiltered", "filtered", "filtered-large"])
+def test_explain_names_the_strategy_topk_runs(tiny_engine, monkeypatch,
+                                              threshold, filters, runs,
+                                              strategy):
+    """explain() and topk() share the mode="auto" rule: the strategy
+    explain() prints is the plan function topk() calls. "filtered-large"
+    lowers the size threshold so the filtered WAND plan is chosen."""
+    from blacklab_spark import engine as E
+    if threshold is not None:
+        monkeypatch.setattr(E, "AUTO_EXHAUSTIVE_MAX_DOCS", threshold)
+    called = []
+    for name in ("topk_wand", "topk_wand_filtered", "topk_exhaustive"):
+        fn = getattr(E, name)
+        monkeypatch.setattr(E, name, lambda *a, _n=name, _f=fn, **kw:
+                            called.append(_n) or _f(*a, **kw))
+    eng = E.SearchEngine(tiny_engine.index)  # fresh plan cache
+    eng.topk(["visa"], k=3, **filters)
+    assert called == [runs]
+    explained = eng.explain(["visa"], k=3, **filters)
+    assert f"strategy: {strategy}" in explained
+
+
 def test_kwic_pushes_anchor_docs_into_scan(tiny_engine):
     """A rare-term KWIC must read doc_meta only for the anchor's docs:
     the hits' doc ids are pushed as a doc_id IN (...) parquet filter

@@ -46,10 +46,14 @@ def test_append_delta_and_merge_equals_compacted(spark, split_fixture):
     assert dse.n_docs == ceng.index.n_docs
 
 
-def test_delta_wand_equals_exhaustive(spark, split_fixture):
+def test_delta_wand_equals_exhaustive(spark, split_fixture, monkeypatch):
     """Delta-engine block-pruned path ≡ exhaustive path, unfiltered
     and filtered (VERDICT r02 #7 'done' criterion — the delta path now
-    carries the same dual-path guarantee as the main engine)."""
+    carries the same dual-path guarantee as the main engine). The
+    seed gate is lowered to 0 so the seeded, pruned plan runs on this
+    tiny corpus."""
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
     root, cfg, parts = split_fixture
     append_delta(spark, f"{root}/main",
                  spark.createDataFrame(parts["conv00001"]), cfg, "d1")
@@ -63,6 +67,43 @@ def test_delta_wand_equals_exhaustive(spark, split_fixture):
              dse.topk(["visa", "good"], k=6, mode="exhaustive",
                       **kw).collect()]
         assert w == e and w
+
+
+def test_delta_wand_keeps_live_docs_of_part_with_tombstones(
+        spark, split_fixture, monkeypatch):
+    """A part with tombstones feeds its live doc_meta rows to the
+    kernel as the allowed set before the local top-k cut. Cutting
+    first and anti-joining the tombstones after let a deleted doc take
+    a bucket's slot: with main docs 2 and 27 deleted, top-2 came back
+    [42, 106] instead of [42, 29], and top-3 held 106 instead of 21
+    (21 and 106 tie; the lower doc id wins)."""
+    from blacklab_spark.delete import delete_docs
+    from blacklab_spark.index import open_index
+    from blacklab_spark.operators import wand
+    root, cfg, parts = split_fixture
+    append_delta(spark, f"{root}/main",
+                 spark.createDataFrame(parts["conv00001"]), cfg, "d1")
+    append_delta(spark, f"{root}/main",
+                 spark.createDataFrame(parts["conv00002"]), cfg, "d2")
+    assert delete_docs(open_index(spark, f"{root}/main"),
+                       "doc_id IN (2, 27)") == 2
+    dse = DeltaSearchEngine(spark, f"{root}/main")
+    terms = ["visa", "good"]
+
+    def top(k, mode):
+        return [(r["doc_id"], r["score"]) for r in
+                dse.topk(terms, k=k, mode=mode).collect()]
+
+    want = {k: top(k, "exhaustive") for k in (1, 2, 3, 5, 8)}
+    assert [d for d, _ in want[2]] == [42, 29]
+    assert 21 in {d for d, _ in want[3]}
+    for gate in (wand.WAND_SEED_MIN_POSTINGS, 0):  # unseeded, seeded
+        monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", gate)
+        for k, expected in want.items():
+            got = top(k, "wand")
+            assert [d for d, _ in got] == [d for d, _ in expected], (gate, k)
+            assert [s for _, s in got] == [s for _, s in expected]
+            assert not {2, 27} & {d for d, _ in got}
 
 
 def test_append_delta_idempotent(spark, split_fixture):
