@@ -102,6 +102,8 @@ def decode_ppm_bytes(buf: bytes) -> tuple[np.ndarray, str]:
     while len(toks) < 3:
         while i < n and buf[i:i + 1].isspace():
             i += 1
+        if i >= n:
+            raise ValueError("truncated PPM header")
         if buf[i:i + 1] == b"#":
             while i < n and buf[i] != 0x0A:
                 i += 1

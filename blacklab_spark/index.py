@@ -60,6 +60,7 @@ class InvertedIndex:
         # driver-side Arrow reads: terms dataset, doc_meta file ranges
         self._terms_ds: ds.Dataset | None = None
         self._doc_meta_files: list[tuple[str, int, int]] | None = None
+        self._doc_meta_stored: frozenset = frozenset()
         self._syn_values: frozenset | None = None
 
     @property
@@ -239,18 +240,18 @@ class InvertedIndex:
                 pdf.sort_values("term_id").reset_index(drop=True)
         return self._term_cache[key]
 
-    def doc_rows(self, doc_ids: list[int], columns: list[str]
-                 ) -> pd.DataFrame:
-        """doc_meta ``columns`` of ``doc_ids`` (no tombstone filter),
-        read with Arrow on the driver from only the files whose footer
-        doc-id range holds one of the ids."""
+    def _doc_meta_listing(self) -> list[tuple[str, int, int]]:
+        """(file, min doc_id, max doc_id) of every doc_meta parquet
+        file, from the footers, read once per handle."""
         if self._doc_meta_files is None:
-            d, ranges = os.path.join(self.path, "doc_meta"), []
+            d, ranges, names = os.path.join(self.path, "doc_meta"), [], set()
             for f in sorted(os.listdir(d)):
                 if f.startswith((".", "_")) or not f.endswith(".parquet"):
                     continue
                 md = pq.read_metadata(os.path.join(d, f))
-                col = md.schema.to_arrow_schema().get_field_index("doc_id")
+                schema = md.schema.to_arrow_schema()
+                names.update(schema.names)
+                col = schema.get_field_index("doc_id")
                 st = [md.row_group(g).column(col).statistics
                       for g in range(md.num_row_groups)]
                 if not st:
@@ -260,13 +261,27 @@ class InvertedIndex:
                 else:
                     lo, hi = -2**63, 2**63 - 1
                 ranges.append((os.path.join(d, f), lo, hi))
-            self._doc_meta_files = ranges  # published whole (threads)
-        files = [p for p, lo, hi in self._doc_meta_files
+            self._doc_meta_stored = frozenset(names)
+            self._doc_meta_files = ranges  # published last (threads)
+        return self._doc_meta_files
+
+    @property
+    def doc_meta_stored(self) -> frozenset:
+        """Column names the doc_meta files store; derived token layers
+        (annotations.with_token_layers) are not among them."""
+        self._doc_meta_listing()
+        return self._doc_meta_stored
+
+    def doc_rows(self, doc_ids: list[int], columns: list[str]) -> pa.Table:
+        """doc_meta ``columns`` of ``doc_ids`` (stored columns only, no
+        tombstone filter), read with Arrow on the driver from only the
+        files whose footer doc-id range holds one of the ids."""
+        files = [p for p, lo, hi in self._doc_meta_listing()
                  if any(lo <= i <= hi for i in doc_ids)]
         return ds.dataset(files, format="parquet").to_table(
             columns=columns,
             filter=ds.field("doc_id").isin(pa.array(doc_ids, pa.int64())),
-        ).to_pandas()
+        )
 
     def _expand(self, key: tuple, cond: Column, limit: int) -> pd.DataFrame:
         """Dictionary expansion shared path: deterministic term_id

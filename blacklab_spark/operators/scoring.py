@@ -149,7 +149,8 @@ def finish_topk(index: InvertedIndex, scores: DataFrame, k: int) -> DataFrame:
     winners = pd.DataFrame({"doc_id": [int(r["doc_id"]) for r in top],
                             "score": [float(r["score"]) for r in top]})
     meta = index.doc_rows(winners["doc_id"].tolist(),
-                          ["doc_id", "conv_id", "turn_idx", "text"])
+                          ["doc_id", "conv_id", "turn_idx", "text"]
+                          ).to_pandas()
     out = winners.merge(meta, on="doc_id")
     out.insert(0, "rank", np.arange(1, len(out) + 1, dtype=np.int32))
     return index.spark.createDataFrame(

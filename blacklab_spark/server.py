@@ -77,8 +77,11 @@ Scale note: the HTTP layer holds NO state and collects only the
 requested window (sort → limit(first+number) → slice) plus tiny
 driver-side aggregates (counts, group sizes ≤ number); everything
 heavy stays in Spark jobs, so the same handler fronts a cluster-sized
-engine unchanged. It is a serving facade for functional parity — a
-production deployment would put the engine behind a real app server.
+engine unchanged. A default ``/hits`` page runs two Spark actions,
+the window and the hit and doc counts; its KWIC and docInfos come
+from a driver-side Arrow read of the page's doc_meta rows. It is a
+serving facade for functional parity — a production deployment would
+put the engine behind a real app server.
 
 Stdlib-only (http.server), daemon-threaded; ``port=0`` picks a free
 port (tests use this).
@@ -247,21 +250,29 @@ class BlsApp:
         raise BlsError(400, "UNKNOWN_PATT_LANG",
                        f"unknown pattern language {lang!r}")
 
+    def _page_docs(self, doc_ids, columns: list[str]) -> dict:
+        """doc_id → {column: value} for ≤ one page of docs, in doc-id
+        order, read on the driver (InvertedIndex.doc_rows: footer-
+        pruned Arrow read, no Spark job). The ids come from results,
+        which hold no tombstoned doc."""
+        ids = sorted(set(doc_ids))
+        if not ids:
+            return {}
+        rows = self.engine.index.doc_rows(ids, ["doc_id", *columns])
+        return {r["doc_id"]: r for r in sorted(rows.to_pylist(),
+                                               key=lambda r: r["doc_id"])}
+
     def _doc_infos(self, doc_ids: list[int]) -> tuple[dict, dict]:
         """(pid → docInfo, doc_id → pid) for a bounded id list (≤ one
-        page of docs; the id list is pushed into the doc_meta scan)."""
-        if not doc_ids:
-            return {}, {}
-        meta = (self.engine.index.doc_meta
-                .filter(F.col("doc_id").isin(doc_ids))
-                .select("doc_id", "conv_id", "turn_idx", "role",
-                        "n_tokens").collect())
-        infos = {_pid(r["conv_id"], r["turn_idx"]): {
+        page of docs), in doc-id order."""
+        meta = self._page_docs(doc_ids, ["conv_id", "turn_idx", "role",
+                                         "n_tokens"])
+        pid_of = {d: _pid(r["conv_id"], r["turn_idx"])
+                  for d, r in meta.items()}
+        infos = {pid_of[d]: {
             "conv_id": r["conv_id"], "turn_idx": r["turn_idx"],
             "role": r["role"], "lengthInTokens": r["n_tokens"],
-        } for r in meta}
-        pid_of = {r["doc_id"]: _pid(r["conv_id"], r["turn_idx"])
-                  for r in meta}
+        } for d, r in meta.items()}
         return infos, pid_of
 
     # ---- operations -------------------------------------------------
@@ -400,22 +411,17 @@ class BlsApp:
         """Original-content concordances for one page of hits
         (Concordances.java / ``usecontent=orig``): the token context
         window mapped to character ranges of the stored content via
-        the frozen tokenizer's run spans, one content fetch per unique
-        doc in the page (doc ids pushed into the scan)."""
+        the frozen tokenizer's run spans, one content read per unique
+        doc in the page (driver-side, no Spark job)."""
         import re as _re
 
         from blacklab_spark.operators.tags import TAG_RE
         from blacklab_spark.tokenizer import py_token_spans
-        dm = self.engine.index.doc_meta
-        tagged = "text_raw" in dm.columns
+        tagged = "text_raw" in self.engine.index.doc_meta_stored
         col = "text_raw" if tagged else "text"
-        ids = sorted({r["doc_id"] for r in window})
-        if not ids:
-            return []
-        rows = (dm.filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "conv_id", "turn_idx", col).collect())
         docs = {}
-        for r in rows:
+        for r in self._page_docs([h["doc_id"] for h in window],
+                                 ["conv_id", "turn_idx", col]).values():
             raw = r[col]
             basis = _re.sub(TAG_RE, lambda m: " " * len(m.group(0)),
                             raw) if tagged else raw
@@ -439,6 +445,81 @@ class BlsApp:
                 entry["matchInfos"] = mi
             out.append(entry)
         return out
+
+    def _kwic(self, window: list, context: int,
+              omit_empty: bool = False) -> list:
+        """Forward-index KWIC for one page of hits (Kwics.java): the
+        left/match/right windows sliced from the page docs' stored @i
+        token arrays, read on the driver (no Spark job). An index that
+        stores no token array (format-v5 "none") tokenizes the docs'
+        text as its derived ``tokens`` column does."""
+        from blacklab_spark.tokenizer import py_tokens_insensitive
+        stored = "tokens" in self.engine.index.doc_meta_stored
+        docs = self._page_docs([h["doc_id"] for h in window],
+                               ["conv_id", "turn_idx",
+                                "tokens" if stored else "text"])
+        for r in docs.values():
+            r["tokens"] = (r["tokens"] if stored
+                           else py_tokens_insensitive(r["text"])) or []
+        out = []
+        for h in window:
+            d = docs.get(h["doc_id"])
+            if d is None:
+                continue
+            toks, s, e = d["tokens"], h["start"], h["end"]
+            entry = {
+                "docPid": _pid(d["conv_id"], d["turn_idx"]),
+                "start": s, "end": e,
+                "left": {"word": toks[max(0, s - context):s]},
+                "match": {"word": toks[s:e]},
+                "right": {"word": toks[e:e + context]},
+            }
+            mi = self._match_infos(h, omit_empty)
+            if mi:
+                entry["matchInfos"] = mi
+            out.append(entry)
+        return out
+
+    def _spark_kwic(self, window: list, context: int, field_b: bool,
+                    annots: tuple, omit_empty: bool = False) -> list:
+        """KWIC through ``operators.hits.kwic`` for what only its JVM
+        expressions give: derived annotation layers (``listvalues=``)
+        and the parallel field b."""
+        from blacklab_spark.operators.hits import kwic
+        spark = self.engine.index.spark
+        wdf = spark.createDataFrame(
+            [(r["doc_id"], r["start"], r["end"]) for r in window],
+            "doc_id long, start int, end int")
+        try:
+            krows = kwic(self.engine.index, wdf, context,
+                         field="b" if field_b else "a",
+                         annotations=annots).collect()
+        except ValueError as e:
+            raise BlsError(400, "UNKNOWN_ANNOTATION",
+                           str(e)) from None
+        by_key = {(r["doc_id"], r["start"], r["end"]): r
+                  for r in krows}
+        out_hits = []
+        for r in window:         # preserve the window's order
+            k = by_key.get((r["doc_id"], r["start"], r["end"]))
+            if k is None:
+                continue
+            entry = {
+                "docPid": _pid(k["conv_id"], k["turn_idx"]),
+                "start": k["start"], "end": k["end"],
+                "left": {"word": list(k["left"])},
+                "match": {"word": list(k["match"])},
+                "right": {"word": list(k["right"])},
+            }
+            for a in annots:
+                safe = "_" + a.replace("/", "_")
+                for part in ("left", "match", "right"):
+                    entry[part][a] = list(k[part + safe])
+            mi = self._match_infos(r, omit_empty)
+            if mi:
+                entry["matchInfos"] = mi
+            out_hits.append(entry)
+        return out_hits
 
     def colloc(self, params: dict) -> dict:
         """``/hits?patt=...&calc=colloc`` (RequestHandlerHits calc
@@ -621,6 +702,7 @@ class BlsApp:
                 "hitGroups": [_grp(r) for r in rows],
             }
 
+        counted = hits
         if sort:
             from blacklab_spark.operators.properties import sort_hits
             try:
@@ -652,7 +734,6 @@ class BlsApp:
             out_hits = self._orig_concordances(window, context,
                                                omit_empty)
         else:
-            from blacklab_spark.operators.hits import kwic
             # listvalues (WebserviceParameter LIST_VALUES): further
             # annotation layers in the KWIC contexts, e.g.
             # listvalues=pos,lemma → match.pos / match.lemma arrays
@@ -662,51 +743,29 @@ class BlsApp:
             lv = self._str(params, "listvalues", "")
             annots = tuple(a for a in lv.split(",")
                            if a and a != "word")
-            spark = self.engine.index.spark
-            wdf = spark.createDataFrame(
-                [(r["doc_id"], r["start"], r["end"]) for r in window],
-                "doc_id long, start int, end int")
-            try:
-                krows = kwic(self.engine.index, wdf, context,
-                             field="b" if field_b else "a",
-                             annotations=annots).collect()
-            except ValueError as e:
-                raise BlsError(400, "UNKNOWN_ANNOTATION",
-                               str(e)) from None
-            by_key = {(r["doc_id"], r["start"], r["end"]): r
-                      for r in krows}
-            out_hits = []
-            for r in window:         # preserve the window's order
-                k = by_key.get((r["doc_id"], r["start"], r["end"]))
-                if k is None:
-                    continue
-                entry = {
-                    "docPid": _pid(k["conv_id"], k["turn_idx"]),
-                    "start": k["start"], "end": k["end"],
-                    "left": {"word": list(k["left"])},
-                    "match": {"word": list(k["match"])},
-                    "right": {"word": list(k["right"])},
-                }
-                for a in annots:
-                    safe = "_" + a.replace("/", "_")
-                    for part in ("left", "match", "right"):
-                        entry[part][a] = list(k[part + safe])
-                mi = self._match_infos(r, omit_empty)
-                if mi:
-                    entry["matchInfos"] = mi
-                out_hits.append(entry)
-        # the cached full count only matches when the hit set wasn't
+            if annots or field_b:
+                out_hits = self._spark_kwic(window, context, field_b,
+                                            annots, omit_empty)
+            else:
+                out_hits = self._kwic(window, context, omit_empty)
+        # numberOfHits and numberOfDocs come from one action; a count
+        # cap is min(total, cap), what a limit-then-count returns
+        def counts() -> tuple[int, int]:
+            n, d = (counted.groupBy("doc_id").count()
+                    .agg(F.sum("count"), F.count("*")).collect()[0])
+            return int(n or 0), int(d)
+        # the cached counts only match when the hit set wasn't
         # narrowed by sampling, property filtering, caps or viewgroup
         plain = (sample is None and samplenum == 0 and maxretrieve == 0
                  and viewgroup is None and fcrit is None
-                 and not field_b)
-        maxcount = self._int(params, "maxcount", 0)
-        if maxcount > 0:
-            # SearchSettings.maxHitsToCount: stop counting at the cap
-            # (CollectLimit short-circuits the scan)
-            n_hits = hits.limit(maxcount).count()
-        elif plain and self._str(params, "pattlang",
-                                 "corpusql") == "corpusql":
+                 and not field_b and self._str(
+                     params, "pattlang", "corpusql") == "corpusql")
+        key = self.engine._cache_key(
+            "hit_doc_counts", self._effective_patt(params),
+            "filter", self._str(params, "filter")) if plain else None
+        if key is None:
+            n_hits, n_docs = counts()
+        else:
             # usecache=no (USE_CACHE): bypass the result cache for
             # this request — compute fresh, store nothing
             import contextlib
@@ -715,12 +774,14 @@ class BlsApp:
                 not in ("no", "false", "0", "off") \
                 else self.engine.cache.bypass()
             with ctx:
-                n_hits = self.engine.count_hits(
-                    self._effective_patt(params),
-                    filter=self._str(params, "filter"))
-        else:
-            n_hits = hits.count()
-        n_docs = hits.select("doc_id").distinct().count()
+                n_hits, n_docs = self.engine.cache.get_or(key, counts)
+        maxcount = self._int(params, "maxcount", 0)
+        cap = self.engine.settings.max_hits_to_count
+        if maxcount > 0:
+            # SearchSettings.maxHitsToCount, per request
+            n_hits = min(n_hits, maxcount)
+        elif plain and cap is not None:
+            n_hits = min(n_hits, cap)
         summary = {
             "searchParam": search_param,
             "windowFirstResult": first,

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's RAM, 1g to 64g: the local driver JVM holds the
+    whole heap, and G1 grows it towards the maximum under allocation
+    pressure, so a maximum above the host's RAM ends in an OOM kill."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "64g"
+    return f"{max(1, min(64, ram // 2**31))}g"
+
+
 def get_spark(app: str = "blacklab_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     # One BLAS/OMP thread per Python worker: numpy's default spawns
@@ -34,7 +45,8 @@ def get_spark(app: str = "blacklab_spark", cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Floor on scan split count: small/mid-size corpora compress to

@@ -116,6 +116,13 @@ def _encode_pgm(arr):
     return b"P5\n%d %d\n255\n" % (w, h) + arr.tobytes()
 
 
+@pytest.mark.parametrize("buf", [b"P6", b"P6\n", b"P6 4", b"P5 4 3",
+                                 b"P6 4 3 \n", b"P6 4 # comment to the end"])
+def test_decode_ppm_truncated_header_raises(buf):
+    with pytest.raises(ValueError, match="truncated PPM header"):
+        M.decode_ppm_bytes(buf)
+
+
 def _encode_bmp24(arr, flipped=True):
     """Reference 24-bit BI_RGB encoder (bottom-up rows, 4-byte
     padding, BGR pixel order) — written independently of the decoder."""

@@ -1,10 +1,12 @@
 """Spark jobs on the query path: exact-term lookups read the terms
-dictionary on the driver, and a top-k attaches its winners' rows on the
-driver, so neither pays a Spark job for work that small. Checked with
+dictionary on the driver, a top-k attaches its winners' rows on the
+driver, and a BLS /hits page reads its KWIC and docInfos on the
+driver, so none pays a Spark job for work that small. Checked with
 the status store's job list for a job group of the test's own."""
 
 from __future__ import annotations
 
+import json
 import uuid
 import warnings
 
@@ -111,3 +113,58 @@ def test_topk_plans_raise_no_user_warning(spark, tiny_index_dir):
         eng.topk("good", k=3, mode="wand", role="user").collect()
         eng.phrase_hits("very good").count()
     assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+# ---- BLS /hits page: one window action and one count action --------
+
+_HITS_PAGES = ['"visa"', '"the"', '"visa" "application"', 'a:"visa"']
+
+
+@pytest.mark.parametrize("patt", _HITS_PAGES)
+def test_hits_page_runs_at_most_four_jobs(spark, tiny_index_dir, patt):
+    """A plain /hits page: the window action and one action for the
+    hit and doc counts; KWIC and docInfos read on the driver."""
+    from blacklab_spark.server import BlsApp
+    eng = SearchEngine.open(spark, tiny_index_dir)
+    # a handle's first query also pays the postings schema read
+    eng.find('"good"').count()
+    app = BlsApp(eng, corpus="t")
+    q = {"patt": [patt], "number": ["20"]}
+    (st, _, body), n = _jobs(
+        spark, lambda: app.handle("/blacklab-server/t/hits", q))
+    assert st == 200 and json.loads(body)["hits"]
+    assert n <= 4
+
+
+def test_hits_page_kwic_and_doc_infos_run_no_job(spark, tiny_index_dir):
+    from blacklab_spark.operators.hits import window_hits
+    from blacklab_spark.server import BlsApp
+    eng = SearchEngine.open(spark, tiny_index_dir)
+    app = BlsApp(eng, corpus="t")
+    window = window_hits(eng.find('a:"visa" "application"'), 0,
+                         20).collect()
+    ids = [h["doc_id"] for h in window]
+    (kwic, (infos, _), orig), n = _jobs(spark, lambda: (
+        app._kwic(window, 5), app._doc_infos(ids),
+        app._orig_concordances(window, 5)))
+    assert len(kwic) == len(orig) == len(window) > 0
+    assert len(infos) == len(set(ids))
+    assert n == 0
+
+
+def test_hits_page_repeat_with_cache_runs_only_the_window(
+        spark, tiny_index_dir):
+    from blacklab_spark.operators.hits import window_hits
+    from blacklab_spark.server import BlsApp
+    eng = SearchEngine(open_index(spark, tiny_index_dir), cache_size=16)
+    app = BlsApp(eng, corpus="t")
+    q = {"patt": ['"visa" "application"'], "number": ["20"]}
+    (_, _, first), n_first = _jobs(
+        spark, lambda: app.handle("/blacklab-server/t/hits", q))
+    (_, _, again), n_again = _jobs(
+        spark, lambda: app.handle("/blacklab-server/t/hits", q))
+    hits = eng.find('"visa" "application"')
+    _, n_window = _jobs(spark,
+                        lambda: window_hits(hits, 0, 20).collect())
+    assert json.loads(again) == json.loads(first)
+    assert n_again == n_window < n_first

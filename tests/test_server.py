@@ -738,3 +738,143 @@ def test_hits_listvalues_annotations(server, tiny_engine):
                           "?patt=%22visa%22&listvalues=bogus",
                   expect_status=400)
     assert e["error"]["code"] == "UNKNOWN_ANNOTATION"
+
+
+# ---- /hits page parity: driver-side KWIC/docInfos and one count job ----
+
+_PARITY_PATTS = ['"visa"', '"the"', '"visa" "application"',
+                 'a:"visa" "application"', '"good" []{0,2} "visa"']
+#: (first, context): the context clips at a doc's start, at neither
+#: edge, and at both edges of short docs
+_PARITY_WINDOWS = [(0, 5), (7, 0), (3, 12)]
+#: (variant, pattern) cases: every pattern on the index as built, and
+#: the patterns each other variant changes the answer of
+_PARITY_CASES = (
+    [("as_built", p) for p in _PARITY_PATTS]
+    + [("maxcount", p) for p in ('"visa"', '"the"')]
+    + [("max_hits_to_count", p) for p in ('"the"', '"visa" "application"')]
+    + [("deleted_conv", p) for p in ('"visa"', 'a:"visa" "application"')]
+    + [("no_tokens", p) for p in ('"visa"', '"the"',
+                                  'a:"visa" "application"')])
+
+
+def _spark_counts(eng, patt, maxcount=0):
+    """(numberOfHits, numberOfDocs) as count() and distinct().count()
+    give them, capped by a limit before the count."""
+    hits = eng.find(patt)
+    cap = maxcount or eng.settings.max_hits_to_count
+    n_hits = hits.limit(cap).count() if cap else hits.count()
+    return n_hits, hits.select("doc_id").distinct().count()
+
+
+def _spark_page(eng, patt, first, context, number):
+    """(hits, docInfos) of a /hits page as Spark answers them:
+    ``operators.hits.kwic`` over the window and a doc_meta scan."""
+    from pyspark.sql import functions as F
+
+    from blacklab_spark.operators.hits import kwic, window_hits
+    idx = eng.index
+    window = window_hits(eng.find(patt), first, number).collect()
+    wdf = idx.spark.createDataFrame(
+        [(h["doc_id"], h["start"], h["end"]) for h in window],
+        "doc_id long, start int, end int")
+    k = {(r["doc_id"], r["start"], r["end"]): r
+         for r in kwic(idx, wdf, context).collect()}
+    out = []
+    for h in window:
+        r = k[(h["doc_id"], h["start"], h["end"])]
+        e = {"docPid": f'{r["conv_id"]}:{r["turn_idx"]}',
+             "start": r["start"], "end": r["end"],
+             "left": {"word": list(r["left"])},
+             "match": {"word": list(r["match"])},
+             "right": {"word": list(r["right"])}}
+        if "match_info" in h.__fields__ and h["match_info"]:
+            e["matchInfos"] = {n: {"start": v["s"], "end": v["e"]}
+                               for n, v in h["match_info"].items()}
+        out.append(e)
+    meta = (idx.doc_meta
+            .filter(F.col("doc_id").isin([h["doc_id"] for h in window]))
+            .orderBy("doc_id").collect())
+    infos = {f'{m["conv_id"]}:{m["turn_idx"]}': {
+        "conv_id": m["conv_id"], "turn_idx": m["turn_idx"],
+        "role": m["role"], "lengthInTokens": m["n_tokens"]}
+        for m in meta}
+    return json.loads(json.dumps(out)), json.loads(json.dumps(infos))
+
+
+@pytest.fixture(scope="module")
+def parity_engines(spark, tiny_engine, tiny_index_dir, tmp_path_factory):
+    """variant → (engine, extra /hits params): the tiny index as
+    built, with maxcount=5, under a max_hits_to_count=7 engine, a copy
+    with the first "visa" conversation deleted and a copy whose
+    doc_meta stores no ``tokens`` column (the format-v5 "none"
+    layout)."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from blacklab_spark.delete import delete_docs
+    from blacklab_spark.engine import SearchEngine, SearchSettings
+    from blacklab_spark.index import open_index
+    root = tmp_path_factory.mktemp("parity")
+    deleted = str(root / "deleted")
+    shutil.copytree(tiny_index_dir, deleted)
+    conv = (tiny_engine.index.doc_meta
+            .join(tiny_engine.find('"visa"'), "doc_id")
+            .orderBy("doc_id").first()["conv_id"])
+    assert delete_docs(open_index(spark, deleted),
+                       f"conv_id = '{conv}'") > 0
+    no_tokens = str(root / "no_tokens")
+    shutil.copytree(tiny_index_dir, no_tokens)
+    dm = os.path.join(no_tokens, "doc_meta")
+    for f in os.listdir(dm):
+        if f.endswith(".parquet"):
+            p = os.path.join(dm, f)
+            # no schema metadata: Spark's stored row schema would
+            # still name the dropped column
+            pq.write_table(pq.read_table(p).drop(["tokens"])
+                           .replace_schema_metadata(None), p,
+                           coerce_timestamps="us")
+            crc = os.path.join(dm, f".{f}.crc")   # Hadoop checksum
+            if os.path.exists(crc):
+                os.remove(crc)
+    return {
+        "as_built": (tiny_engine, 0),
+        "maxcount": (tiny_engine, 5),
+        "max_hits_to_count": (SearchEngine(
+            tiny_engine.index,
+            settings=SearchSettings(max_hits_to_count=7)), 0),
+        "deleted_conv": (SearchEngine.open(spark, deleted), 0),
+        "no_tokens": (SearchEngine.open(spark, no_tokens), 0),
+    }
+
+
+@pytest.mark.parametrize("variant,patt", _PARITY_CASES)
+def test_hits_page_parity_with_spark_kwic(parity_engines, variant, patt):
+    """The /hits page (driver-side KWIC and docInfos, hit and doc
+    counts from one job) parses equal to the Spark kwic + count() +
+    distinct().count() answer for the same window, docInfos in doc-id
+    order."""
+    from blacklab_spark.server import BlsApp
+    eng, maxcount = parity_engines[variant]
+    if variant == "no_tokens":
+        assert "tokens" not in eng.index.doc_meta_stored
+    app = BlsApp(eng, corpus="t")
+    n_hits, n_docs = _spark_counts(eng, patt, maxcount)
+    assert n_hits > 0
+    for first, context in _PARITY_WINDOWS:
+        q = {"patt": [patt], "first": [str(first)], "number": ["10"],
+             "context": [str(context)]}
+        if maxcount:
+            q["maxcount"] = [str(maxcount)]
+        st, _, body = app.handle("/blacklab-server/t/hits", q)
+        assert st == 200, body
+        got = json.loads(body)
+        s = got["summary"]
+        assert (s["numberOfHits"], s["numberOfDocs"]) == (n_hits, n_docs)
+        assert s["stoppedCountingHits"] == bool(
+            maxcount and n_hits >= maxcount)
+        hits, infos = _spark_page(eng, patt, first, context, 10)
+        assert got["hits"] == hits
+        assert list(got["docInfos"].items()) == list(infos.items())

@@ -70,7 +70,6 @@ def _dtype_kind(series) -> str:
     NOT compared — Spark surfaces INT columns as int32 where DuckDB's
     BIGINT aggregates are int64; the bug class this mode exists for is
     kind divergence (HUGEINT → float64 vs int64)."""
-    import numpy as np
     import pandas as pd
 
     dt = series.dtype
@@ -90,18 +89,10 @@ def _dtype_kind(series) -> str:
         return "M"
     if kind == "O":
         # object columns may wrap uniform Python scalars (DuckDB
-        # fetchdf corner cases); sniff non-null values — bools BEFORE
-        # ints (bool is an int subclass) so an object-bool column
-        # compares equal to a native bool one
-        vals = series.dropna()
-        head = list(vals.head(50))
-        if head and all(isinstance(v, (bool, np.bool_)) for v in head):
-            return "b"
-        if head and all(isinstance(v, (int, np.integer))
-                        and not isinstance(v, (bool, np.bool_))
-                        for v in head):
-            return "i"
-        return "O"
+        # fetchdf corner cases); classify every non-null value, so an
+        # object-bool column compares equal to a native bool one
+        return {"boolean": "b", "integer": "i"}.get(
+            pd.api.types.infer_dtype(series, skipna=True), "O")
     return kind
 
 
