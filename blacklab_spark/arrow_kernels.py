@@ -60,6 +60,16 @@ def bm25_contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
     return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
+def bm25_idf(n_docs, df):
+    """BM25 idf with ``np.log``, over a scalar or an array of df: the
+    build's block ``max_score`` and every query-time idf call it.
+    ``math.log`` differs from ``np.log`` in the last bit for about a
+    third of df values, and a block max is achieved bit-identically
+    only under the idf it was built with. ``oracle.bm25_idf`` keeps
+    ``math.log`` as the independent referee."""
+    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
 # --------------------------------------------------------------------
 # SPIMI: (doc_id, tokens) batches → pre-encoded posting mini-blocks.
 #
@@ -300,7 +310,7 @@ def finalize_blocks_arrow(cfg: BuildConfig, n_docs: int, avgdl: float):
             tf_vals = codec.decode_varints(tf_data).astype(np.float64)
             dl_vals = codec.decode_varints(dl_data).astype(np.float64)
             v_starts = np.concatenate(([0], np.cumsum(nd)))[:-1]
-            idf = np.log(1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5))
+            idf = bm25_idf(n_docs, dfv)
             # the query kernel's own expression (bm25_contrib), so the
             # block max is bit-identically *achieved* by some doc —
             # the WAND threshold bound depends on that

@@ -28,24 +28,31 @@ no reducer sees more than bucket_size rows per term.
 
 Build is resumable: each stage writes its artifact dir + a manifest
 entry (`_index_meta.json`); ``resume=True`` skips completed stages.
+The corpus stats (n_docs, total_tokens, avgdl) are observed on the
+doc_meta write and saved with its stage entry. Each stage runs its
+jobs under a job tag of its own, and its manifest entry sums shuffle
+bytes over those jobs' stages only. Stages re-read their inputs with
+the schema stored in the parquet footers (index.read_artifact).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
+import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from blacklab_spark import codec
 from blacklab_spark.arrow_kernels import finalize_blocks_arrow, spimi_miniblocks
 from blacklab_spark.config import BuildConfig
-from blacklab_spark.oracle import bm25_idf  # same formula, one source of truth
+from blacklab_spark.index import read_artifact
 from blacklab_spark.tokenizer import tokens_insensitive
 
 # SPIMI emits pre-encoded MINI-BLOCKS, not raw posting rows: doc ids
@@ -81,24 +88,43 @@ BLOCK_SCHEMA = T.StructType([
 ])
 
 
-def _shuffle_snapshot(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle_write_bytes, shuffle_read_bytes) across all
-    completed Spark stages, from the live AppStatusStore. Per-stage
-    deltas land in the manifest so scaling efficiency can be tied to a
-    measured bytes-moved-per-turn number (r4 VERDICT #2c) instead of
-    guessed. Pure introspection via py4j — any reflection drift across
+@contextlib.contextmanager
+def stage_jobs(spark: SparkSession):
+    """Run the body's Spark jobs under a job tag of their own; yields
+    the tag. Tags leave job groups alone, and jobs of other threads do
+    not carry it."""
+    sc, tag = spark.sparkContext, f"blacklab-stage-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        yield tag
+    finally:
+        sc.removeJobTag(tag)
+
+
+def _tagged_shuffle_bytes(spark, tag: str) -> tuple[int, int] | None:
+    """(shuffle_write_bytes, shuffle_read_bytes) summed over the stages
+    of the jobs that carry ``tag``, from the live AppStatusStore — so
+    concurrent jobs in the session do not count, and neither do stages
+    outside the tag's jobs. The per-stage numbers land in the manifest
+    so scaling efficiency can be tied to a measured bytes-moved-per-turn
+    number. Pure introspection via py4j — any reflection drift across
     Spark versions degrades to None, never fails the build."""
     try:
         sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
+        jsc = sc._jsc.sc()
+        store = jsc.statusStore()
         empty = sc._jvm.java.util.ArrayList()
         quantiles = sc._gateway.new_array(sc._jvm.double, 0)
-        stages = store.stageList(empty, False, False, quantiles, empty)
-        it, w, r = stages.iterator(), 0, 0
-        while it.hasNext():
-            s = it.next()
-            w += s.shuffleWriteBytes()
-            r += s.shuffleReadBytes()
+        stage_ids = {s for j in jsc.statusTracker().getJobIdsForTag(tag)
+                     for s in sc.statusTracker().getJobInfo(j).stageIds}
+        w = r = 0
+        for sid in stage_ids:
+            it = store.stageData(sid, False, empty, False,
+                                 quantiles).iterator()
+            while it.hasNext():
+                s = it.next()
+                w += s.shuffleWriteBytes()
+                r += s.shuffleReadBytes()
         return int(w), int(r)
     except Exception:
         return None
@@ -288,9 +314,6 @@ class IndexBuilder:
         self.out = out_dir.rstrip("/")
         self.cfg = cfg or BuildConfig()
         self.manifest_path = os.path.join(self.out, "_index_meta.json")
-        # per-stage shuffle-byte deltas baseline (compact() calls
-        # _finish_stage without going through build())
-        self._shuffle_snap = _shuffle_snapshot(spark)
 
     # -- manifest / checkpoint helpers ---------------------------------
     def _load_manifest(self) -> dict:
@@ -333,7 +356,9 @@ class IndexBuilder:
             self._save_manifest(m)
 
     def _finish_stage(self, m: dict, name: str, t0: float, path: str,
-                      partitions: int) -> int:
+                      partitions: int, tag: str) -> int:
+        """Record a written stage in the manifest: its output files and
+        rows, and the shuffle bytes of the jobs run under ``tag``."""
         dur = time.time() - t0
         files = _parquet_file_rows(path)
         rows = sum(r for _, r in files)
@@ -345,27 +370,87 @@ class IndexBuilder:
             # file = per write-task row count, from the parquet footers
             "files": [{"file": f, "rows": r} for f, r in files],
         }
-        # shuffle bytes moved by THIS stage (delta of the session-wide
-        # cumulative counters since the previous stage boundary).
-        # Caveats by construction: the store retains a bounded stage
-        # window (spark.ui.retainedStages), so in a very long session
-        # the cumulative counter can DROP between snapshots, and
-        # concurrent jobs in the same session land in this stage's
-        # delta — negative deltas are discarded rather than recorded
-        # (they would corrupt bytes-per-turn downstream).
-        snap = _shuffle_snapshot(self.spark)
-        if snap is not None and self._shuffle_snap is not None:
-            dw = snap[0] - self._shuffle_snap[0]
-            dr = snap[1] - self._shuffle_snap[1]
-            if dw >= 0 and dr >= 0:
-                m["stages"][name]["shuffle_write_bytes"] = dw
-                m["stages"][name]["shuffle_read_bytes"] = dr
-        if snap is not None:
-            self._shuffle_snap = snap
+        shuffle = _tagged_shuffle_bytes(self.spark, tag)
+        if shuffle is not None:
+            m["stages"][name]["shuffle_write_bytes"] = shuffle[0]
+            m["stages"][name]["shuffle_read_bytes"] = shuffle[1]
         self._save_manifest(m)
         return rows
 
     # -- build ---------------------------------------------------------
+    def _doc_meta_frame(self, transcripts: DataFrame, parts: int):
+        """(doc_meta rows to write, cached frame the caller unpersists
+        once they are written): dense ids, token layers, text."""
+        cfg = self.cfg
+        with_ids, cached = assign_doc_ids(transcripts, parts)
+        if cfg.tags:
+            # inline-tag corpora (operators/tags.py): tokenize the
+            # tag-stripped text; the original markup is kept as
+            # `text_raw` (content store) and feeds the _spans
+            # stage below. Plain corpora skip both projections.
+            from blacklab_spark.operators.tags import strip_tags
+            with_ids = (with_ids
+                        .withColumn("text_raw", F.col("text"))
+                        .withColumn("text", strip_tags("text")))
+        # two sensitivity layers per annotation (BlackLab @i/@s,
+        # SURVEY.md §1.1): `tokens` = lowercased (drives postings +
+        # BM25), `tokens_s` = original case. Format v6 stores ONLY
+        # `tokens` — the @i layer that drives every hot probe path
+        # (CQL default layer, phrase probe, collocations,
+        # repetition closure, FiSeq verify); parquet
+        # dictionary-encodes it, so on disk it is effectively the
+        # reference's term-id tokens file, and SPIMI reads it
+        # instead of tokenizing a second time. Rarer layers
+        # (tokens_s/ci/di/pos) are DERIVED from text at read time
+        # (annotations.with_token_layers; the tokenizer is a
+        # deterministic JVM expression, so derived ≡ stored).
+        # Deriving every layer measured 3-12× probe-path latency
+        # at sf0.1. Older indexes that stored all layers or none
+        # still read: with_token_layers derives only absent ones.
+        pre_layers = [c for c in ("tokens_s", "tokens_pos",
+                                  "tokens_lemma")
+                      if c in transcripts.columns]
+        if pre_layers:
+            # PRE-ANNOTATED input (e.g. sources/files.read_conllu —
+            # the reference's pre-tagged-corpus mode,
+            # formats/conll-u.blf.yaml): the input defines the
+            # token stream, so never re-tokenize from text; the @i
+            # layer is the per-token fold∘lower of the given
+            # surface forms, and provided pos/lemma layers are
+            # stored as given (with_token_layers derives only
+            # ABSENT columns at read time, so queries see these).
+            if "tokens_s" not in pre_layers:
+                raise ValueError(
+                    "pre-annotated input needs tokens_s alongside "
+                    f"{pre_layers}")
+            if cfg.tags:
+                raise ValueError(
+                    "tags=True (inline-markup) and pre-tokenized "
+                    "input are mutually exclusive")
+            from blacklab_spark.tokenizer import fold_insensitive
+            doc_meta = with_ids.withColumn(
+                "tokens", F.transform(F.col("tokens_s"),
+                                      fold_insensitive))
+            stored = ["tokens"] + pre_layers
+        else:
+            doc_meta = with_ids.withColumn(
+                "tokens", tokens_insensitive("text"))
+            stored = ["tokens"]
+        doc_meta = doc_meta.withColumn(
+            "n_tokens", F.size("tokens").cast("int"))
+        doc_meta = doc_meta.select(
+            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
+            "n_tokens", *stored, "text",
+            *(["text_raw"] if cfg.tags else []),
+            # parallel-corpus field b: a GIVEN second token layer
+            # (its own coordinate system) is stored as-is; the
+            # alignment edges land in the _alignments artifact
+            # (stage 1d). Catalyst prunes the column for queries
+            # that never touch field b.
+            *(["tokens_b"] if "tokens_b" in transcripts.columns
+              else []))
+        return doc_meta, cached
+
     def build(self, transcripts: DataFrame, resume: bool = False) -> dict:
         """Run all stages; returns the final manifest."""
         cfg = self.cfg
@@ -388,99 +473,49 @@ class IndexBuilder:
             normalized_synonyms(cfg.synonyms)  # raises on identity
         parts = cfg.num_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._shuffle_snap = _shuffle_snapshot(self.spark)
         m = self._load_manifest() if resume else {
             "format_version": cfg.format_version, "config": cfg.to_dict(),
             "stages": {}}
 
         # Stage 1: doc_meta = ids + tokens + text (forward index+content store)
         doc_meta_path = os.path.join(self.out, "doc_meta")
-        if not (resume and self._stage_done(m, "doc_meta")):
+        # the manifest's stats ride the doc_meta stage: a resumed
+        # manifest without them re-runs it
+        if not (resume and self._stage_done(m, "doc_meta")
+                and "stats" in m):
             t0 = time.time()
-            with_ids, cached = assign_doc_ids(transcripts, parts)
-            if cfg.tags:
-                # inline-tag corpora (operators/tags.py): tokenize the
-                # tag-stripped text; the original markup is kept as
-                # `text_raw` (content store) and feeds the _spans
-                # stage below. Plain corpora skip both projections.
-                from blacklab_spark.operators.tags import strip_tags
-                with_ids = (with_ids
-                            .withColumn("text_raw", F.col("text"))
-                            .withColumn("text", strip_tags("text")))
-            # two sensitivity layers per annotation (BlackLab @i/@s,
-            # SURVEY.md §1.1): `tokens` = lowercased (drives postings +
-            # BM25), `tokens_s` = original case. Format v6 stores ONLY
-            # `tokens` — the @i layer that drives every hot probe path
-            # (CQL default layer, phrase probe, collocations,
-            # repetition closure, FiSeq verify); parquet
-            # dictionary-encodes it, so on disk it is effectively the
-            # reference's term-id tokens file, and SPIMI reads it
-            # instead of tokenizing a second time. Rarer layers
-            # (tokens_s/ci/di/pos) are DERIVED from text at read time
-            # (annotations.with_token_layers; the tokenizer is a
-            # deterministic JVM expression, so derived ≡ stored).
-            # Deriving every layer measured 3-12× probe-path latency
-            # at sf0.1. Older indexes that stored all layers or none
-            # still read: with_token_layers derives only absent ones.
-            pre_layers = [c for c in ("tokens_s", "tokens_pos",
-                                      "tokens_lemma")
-                          if c in transcripts.columns]
-            if pre_layers:
-                # PRE-ANNOTATED input (e.g. sources/files.read_conllu —
-                # the reference's pre-tagged-corpus mode,
-                # formats/conll-u.blf.yaml): the input defines the
-                # token stream, so never re-tokenize from text; the @i
-                # layer is the per-token fold∘lower of the given
-                # surface forms, and provided pos/lemma layers are
-                # stored as given (with_token_layers derives only
-                # ABSENT columns at read time, so queries see these).
-                if "tokens_s" not in pre_layers:
-                    raise ValueError(
-                        "pre-annotated input needs tokens_s alongside "
-                        f"{pre_layers}")
-                if cfg.tags:
-                    raise ValueError(
-                        "tags=True (inline-markup) and pre-tokenized "
-                        "input are mutually exclusive")
-                from blacklab_spark.tokenizer import fold_insensitive
-                doc_meta = with_ids.withColumn(
-                    "tokens", F.transform(F.col("tokens_s"),
-                                          fold_insensitive))
-                stored = ["tokens"] + pre_layers
-            else:
-                doc_meta = with_ids.withColumn(
-                    "tokens", tokens_insensitive("text"))
-                stored = ["tokens"]
-            doc_meta = doc_meta.withColumn(
-                "n_tokens", F.size("tokens").cast("int"))
-            doc_meta = doc_meta.select(
-                "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                "n_tokens", *stored, "text",
-                *(["text_raw"] if cfg.tags else []),
-                # parallel-corpus field b: a GIVEN second token layer
-                # (its own coordinate system) is stored as-is; the
-                # alignment edges land in the _alignments artifact
-                # (stage 1d). Catalyst prunes the column for queries
-                # that never touch field b.
-                *(["tokens_b"] if "tokens_b" in transcripts.columns
-                  else []))
-            # with_ids is already range-partitioned by (conv_id, turn_idx)
-            # = doc_id order, rows sorted within partitions by the
-            # row_number window → files hold disjoint sorted doc_id
-            # runs; writing directly keeps parquet row-group pruning
-            # and avoids a second shuffle (repartitionByRange would
-            # also re-execute the pipeline for boundary sampling).
-            # 4MB row groups: splittable scans regardless of file
-            # count (a single 128MB row group makes a file one
-            # indivisible task → stage skew), and finer row-group
-            # pruning at query time.
-            doc_meta.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(doc_meta_path)
-            cached.unpersist()
-            self._finish_stage(m, "doc_meta", t0, doc_meta_path, parts)
+            with stage_jobs(self.spark) as tag:
+                doc_meta, cached = self._doc_meta_frame(transcripts, parts)
+                # the rows are already range-partitioned by (conv_id,
+                # turn_idx) = doc_id order, rows sorted within
+                # partitions → files hold disjoint sorted doc_id runs;
+                # writing directly keeps parquet row-group pruning and
+                # avoids a second shuffle (repartitionByRange would
+                # also re-execute the pipeline for boundary sampling).
+                # 4MB row groups: splittable scans regardless of file
+                # count (a single 128MB row group makes a file one
+                # indivisible task → stage skew), and finer row-group
+                # pruning at query time. n_docs/total_tokens are
+                # observed on the write instead of a second job; an
+                # unnamed Observation, so concurrent builds never
+                # share one.
+                obs = Observation()
+                doc_meta.observe(
+                    obs, F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("n_tokens").alias("total_tokens")) \
+                    .write.mode("overwrite") \
+                    .option("parquet.block.size", 4 * 1024 * 1024) \
+                    .parquet(doc_meta_path)
+                cached.unpersist()
+            n_docs = int(obs.get["n_docs"])
+            total_tokens = int(obs.get["total_tokens"] or 0)
+            m["stats"] = {"n_docs": n_docs, "total_tokens": total_tokens,
+                          "avgdl": total_tokens / max(1, n_docs)}
+            self._finish_stage(m, "doc_meta", t0, doc_meta_path, parts,
+                               tag)
+        n_docs, avgdl = m["stats"]["n_docs"], m["stats"]["avgdl"]
 
-        doc_meta = self.spark.read.parquet(doc_meta_path)
+        doc_meta = read_artifact(self.spark, doc_meta_path)
 
         # Stage 1b (cfg.tags): inline-tag span layer — map-side stack
         # machine over text_raw (operators/tags.py), one narrow
@@ -493,11 +528,12 @@ class IndexBuilder:
                                                 spans_path)):
                 t0 = time.time()
                 from blacklab_spark.operators.tags import doc_tag_spans
-                sp = doc_tag_spans(doc_meta, "text_raw")
-                sp.write.mode("overwrite") \
-                    .option("parquet.block.size", 4 * 1024 * 1024) \
-                    .parquet(spans_path)
-                self._finish_stage(m, "spans", t0, spans_path, parts)
+                with stage_jobs(self.spark) as tag:
+                    doc_tag_spans(doc_meta, "text_raw") \
+                        .write.mode("overwrite") \
+                        .option("parquet.block.size", 4 * 1024 * 1024) \
+                        .parquet(spans_path)
+                self._finish_stage(m, "spans", t0, spans_path, parts, tag)
 
         # Stage 1c: REAL dependency edges — inputs carrying a
         # per-token HEAD/DEPREL layer (read_conllu; reference indexes
@@ -528,10 +564,13 @@ class IndexBuilder:
                 rel_src = doc_meta.select(
                     "doc_id", "conv_id", "turn_idx") \
                     .join(keyed, ["conv_id", "turn_idx"])
-                edges_from_head_layer(rel_src).write.mode("overwrite") \
-                    .option("parquet.block.size", 4 * 1024 * 1024) \
-                    .parquet(rel_path)
-                self._finish_stage(m, "relations", t0, rel_path, parts)
+                with stage_jobs(self.spark) as tag:
+                    edges_from_head_layer(rel_src) \
+                        .write.mode("overwrite") \
+                        .option("parquet.block.size", 4 * 1024 * 1024) \
+                        .parquet(rel_path)
+                self._finish_stage(m, "relations", t0, rel_path, parts,
+                                   tag)
 
         # Stage 1d: REAL alignment edges — parallel-corpus inputs
         # carrying an `align_pairs` column (array<struct<src,tgt>> of
@@ -551,28 +590,22 @@ class IndexBuilder:
                 al_src = doc_meta.select(
                     "doc_id", "conv_id", "turn_idx") \
                     .join(keyed, ["conv_id", "turn_idx"])
-                (al_src.select(
-                    "doc_id", F.explode("align_pairs").alias("e"))
-                 .select(
-                     "doc_id",
-                     F.col("e.src").cast("int").alias("al_src_start"),
-                     (F.col("e.src") + 1).cast("int")
-                     .alias("al_src_end"),
-                     F.col("e.tgt").cast("int").alias("al_tgt_start"),
-                     (F.col("e.tgt") + 1).cast("int")
-                     .alias("al_tgt_end"))
-                 .write.mode("overwrite")
-                 .option("parquet.block.size", 4 * 1024 * 1024)
-                 .parquet(al_path))
-                self._finish_stage(m, "alignments", t0, al_path, parts)
-
-        agg = doc_meta.agg(F.count("*").alias("n"),
-                           F.sum("n_tokens").alias("tot")).collect()[0]
-        n_docs, total_tokens = int(agg["n"]), int(agg["tot"] or 0)
-        avgdl = total_tokens / max(1, n_docs)
-        m["stats"] = {"n_docs": n_docs, "total_tokens": total_tokens,
-                      "avgdl": avgdl}
-        self._save_manifest(m)
+                edges = al_src.select(
+                    "doc_id", F.explode("align_pairs").alias("e")) \
+                    .select(
+                        "doc_id",
+                        F.col("e.src").cast("int").alias("al_src_start"),
+                        (F.col("e.src") + 1).cast("int")
+                        .alias("al_src_end"),
+                        F.col("e.tgt").cast("int").alias("al_tgt_start"),
+                        (F.col("e.tgt") + 1).cast("int")
+                        .alias("al_tgt_end"))
+                with stage_jobs(self.spark) as tag:
+                    edges.write.mode("overwrite") \
+                        .option("parquet.block.size", 4 * 1024 * 1024) \
+                        .parquet(al_path)
+                self._finish_stage(m, "alignments", t0, al_path, parts,
+                                   tag)
 
         # Stage 2: SPIMI mini-blocks (explicit checkpoint — both the
         # terms stage and the merge stage consume it, and a resumed
@@ -580,57 +613,65 @@ class IndexBuilder:
         runs_path = os.path.join(self.out, "runs")
         if not (resume and self._stage_done(m, "runs")):
             t0 = time.time()
-            runs = _spimi_miniblocks(doc_meta, cfg)
-            runs.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(runs_path)
-            self._finish_stage(m, "runs", t0, runs_path, parts)
-        runs = self.spark.read.parquet(runs_path)
+            with stage_jobs(self.spark) as tag:
+                _spimi_miniblocks(doc_meta, cfg).write.mode("overwrite") \
+                    .option("parquet.block.size", 4 * 1024 * 1024) \
+                    .parquet(runs_path)
+            self._finish_stage(m, "runs", t0, runs_path, parts, tag)
+        runs = read_artifact(self.spark, runs_path)
 
         # Stage 3: terms dictionary with dense ids (sorted by term).
-        # The aggregate is persisted BEFORE any id scheme runs: the
-        # generic scheme's range-boundary sampling job used to execute
-        # the full groupBy a second time (the stage's 1→4-core
-        # efficiency was 0.57 — a serial floor of repeated jobs, not
-        # parallel work; r4 VERDICT #2b).
+        # The distinct terms never outnumber the runs rows, so a count
+        # only runs when those exceed terms_single_partition_max. On
+        # that path the aggregate is persisted BEFORE any id scheme
+        # runs: the generic scheme's range-boundary sampling job used
+        # to execute the full groupBy a second time (the stage's
+        # 1→4-core efficiency was 0.57 — a serial floor of repeated
+        # jobs, not parallel work; r4 VERDICT #2b).
         terms_path = os.path.join(self.out, "terms")
         if not (resume and self._stage_done(m, "terms")):
             t0 = time.time()
             terms_agg = (runs.groupBy("term")
                          .agg(F.sum("n_docs").alias("df"),
-                              F.sum("sum_tf").alias("cf"))).persist()
+                              F.sum("sum_tf").alias("cf")))
+            single = (m["stages"]["runs"]["rows"]
+                      <= cfg.terms_single_partition_max)
             t_cached = None
-            try:
-                n_terms = terms_agg.count()
-                single = n_terms <= cfg.terms_single_partition_max
-                if single:
-                    # bounded dictionary (the common case — the
-                    # reference holds the whole dictionary in memory
-                    # per index, TermsIntegrated.java:82-111): ONE
-                    # task sorts the vocabulary and numbers rows in
-                    # sort order via monotonically_increasing_id
-                    # (pid 0 → dense 0-based). One job total; no
-                    # sampling pass, no count-collect, no window join.
-                    terms = (terms_agg.repartition(1)
-                             .sortWithinPartitions("term")
-                             .select("term",
-                                     F.monotonically_increasing_id()
-                                     .alias("term_id"), "df", "cf"))
-                else:
-                    # web-scale vocabulary: fully-distributed dense ids
-                    terms, t_cached = assign_dense_ids(
-                        terms_agg, ["term"], "term_id", parts)
-                    terms = terms.select("term", "term_id", "df", "cf")
-                    # assign_dense_ids leaves terms range-partitioned
-                    # and sorted by term (= term_id order)
-                terms.write.mode("overwrite").parquet(terms_path)
-            finally:
-                terms_agg.unpersist()
-                if t_cached is not None:
-                    t_cached.unpersist()
+            with stage_jobs(self.spark) as tag:
+                try:
+                    if not single:
+                        terms_agg = terms_agg.persist()
+                        single = (terms_agg.count()
+                                  <= cfg.terms_single_partition_max)
+                    if single:
+                        # bounded dictionary (the common case — the
+                        # reference holds the whole dictionary in
+                        # memory per index, TermsIntegrated.java:82-111):
+                        # ONE task sorts the vocabulary and numbers rows
+                        # in sort order via monotonically_increasing_id
+                        # (pid 0 → dense 0-based). One job total; no
+                        # sampling pass, no count-collect, no window
+                        # join.
+                        terms = (terms_agg.repartition(1)
+                                 .sortWithinPartitions("term")
+                                 .select("term",
+                                         F.monotonically_increasing_id()
+                                         .alias("term_id"), "df", "cf"))
+                    else:
+                        # web-scale vocabulary: fully-distributed ids
+                        terms, t_cached = assign_dense_ids(
+                            terms_agg, ["term"], "term_id", parts)
+                        terms = terms.select("term", "term_id", "df", "cf")
+                        # assign_dense_ids leaves terms range-partitioned
+                        # and sorted by term (= term_id order)
+                    terms.write.mode("overwrite").parquet(terms_path)
+                finally:
+                    terms_agg.unpersist()
+                    if t_cached is not None:
+                        t_cached.unpersist()
             self._finish_stage(m, "terms", t0, terms_path,
-                               1 if single else parts)
-        terms = self.spark.read.parquet(terms_path)
+                               1 if single else parts, tag)
+        terms = read_artifact(self.spark, terms_path)
 
         # Stage 4: shuffle merge of mini-blocks per (term_id, bucket):
         # assign term ids, renumber block ids, add per-block max BM25
@@ -657,10 +698,11 @@ class IndexBuilder:
             # a k-term lookup touches ≤k row groups per file. A
             # repartitionByRange here would re-run the whole encode
             # pipeline for boundary sampling — write directly.
-            blocks.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(postings_path)
-            self._finish_stage(m, "postings", t0, postings_path, parts)
+            with stage_jobs(self.spark) as tag:
+                blocks.write.mode("overwrite") \
+                    .option("parquet.block.size", 4 * 1024 * 1024) \
+                    .parquet(postings_path)
+            self._finish_stage(m, "postings", t0, postings_path, parts, tag)
 
         m["built_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         self._save_manifest(m)

@@ -92,7 +92,7 @@ def _carry_edge_artifact(spark: SparkSession, old: InvertedIndex,
     the joins either way. Records the stage in the new manifest so
     the manifest-gated accessor serves it."""
     import time as _time
-    from blacklab_spark.build import IndexBuilder
+    from blacklab_spark.build import IndexBuilder, stage_jobs
     new = open_index(spark, out_dir)
     t0 = _time.time()
     old_map = old.doc_meta.select(F.col("doc_id").alias("_old_id"),
@@ -104,9 +104,10 @@ def _carry_edge_artifact(spark: SparkSession, old: InvertedIndex,
                 .join(new_map, ["conv_id", "turn_idx"])
                 .select("doc_id", *cols))
     path = os.path.join(out_dir.rstrip("/"), dirname)
-    remapped.write.mode("overwrite") \
-        .option("parquet.block.size", 4 * 1024 * 1024).parquet(path)
+    with stage_jobs(spark) as tag:
+        remapped.write.mode("overwrite") \
+            .option("parquet.block.size", 4 * 1024 * 1024).parquet(path)
     b = IndexBuilder(spark, out_dir, new.cfg)
     m = b._load_manifest()
     b._finish_stage(m, stage, t0, path,
-                    int(spark.conf.get("spark.sql.shuffle.partitions")))
+                    int(spark.conf.get("spark.sql.shuffle.partitions")), tag)

@@ -11,12 +11,43 @@ import os
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
+from blacklab_spark.arrow_kernels import bm25_idf
 from blacklab_spark.config import BuildConfig
-from blacklab_spark.oracle import bm25_idf
+
+# footer key under which Spark stores the writing DataFrame's schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_artifact(spark: SparkSession, path: str,
+                  files: list[str] | None = None) -> DataFrame:
+    """``spark.read.parquet`` over an artifact dir (or only its
+    ``files``) with the schema Spark wrote into the first file's
+    footer, so opening it runs no schema-inference job (~50 ms each).
+    Inference would return that same stored schema; a dir whose first
+    file has none (written by pyarrow, say) reads with inference as
+    before. Spark lists more root paths than
+    ``parallelPartitionDiscovery.threshold`` in a job, so a longer
+    ``files`` list reads the whole dir instead."""
+    names = files if files is not None else sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_")))
+    paths = [path]
+    if files is not None and len(files) <= int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold")):
+        paths = [os.path.join(path, f) for f in files]
+    if names:
+        md = pq.read_metadata(os.path.join(path, names[0]))
+        stored = (md.metadata or {}).get(SPARK_SCHEMA_KEY)
+        if stored:
+            schema = StructType.fromJson(json.loads(stored))
+            return spark.read.schema(schema).parquet(*paths)
+    return spark.read.parquet(*paths)
 
 
 class InvertedIndex:
@@ -87,8 +118,8 @@ class InvertedIndex:
     @property
     def terms(self) -> DataFrame:
         if "terms" not in self._df_cache:
-            self._df_cache["terms"] = self.spark.read.parquet(
-                os.path.join(self.path, "terms"))
+            self._df_cache["terms"] = read_artifact(
+                self.spark, os.path.join(self.path, "terms"))
         return self._df_cache["terms"]
 
     @property
@@ -107,8 +138,8 @@ class InvertedIndex:
         from blacklab_spark.annotations import with_token_layers
         key = ("doc_meta", self._tombstone_listing())
         if key not in self._df_cache:
-            dm = self.spark.read.parquet(
-                os.path.join(self.path, "doc_meta"))
+            dm = read_artifact(self.spark,
+                               os.path.join(self.path, "doc_meta"))
             dm = with_token_layers(dm, self.cfg.annotations)
             self._df_cache[key] = self.without_deleted(dm)
         return self._df_cache[key]
@@ -124,7 +155,7 @@ class InvertedIndex:
                 "rebuild with BuildConfig(tags=True)")
         key = ("doc_spans", self._tombstone_listing())
         if key not in self._df_cache:
-            sp = self.spark.read.parquet(os.path.join(self.path, "_spans"))
+            sp = read_artifact(self.spark, os.path.join(self.path, "_spans"))
             self._df_cache[key] = self.without_deleted(sp)
         return self._df_cache[key]
 
@@ -146,7 +177,7 @@ class InvertedIndex:
         key = (dirname, self._tombstone_listing())
         if key not in self._df_cache:
             self._df_cache[key] = self.without_deleted(
-                self.spark.read.parquet(p))
+                read_artifact(self.spark, p))
         return self._df_cache[key]
 
     @property
@@ -176,8 +207,8 @@ class InvertedIndex:
     @property
     def postings(self) -> DataFrame:
         if "postings" not in self._df_cache:
-            self._df_cache["postings"] = self.spark.read.parquet(
-                os.path.join(self.path, "postings"))
+            self._df_cache["postings"] = read_artifact(
+                self.spark, os.path.join(self.path, "postings"))
         return self._df_cache["postings"]
 
     # -- deletes (tombstones) ------------------------------------------
@@ -200,10 +231,18 @@ class InvertedIndex:
 
     @property
     def deleted_doc_ids(self) -> DataFrame | None:
-        if not self.has_deletes:
+        """Distinct tombstoned doc ids, memoized per tombstone listing.
+        Reads the listed files, not the ``_deletes`` dir: Spark warns
+        that it ignores a path whose name starts with ``_``."""
+        listing = self._tombstone_listing()
+        if not listing:
             return None
-        return (self.spark.read.parquet(self.deletes_path)
-                .select("doc_id").distinct())
+        key = ("deletes", listing)
+        if key not in self._df_cache:
+            self._df_cache[key] = read_artifact(
+                self.spark, self.deletes_path, list(listing)
+            ).select("doc_id").distinct()
+        return self._df_cache[key]
 
     def without_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join a (doc_id, ...) frame against the tombstones —
@@ -235,7 +274,7 @@ class InvertedIndex:
                 columns=["term", "term_id", "df", "cf"],
                 filter=ds.field("term").isin(pa.array(uniq, pa.string())),
             ).to_pandas()
-            pdf["idf"] = [bm25_idf(self.n_docs, int(d)) for d in pdf["df"]]
+            pdf["idf"] = bm25_idf(self.n_docs, pdf["df"].to_numpy())
             self._term_cache[key] = \
                 pdf.sort_values("term_id").reset_index(drop=True)
         return self._term_cache[key]
@@ -258,8 +297,10 @@ class InvertedIndex:
                     continue  # a file with no rows
                 if all(s is not None and s.has_min_max for s in st):
                     lo, hi = min(s.min for s in st), max(s.max for s in st)
-                else:
-                    lo, hi = -2**63, 2**63 - 1
+                else:  # no statistics: read the column itself
+                    mm = pc.min_max(pq.read_table(
+                        os.path.join(d, f), columns=["doc_id"])["doc_id"])
+                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
                 ranges.append((os.path.join(d, f), lo, hi))
             self._doc_meta_stored = frozenset(names)
             self._doc_meta_files = ranges  # published last (threads)
@@ -297,7 +338,7 @@ class InvertedIndex:
                     f"dictionary expansion for {key[1]!r} matches more "
                     f"than {limit} terms; narrow the pattern or raise "
                     "the expansion limit")
-            pdf["idf"] = [bm25_idf(self.n_docs, int(d)) for d in pdf["df"]]
+            pdf["idf"] = bm25_idf(self.n_docs, pdf["df"].to_numpy())
             self._term_cache[key] = pdf.reset_index(drop=True)
         return self._term_cache[key]
 

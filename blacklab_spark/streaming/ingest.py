@@ -44,10 +44,17 @@ def _delta_dirs(root: str) -> list[str]:
                   and os.path.exists(os.path.join(ddir, d, "_index_meta.json")))
 
 
-def _max_doc_id(spark: SparkSession, index_dir: str) -> int:
-    dm = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    row = dm.agg(F.max("doc_id").alias("m")).collect()[0]
-    return int(row["m"]) if row["m"] is not None else -1
+def _doc_id_base(spark: SparkSession, main_dir: str) -> int:
+    """One past the largest global doc id of main + its deltas: each
+    part's ids are local-dense and its recorded offset shifts them.
+    Read from the doc_meta footers' doc-id ranges, with no Spark job."""
+    from blacklab_spark.index import open_index
+    base = -1
+    for p in [main_dir] + _delta_dirs(main_dir):
+        idx = open_index(spark, p)
+        hi = max((h for _, _, h in idx._doc_meta_listing()), default=-1)
+        base = max(base, idx.meta.get("doc_id_offset", 0) + hi)
+    return base + 1
 
 
 def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
@@ -57,15 +64,7 @@ def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
     after the current maximum across main + existing deltas, so the
     global id space stays dense-ish and unique. Idempotent per
     ``delta_name`` (existing complete delta is left untouched)."""
-    parts = [main_dir] + _delta_dirs(main_dir)
-    # global id space: each part's ids are local-dense; its recorded
-    # offset shifts them. The next delta starts after the global max.
-    base = -1
-    for p in parts:
-        with open(os.path.join(p, "_index_meta.json")) as f:
-            off = json.load(f).get("doc_id_offset", 0)
-        base = max(base, off + _max_doc_id(spark, p))
-    base += 1
+    base = _doc_id_base(spark, main_dir)
     name = delta_name or f"delta{len(_delta_dirs(main_dir)):05d}"
     out = os.path.join(main_dir, "_deltas", name)
     if os.path.exists(os.path.join(out, "_index_meta.json")):
@@ -167,11 +166,10 @@ class DeltaSearchEngine:
         docs, filtered or not — unlike SearchEngine.topk, which sends
         unfiltered queries through WAND at any size) | wand |
         exhaustive (dual verification path)."""
-        from blacklab_spark.arrow_kernels import bm25_contrib
+        from blacklab_spark.arrow_kernels import bm25_contrib, bm25_idf
         from blacklab_spark.engine import (AUTO_EXHAUSTIVE_MAX_DOCS,
                                            SearchEngine)
         from blacklab_spark.operators.wand import parts_scores
-        from blacklab_spark.oracle import bm25_idf
         filt = SearchEngine._doc_filter(role, tool, conv_id)
         if mode == "auto":
             mode = ("exhaustive" if self.n_docs < AUTO_EXHAUSTIVE_MAX_DOCS
@@ -187,7 +185,7 @@ class DeltaSearchEngine:
         for p, off, info in zip(self.parts, self.offsets, infos):
             if info.empty:
                 continue
-            idf_map = {int(tid): bm25_idf(self.n_docs, df_by_term[t])
+            idf_map = {int(tid): float(bm25_idf(self.n_docs, df_by_term[t]))
                        for t, tid in zip(info["term"], info["term_id"])}
             imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
                                   for x in kv])

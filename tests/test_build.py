@@ -255,20 +255,27 @@ def test_resume_skips_artifact_stages(spark, tiny_pdf, tmp_path):
 def _assert_block_max_achieved(idx):
     """Every stored block ``max_score`` equals (bitwise) the max over
     the block's docs of ``bm25_contrib`` on its decoded tf and dl —
-    the bound block-max WAND relies on. idf as the build computes it
-    (one vectorized log over the df column)."""
+    the bound block-max WAND relies on — under the idf the query side
+    takes from ``lookup_terms``, which is bitwise the build's (one
+    vectorized log over the df column)."""
     from blacklab_spark.arrow_kernels import bm25_contrib
-    blocks = (idx.postings.join(idx.terms.select("term_id", "df"), "term_id")
-              .select("df", "tfs", "dls", "max_score").toPandas())
+    info = idx.lookup_terms([r["term"] for r in
+                             idx.terms.select("term").collect()])
+    dfv = info["df"].to_numpy(np.int64)
+    build_idf = np.log(1.0 + (idx.n_docs - dfv + 0.5) / (dfv + 0.5))
+    assert (info["idf"].to_numpy() == build_idf).all()
+    idf_of = dict(zip(info["term_id"], info["idf"]))
+    blocks = idx.postings.select("term_id", "tfs", "dls",
+                                 "max_score").toPandas()
     assert len(blocks)
-    dfv = blocks["df"].to_numpy(np.int64)
-    idf = np.log(1.0 + (idx.n_docs - dfv + 0.5) / (dfv + 0.5))
     cfg = idx.cfg
-    for i, (tfs, dls, want) in enumerate(zip(
-            blocks["tfs"], blocks["dls"], blocks["max_score"])):
+    for i, (tid, tfs, dls, want) in enumerate(zip(
+            blocks["term_id"], blocks["tfs"], blocks["dls"],
+            blocks["max_score"])):
         tf = codec.decode_varints(tfs).astype(np.float64)
         dl = codec.decode_varints(dls).astype(np.float64)
-        got = bm25_contrib(idf[i], tf, dl, cfg.k1, cfg.b, idx.avgdl).max()
+        got = bm25_contrib(idf_of[tid], tf, dl, cfg.k1, cfg.b,
+                           idx.avgdl).max()
         assert got == want, (i, got, want)
 
 
@@ -591,3 +598,127 @@ def test_stale_relations_artifact_not_served(spark, tiny_pdf,
     assert idx.doc_relations_stored is None
     assert not _os.path.isdir(_os.path.join(out, "_relations"))
     assert "relations" not in idx.meta["stages"]
+
+
+# ---- stage metrics scoped to the stage's own jobs -------------------
+
+def test_concurrent_job_does_not_skew_stage_shuffle_bytes(spark, tiny_pdf,
+                                                          tmp_path,
+                                                          monkeypatch):
+    """A shuffle job that another thread runs during the runs stage
+    must not land in that stage's recorded shuffle bytes."""
+    import threading
+
+    import blacklab_spark.build as build_mod
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
+    df = spark.createDataFrame(tiny_pdf)
+    solo = build_index(spark, df, str(tmp_path / "solo"), cfg)
+    other: dict = {}
+
+    def concurrent_shuffle():
+        other["n"] = spark.range(0, 200_000, numPartitions=4) \
+            .groupBy((F.col("id") % 1000).alias("k")).count().count()
+
+    real_spimi, real_finish = (build_mod._spimi_miniblocks,
+                               build_mod.IndexBuilder._finish_stage)
+
+    def spimi_with_concurrent_job(doc_meta, cfg):
+        other["thread"] = threading.Thread(target=concurrent_shuffle)
+        other["thread"].start()
+        return real_spimi(doc_meta, cfg)
+
+    def finish_after_concurrent_job(self, m, name, *args):
+        if name == "runs":
+            other["thread"].join(timeout=120)
+            assert not other["thread"].is_alive()
+        return real_finish(self, m, name, *args)
+
+    monkeypatch.setattr(build_mod, "_spimi_miniblocks",
+                        spimi_with_concurrent_job)
+    monkeypatch.setattr(build_mod.IndexBuilder, "_finish_stage",
+                        finish_after_concurrent_job)
+    busy = build_index(spark, df, str(tmp_path / "busy"), cfg)
+    assert other["n"] == 1000
+    for key in ("shuffle_write_bytes", "shuffle_read_bytes"):
+        assert busy["stages"]["runs"][key] == solo["stages"]["runs"][key]
+
+
+# ---- resume after a failure inside a stage --------------------------
+
+def _artifact_rows(spark, out):
+    """Decoded postings, terms and doc_meta rows and stats of an index:
+    what a resumed build must reproduce."""
+    idx = open_index(spark, out)
+    term_of = {r["term_id"]: r["term"] for r in idx.terms.collect()}
+    postings = set()
+    for r in idx.postings.collect():
+        docs = codec.decode_deltas(r["doc_ids"]).astype(int)
+        tfs = codec.decode_varints(r["tfs"]).astype(int)
+        dls = codec.decode_varints(r["dls"]).astype(int)
+        poss = codec.decode_positions(r["positions"], r["n_docs"])
+        for d, tf, dl, pos in zip(docs, tfs, dls, poss):
+            postings.add((term_of[r["term_id"]], int(d), int(tf), int(dl),
+                          tuple(pos.astype(int).tolist())))
+    return (postings, sorted(idx.terms.collect()),
+            sorted(idx.doc_meta.collect()), idx.meta["stats"])
+
+
+def test_resume_after_postings_kernel_failure(spark, tiny_pdf, tmp_path,
+                                              monkeypatch):
+    import blacklab_spark.build as build_mod
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
+    df = spark.createDataFrame(tiny_pdf)
+    clean = str(tmp_path / "clean")
+    build_index(spark, df, clean, cfg)
+
+    def failing_finalize(cfg, n_docs, avgdl):
+        def kernel(batches):
+            for _ in batches:
+                raise RuntimeError("injected postings kernel failure")
+            yield from ()
+        return kernel
+
+    out = str(tmp_path / "resumed")
+    monkeypatch.setattr(build_mod, "finalize_blocks_arrow",
+                        failing_finalize)
+    with pytest.raises(Exception, match="injected postings kernel"):
+        build_index(spark, df, out, cfg)
+    monkeypatch.undo()
+    with open(os.path.join(out, "_index_meta.json")) as f:
+        failed = json.load(f)
+    assert "postings" not in failed["stages"]
+    m = build_index(spark, df, out, cfg, resume=True)
+    for st in ("doc_meta", "runs", "terms"):
+        assert m["stages"][st] == failed["stages"][st]  # not re-run
+    assert _artifact_rows(spark, out) == _artifact_rows(spark, clean)
+
+
+def test_resume_reruns_doc_meta_when_stats_are_missing(spark, tiny_pdf,
+                                                       tmp_path,
+                                                       monkeypatch):
+    """Build stats are observed on the doc_meta write, so a manifest
+    with doc_meta done but no stats re-runs that stage."""
+    import blacklab_spark.build as build_mod
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
+    df = spark.createDataFrame(tiny_pdf)
+    out = str(tmp_path / "idx")
+    build_index(spark, df, out, cfg)
+    want = _artifact_rows(spark, out)
+    path = os.path.join(out, "_index_meta.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["stats"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    calls = []
+    real = build_mod.assign_doc_ids
+
+    def counted(*args):
+        calls.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(build_mod, "assign_doc_ids", counted)
+    m2 = build_index(spark, df, out, cfg, resume=True)
+    assert calls == [1]
+    assert m2["stats"] == want[3]
+    assert _artifact_rows(spark, out) == want

@@ -1,12 +1,17 @@
 """Spark jobs on the query path: exact-term lookups read the terms
 dictionary on the driver, a top-k attaches its winners' rows on the
 driver, and a BLS /hits page reads its KWIC and docInfos on the
-driver, so none pays a Spark job for work that small. Checked with
-the status store's job list for a job group of the test's own."""
+driver, so none pays a Spark job for work that small. Artifacts open
+with the schema stored in their footers, so opening one runs no
+schema-inference job, and a build or an append pays no job for its
+statistics or its doc-id base. Checked with the status store's job
+list for a job group of the test's own."""
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import uuid
 import warnings
 
@@ -17,7 +22,7 @@ from pyspark.sql import functions as F
 from blacklab_spark.build import build_index
 from blacklab_spark.config import BuildConfig
 from blacklab_spark.engine import SearchEngine
-from blacklab_spark.index import open_index
+from blacklab_spark.index import open_index, read_artifact
 from blacklab_spark.oracle import bm25_idf
 
 
@@ -91,8 +96,6 @@ def test_lookup_terms_runs_no_spark_job(spark, tiny_index_dir):
 
 def test_topk_runs_at_most_two_jobs(spark, tiny_index_dir):
     eng = SearchEngine.open(spark, tiny_index_dir)
-    # a handle's first query also pays the postings schema read
-    eng.topk("good", k=3).collect()
     rows, n = _jobs(spark,
                     lambda: eng.topk("visa application", k=5).collect())
     assert len(rows) == 5 and n <= 2
@@ -126,8 +129,6 @@ def test_hits_page_runs_at_most_four_jobs(spark, tiny_index_dir, patt):
     hit and doc counts; KWIC and docInfos read on the driver."""
     from blacklab_spark.server import BlsApp
     eng = SearchEngine.open(spark, tiny_index_dir)
-    # a handle's first query also pays the postings schema read
-    eng.find('"good"').count()
     app = BlsApp(eng, corpus="t")
     q = {"patt": [patt], "number": ["20"]}
     (st, _, body), n = _jobs(
@@ -168,3 +169,168 @@ def test_hits_page_repeat_with_cache_runs_only_the_window(
                         lambda: window_hits(hits, 0, 20).collect())
     assert json.loads(again) == json.loads(first)
     assert n_again == n_window < n_first
+
+
+# ---- artifacts open with their stored schema -----------------------
+
+@pytest.fixture(scope="module")
+def deleted_index_dir(spark, tiny_index_dir, tmp_path_factory):
+    """A copy of the tiny index with one conversation tombstoned."""
+    from blacklab_spark.delete import delete_docs
+    out = str(tmp_path_factory.mktemp("idx") / "tiny_deleted")
+    shutil.copytree(tiny_index_dir, out)
+    conv = open_index(spark, out).doc_meta.first()["conv_id"]
+    assert delete_docs(open_index(spark, out), f"conv_id = '{conv}'") > 0
+    return out
+
+
+def test_fresh_handle_opens_artifacts_without_a_job(spark,
+                                                    deleted_index_dir):
+    idx = open_index(spark, deleted_index_dir)
+    _, n = _jobs(spark, lambda: (idx.terms, idx.doc_meta, idx.postings,
+                                 idx.deleted_doc_ids))
+    assert n == 0
+    # memoized per tombstone listing, like doc_meta
+    assert idx.deleted_doc_ids is idx.deleted_doc_ids
+
+
+def test_deleted_doc_ids_follow_the_tombstone_listing(spark,
+                                                      deleted_index_dir,
+                                                      tmp_path):
+    from blacklab_spark.delete import delete_docs
+    out = str(tmp_path / "idx")
+    shutil.copytree(deleted_index_dir, out)
+    idx = open_index(spark, out)
+    first = idx.deleted_doc_ids
+    before = {r["doc_id"] for r in first.collect()}
+    spark_read = {r["doc_id"] for r in spark.read.parquet(
+        idx.deletes_path).collect()}
+    assert before == spark_read and before
+    live = idx.doc_meta.filter(~F.col("doc_id").isin(list(before)))
+    victim = live.first()["doc_id"]
+    assert delete_docs(idx, f"doc_id = {victim}") == 1
+    after = idx.deleted_doc_ids
+    assert after is not first
+    assert {r["doc_id"] for r in after.collect()} == before | {victim}
+
+
+@pytest.mark.parametrize("art", ["terms", "doc_meta", "postings"])
+def test_read_artifact_uses_stored_schema(spark, tiny_index_dir, art):
+    path = os.path.join(tiny_index_dir, art)
+    got, n = _jobs(spark, lambda: read_artifact(spark, path))
+    want = spark.read.parquet(path)
+    assert n == 0
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_read_artifact_equals_spark_read_on_pyarrow_dir(spark,
+                                                        tiny_index_dir,
+                                                        tmp_path):
+    """A dir with no Spark-written file reads with inference; one
+    rewritten by pyarrow minus a column keeps Spark's stored schema in
+    its footer, which inference returns as well. Either way the read
+    equals ``spark.read.parquet``."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    src = ds.dataset(os.path.join(tiny_index_dir, "doc_meta"),
+                     format="parquet").to_table().drop(["tokens"])
+    for name, table in (("plain", src.replace_schema_metadata(None)),
+                        ("stale_key", src)):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(table, str(d / "part-0.parquet"),
+                       coerce_timestamps="us")
+        got, want = read_artifact(spark, str(d)), spark.read.parquet(str(d))
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+# ---- build and append: statistics and id base without a job ---------
+
+def test_append_delta_id_base_runs_no_job(spark, tiny_pdf, tiny_index_dir,
+                                          tmp_path):
+    from blacklab_spark.streaming.ingest import _doc_id_base, append_delta
+    main = str(tmp_path / "main")
+    shutil.copytree(tiny_index_dir, main)
+    convs = sorted(tiny_pdf["conv_id"].unique())
+    batch = tiny_pdf[tiny_pdf["conv_id"] == convs[0]]
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
+    append_delta(spark, main, spark.createDataFrame(batch), cfg)
+    base, n = _jobs(spark, lambda: _doc_id_base(spark, main))
+    assert n == 0
+    # what the Spark aggregate over every part's doc_meta gives
+    want = -1
+    for p in [main] + [os.path.join(main, "_deltas", d)
+                       for d in os.listdir(os.path.join(main, "_deltas"))]:
+        with open(os.path.join(p, "_index_meta.json")) as f:
+            off = json.load(f).get("doc_id_offset", 0)
+        top = spark.read.parquet(os.path.join(p, "doc_meta")) \
+            .agg(F.max("doc_id")).collect()[0][0]
+        want = max(want, off + top)
+    assert base == want + 1 == len(tiny_pdf) + len(batch)
+
+
+# Spark jobs of a warm build of the tiny corpus: the build's fixed
+# per-call cost, pinned so that a change to it is seen.
+TINY_BUILD_JOBS = 16
+
+
+def test_warm_tiny_build_job_count(spark, tiny_pdf, tmp_path):
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=4)
+    df = spark.createDataFrame(tiny_pdf)
+    build_index(spark, df, str(tmp_path / "warm"), cfg)
+    _, n = _jobs(spark, lambda: build_index(spark, df,
+                                            str(tmp_path / "idx"), cfg))
+    assert n == TINY_BUILD_JOBS
+
+
+_CONLLU = """\
+# newdoc id = conv-a
+# sent_id = a-1
+1\tThe\tthe\tDET\tDT\t_\t2\tdet\t_\t_
+2\tVisa\tvisa\tNOUN\tNN\t_\t0\troot\t_\t_
+
+# sent_id = a-2
+1\tApproved\tapprove\tVERB\tVBN\t_\t0\troot\t_\t_
+"""
+
+
+def _fixture_frames(spark, tiny_pdf, tmp_path):
+    from blacklab_spark.sources.files import read_conllu
+    from blacklab_spark.sources.transcripts import (TRANSCRIPT_SCHEMA,
+                                                    gen_tagged_pandas)
+    conllu = tmp_path / "conllu"
+    conllu.mkdir()
+    (conllu / "conv-a.conllu").write_text(_CONLLU)
+    gapped = tiny_pdf.copy()
+    gapped["turn_idx"] = gapped["turn_idx"] * 2  # assign_dense_ids path
+    small = dict(block_size=8, bucket_size=16, num_partitions=2)
+    return {
+        "tags": (spark.createDataFrame(gen_tagged_pandas(seed=42),
+                                       schema=TRANSCRIPT_SCHEMA),
+                 BuildConfig(tags=True, **small)),
+        "conllu": (read_conllu(spark, str(conllu)),
+                   BuildConfig(num_partitions=4)),
+        "synonyms": (spark.createDataFrame(tiny_pdf),
+                     BuildConfig(synonyms={"visa": ["the", "permit"]},
+                                 **small)),
+        "dense_ids_fallback": (spark.createDataFrame(gapped),
+                               BuildConfig(**small)),
+    }
+
+
+@pytest.mark.parametrize("name", ["tags", "conllu", "synonyms",
+                                  "dense_ids_fallback"])
+def test_observed_stats_equal_doc_meta_aggregate(spark, tiny_pdf, tmp_path,
+                                                 name):
+    df, cfg = _fixture_frames(spark, tiny_pdf, tmp_path)[name]
+    out = str(tmp_path / "idx")
+    m = build_index(spark, df, out, cfg)
+    agg = spark.read.parquet(os.path.join(out, "doc_meta")).agg(
+        F.count("*").alias("n"), F.sum("n_tokens").alias("tot")).first()
+    n_docs, total = int(agg["n"]), int(agg["tot"] or 0)
+    assert m["stats"] == {"n_docs": n_docs, "total_tokens": total,
+                          "avgdl": total / max(1, n_docs)}
+    with open(os.path.join(out, "_index_meta.json")) as f:
+        assert json.load(f)["stats"] == m["stats"]
