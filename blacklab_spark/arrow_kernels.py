@@ -25,7 +25,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from blacklab_spark import codec
-from blacklab_spark.config import BuildConfig
+from blacklab_spark.config import B, K1, BuildConfig
 
 _ZCF = dict(zero_copy_only=False)
 
@@ -49,7 +49,7 @@ def _binary_col(offsets: np.ndarray, data: bytes | np.ndarray,
                          pa.py_buffer(buf)])
 
 
-def bm25_contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
+def bm25_contrib(idf, tf, dl, avgdl: float):
     """Okapi BM25 contribution of one term to one doc — the engine's
     ONE copy of the expression: the build's block ``max_score`` and
     the query's per-bucket scorer both call it, so a block max is
@@ -57,7 +57,7 @@ def bm25_contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
     bound). Plain arithmetic, so it also takes Spark Columns (the
     delta engine's dl-free ``max_tf`` bound passes ``dl=0``). The
     shape matches ``oracle.bm25_score``, the independent referee."""
-    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    return idf * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 def bm25_idf(n_docs, df):
@@ -265,44 +265,20 @@ def spimi_miniblocks(cfg: BuildConfig):
 # --------------------------------------------------------------------
 # Stage-4 finalize: mini-blocks (already encoded, shuffled to
 # (term_id, bucket) partitions, sorted by (term_id, bucket, first_doc))
-# → final BLOCK_SCHEMA rows. Adds term_id-keyed block_id numbering and
-# the per-block max BM25 score (decodes the concatenated tf/dl varint
-# streams once per batch — vectorized, no per-block work). Only
-# counters are carried across Arrow batches: blocks never merge, so a
-# group split across batches just continues its block_id numbering.
+# → final BLOCK_SCHEMA rows with the per-block max BM25 score (decodes
+# the concatenated tf/dl varint streams once per batch — vectorized,
+# no per-block work). Blocks never merge, so no state crosses batches.
 # --------------------------------------------------------------------
-def finalize_blocks_arrow(cfg: BuildConfig, n_docs: int, avgdl: float):
-    k1, b = cfg.k1, cfg.b
-
+def finalize_blocks_arrow(n_docs: int, avgdl: float):
     def gen(batches):
-        prev_tid = prev_bkt = None
-        prev_next_id = 0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             names = batch.schema.names
             col = {n: batch.column(i) for i, n in enumerate(names)}
-            tid = col["term_id"].to_numpy(**_ZCF).astype(np.int64)
-            bkt = col["bucket"].to_numpy(**_ZCF).astype(np.int64)
             nd = col["n_docs"].to_numpy(**_ZCF).astype(np.int64)
             dfv = col["df"].to_numpy(**_ZCF).astype(np.int64)
             mtf = col["max_tf"].to_numpy(**_ZCF).astype(np.int32)
-            n = tid.size
-
-            # block_id: cumcount within (term_id, bucket), continued
-            # from the previous batch when the group spans batches
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (tid[1:] != tid[:-1]) | (bkt[1:] != bkt[:-1])
-            gidx = np.cumsum(change) - 1
-            g_start = np.nonzero(change)[0]
-            block_id = (np.arange(n) - g_start[gidx]).astype(np.int32)
-            if (prev_tid is not None and tid[0] == prev_tid
-                    and bkt[0] == prev_bkt):
-                first_len = g_start[1] if g_start.size > 1 else n
-                block_id[:first_len] += prev_next_id
-            prev_tid, prev_bkt = int(tid[-1]), int(bkt[-1])
-            prev_next_id = int(block_id[-1]) + 1
 
             # max_score: decode the batch's concatenated tf/dl streams
             _, tf_data = binary_views(col["tfs"])
@@ -315,17 +291,16 @@ def finalize_blocks_arrow(cfg: BuildConfig, n_docs: int, avgdl: float):
             # block max is bit-identically *achieved* by some doc —
             # the WAND threshold bound depends on that
             contrib = bm25_contrib(np.repeat(idf, nd), tf_vals, dl_vals,
-                                   k1, b, avgdl)
+                                   avgdl)
             max_score = np.maximum.reduceat(contrib, v_starts)
 
             yield pa.RecordBatch.from_arrays([
                 col["term_id"], col["bucket"],
-                pa.array(block_id, type=pa.int32()),
                 col["n_docs"].cast(pa.int32()),
                 col["doc_ids"], col["tfs"], col["dls"], col["positions"],
                 pa.array(mtf, type=pa.int32()),
                 pa.array(max_score.astype(np.float64), type=pa.float64()),
-            ], names=["term_id", "bucket", "block_id", "n_docs", "doc_ids",
+            ], names=["term_id", "bucket", "n_docs", "doc_ids",
                       "tfs", "dls", "positions", "max_tf", "max_score"])
 
     return gen

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F, types as T
 
 from blacklab_spark import codec
 from blacklab_spark.arrow_kernels import finalize_blocks_arrow, spimi_miniblocks
-from blacklab_spark.config import BuildConfig
+from blacklab_spark.config import INDEX_FORMAT_VERSION, BuildConfig
 from blacklab_spark.index import read_artifact
 from blacklab_spark.tokenizer import tokens_insensitive
 
@@ -77,7 +77,6 @@ MINIBLOCK_SCHEMA = T.StructType([
 BLOCK_SCHEMA = T.StructType([
     T.StructField("term_id", T.LongType(), False),
     T.StructField("bucket", T.LongType(), False),
-    T.StructField("block_id", T.IntegerType(), False),
     T.StructField("n_docs", T.IntegerType(), False),
     T.StructField("doc_ids", T.BinaryType(), False),
     T.StructField("tfs", T.BinaryType(), False),
@@ -243,6 +242,19 @@ def assign_doc_ids(df: DataFrame, num_partitions: int):
     return out, stats
 
 
+# Terms-dictionary dense-id fast path: vocabularies at or below this
+# row count take a single-task sort (one job, near-zero fixed floor)
+# instead of the generic range-partition scheme (a sampling job + a
+# count job + a window join — measured as the build's worst-scaling
+# stage, 0.57 efficiency at 1→4 cores, because its ~2s serial floor
+# doesn't parallelize). The reference holds the ENTIRE dictionary in
+# memory per index (TermsIntegrated.java), so a bounded single-task
+# dictionary sort is faithful to it; corpora whose vocabulary exceeds
+# the bound (web-scale mixed text) fall back to the fully-distributed
+# scheme automatically.
+TERMS_SINGLE_PARTITION_MAX = 4_000_000
+
+
 def normalized_synonyms(synonyms: dict) -> dict:
     """Fold a BuildConfig.synonyms map into the @i layer's value
     space (fold∘lower — the layer the injection matches and stores
@@ -320,7 +332,7 @@ class IndexBuilder:
         if os.path.exists(self.manifest_path):
             with open(self.manifest_path) as f:
                 return json.load(f)
-        return {"format_version": self.cfg.format_version,
+        return {"format_version": INDEX_FORMAT_VERSION,
                 "config": self.cfg.to_dict(), "stages": {}}
 
     def _save_manifest(self, m: dict) -> None:
@@ -474,7 +486,7 @@ class IndexBuilder:
         parts = cfg.num_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions"))
         m = self._load_manifest() if resume else {
-            "format_version": cfg.format_version, "config": cfg.to_dict(),
+            "format_version": INDEX_FORMAT_VERSION, "config": cfg.to_dict(),
             "stages": {}}
 
         # Stage 1: doc_meta = ids + tokens + text (forward index+content store)
@@ -622,7 +634,7 @@ class IndexBuilder:
 
         # Stage 3: terms dictionary with dense ids (sorted by term).
         # The distinct terms never outnumber the runs rows, so a count
-        # only runs when those exceed terms_single_partition_max. On
+        # only runs when those exceed TERMS_SINGLE_PARTITION_MAX. On
         # that path the aggregate is persisted BEFORE any id scheme
         # runs: the generic scheme's range-boundary sampling job used
         # to execute the full groupBy a second time (the stage's
@@ -635,14 +647,14 @@ class IndexBuilder:
                          .agg(F.sum("n_docs").alias("df"),
                               F.sum("sum_tf").alias("cf")))
             single = (m["stages"]["runs"]["rows"]
-                      <= cfg.terms_single_partition_max)
+                      <= TERMS_SINGLE_PARTITION_MAX)
             t_cached = None
             with stage_jobs(self.spark) as tag:
                 try:
                     if not single:
                         terms_agg = terms_agg.persist()
                         single = (terms_agg.count()
-                                  <= cfg.terms_single_partition_max)
+                                  <= TERMS_SINGLE_PARTITION_MAX)
                     if single:
                         # bounded dictionary (the common case — the
                         # reference holds the whole dictionary in
@@ -674,9 +686,9 @@ class IndexBuilder:
         terms = read_artifact(self.spark, terms_path)
 
         # Stage 4: shuffle merge of mini-blocks per (term_id, bucket):
-        # assign term ids, renumber block ids, add per-block max BM25
-        # score (df is only known after the terms stage — that is why
-        # max_score cannot be computed in SPIMI).
+        # assign term ids and add the per-block max BM25 score (df is
+        # only known after the terms stage — that is why max_score
+        # cannot be computed in SPIMI).
         postings_path = os.path.join(self.out, "postings")
         if not (resume and self._stage_done(m, "postings")):
             t0 = time.time()
@@ -690,7 +702,7 @@ class IndexBuilder:
                       .sortWithinPartitions("term_id", "bucket", "first_doc")
                       .select("term_id", "bucket", "n_docs", "df", "max_tf",
                               "doc_ids", "tfs", "dls", "positions")
-                      .mapInArrow(finalize_blocks_arrow(cfg, n_docs, avgdl),
+                      .mapInArrow(finalize_blocks_arrow(n_docs, avgdl),
                                   BLOCK_SCHEMA))
             # kernel output preserves the (term_id, bucket, doc_id)
             # sort of its input partition → each file is a sorted run

@@ -10,7 +10,7 @@ bakes them in; ``index_meta.json`` records them.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 
 # Okapi BM25 parameters (Lucene defaults) — frozen.
 K1: float = 1.2
@@ -79,8 +79,6 @@ class BuildConfig:
     one reducer (SURVEY.md §7 P3 skew handling).
     """
 
-    k1: float = K1
-    b: float = B
     # Max docs per posting block (per term within a bucket).
     block_size: int = 128
     # Docs per range bucket. 8192 ⇒ ~122M buckets at 10^12 turns;
@@ -120,19 +118,10 @@ class BuildConfig:
     # Number of partitions for doc-id assignment / posting shuffle.
     # None → spark.sql.shuffle.partitions.
     num_partitions: int | None = None
-    # Terms-dictionary dense-id fast path: vocabularies at or below
-    # this row count take a single-task sort (one job, near-zero fixed
-    # floor) instead of the generic range-partition scheme (a sampling
-    # job + a count job + a window join — measured as the build's
-    # worst-scaling stage, 0.57 efficiency at 1→4 cores, because its
-    # ~2s serial floor doesn't parallelize). The reference holds the
-    # ENTIRE dictionary in memory per index (TermsIntegrated.java), so
-    # a bounded single-task dictionary sort is faithful to it; corpora
-    # whose vocabulary exceeds the bound (web-scale mixed text) fall
-    # back to the fully-distributed scheme automatically.
-    terms_single_partition_max: int = 4_000_000
-    tokenizer_version: str = TOKENIZER_VERSION
-    format_version: int = INDEX_FORMAT_VERSION
 
     def to_dict(self) -> dict:
-        return asdict(self)
+        """The manifest's ``config``: the settable fields plus the
+        frozen constants, so a reader can detect a mismatch."""
+        return {"k1": K1, "b": B, **asdict(self),
+                "tokenizer_version": TOKENIZER_VERSION,
+                "format_version": INDEX_FORMAT_VERSION}

@@ -7,27 +7,31 @@ matching doc_ids to ``<index>/_deletes/`` (idempotent — re-deleting is
 a no-op on results); every query path anti-joins the tombstones so
 deleted docs are invisible, while corpus statistics (df/idf/avgdl/N)
 stay stale until ``compact`` rebuilds the index from the surviving
-docs (≙ Lucene segment merge expunging deletes). ``compact`` output is
-identical to a fresh build of the surviving corpus — dense doc ids
-reassigned by (conv_id, turn_idx), postings bit-identical (tested).
+docs (≙ Lucene segment merge expunging deletes).
 
-Scope: tombstones apply to ONE index directory. A streaming
+Tombstones apply to ONE index directory: a streaming
 DeltaSearchEngine (streaming/ingest.py) merges several part-indexes,
-each with its own ``_deletes``; delete against the part that holds the
-doc, or compact the merged view. Deleting from the base part is the
-common case (retract old data while deltas append).
+each with its own ``_deletes``, so delete against the part that holds
+the doc. ``compact`` is the one merge of an index, its tombstones and
+its deltas: its output equals a fresh build of the surviving docs of
+every part — dense doc ids reassigned by (conv_id, turn_idx), terms,
+postings, doc_meta, span and relation layers and the manifest config
+identical (tested for plain, tags and CoNLL-U corpora).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, SparkSession, functions as F
 
 from blacklab_spark.config import BuildConfig
 from blacklab_spark.index import InvertedIndex, open_index
 
 SOURCE_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+# doc_meta columns that are build INPUT when stored: pre-annotated
+# layers and the parallel field b
+PRE_LAYERS = ["tokens_s", "tokens_pos", "tokens_lemma", "tokens_b"]
 
 
 def delete_docs(index: InvertedIndex, condition: Column | str) -> int:
@@ -45,64 +49,69 @@ def delete_docs(index: InvertedIndex, condition: Column | str) -> int:
 
 def compact(spark: SparkSession, index_dir: str, out_dir: str,
             cfg: BuildConfig | None = None) -> InvertedIndex:
-    """Rebuild the index from surviving docs — expunges tombstones and
-    refreshes all statistics (≙ Lucene forceMerge after deletes). The
-    source columns round-trip through doc_meta (the content store), so
-    no original input table is needed."""
+    """Rebuild the index and every ``_deltas/*`` part from their
+    surviving docs into one fresh index — expunges tombstones, merges
+    deltas and refreshes all statistics (≙ Lucene forceMerge). The
+    source round-trips through each part's tombstone-filtered doc_meta
+    (the content store), so no original input table is needed:
+
+    * pre-annotated layers (sources/files.read_conllu) and the
+      parallel field ``tokens_b`` ride along when a part STORES them
+      (``doc_meta_stored``; the derived layers of a plain index are
+      not input), so the rebuild stays pre-tokenized; a part that
+      does not store such a layer gives its derived one (an empty
+      main index under uploaded CoNLL-U deltas, say);
+    * a tags part re-ingests its original markup (``text_raw``) as
+      ``text``, so the ``_spans`` stage re-derives the tag layer;
+    * ``cfg`` defaults to the main index's config;
+    * stored edge artifacts are carried across (_carry_edge_artifact).
+    """
     from blacklab_spark.build import build_index
-    idx = open_index(spark, index_dir)
-    # pre-annotated indexes (sources/files.read_conllu): carry the
-    # stored layer arrays through the rebuild so it stays
-    # pre-tokenized instead of re-tokenizing the reconstructed text;
-    # tokens_b (parallel field) is a stored column and rides the
-    # same way
-    pre = [c for c in ("tokens_s", "tokens_pos", "tokens_lemma",
-                       "tokens_b")
-           if c in idx.doc_meta.columns]
-    src = idx.doc_meta.select(*SOURCE_COLUMNS, *pre)
-    if getattr(idx.cfg, "tags", False):
-        # tags index: doc_meta.text is the STRIPPED text; the rebuild
-        # must re-ingest the original markup (text_raw) so the new
-        # _spans stage re-derives the tag layer.
-        src = (idx.doc_meta
-               .select(*[c for c in SOURCE_COLUMNS if c != "text"],
-                       F.col("text_raw").alias("text")))
-    build_index(spark, src, out_dir, cfg or idx.cfg)
-    # Stored edge artifacts are NOT derivable from doc_meta (the
-    # HEAD/DEPREL / align_pairs inputs aren't stored columns), so
-    # carry the surviving edges across with doc ids remapped through
-    # the natural key — without this a compaction silently dropped
-    # the real relation/alignment layers.
-    for stored, stage, dirname in (
-            (idx.doc_relations_stored, "relations", "_relations"),
-            (idx.doc_alignments_stored, "alignments", "_alignments")):
-        if stored is not None:
-            _carry_edge_artifact(spark, idx, stored, out_dir, stage,
-                                 dirname)
+    from blacklab_spark.streaming.ingest import part_dirs
+    parts = [open_index(spark, p) for p in part_dirs(index_dir)]
+    layers = [c for c in PRE_LAYERS
+              if any(c in p.doc_meta_stored for p in parts)]
+    src = None
+    for p in parts:
+        text = F.col("text_raw" if p.cfg.tags else "text").alias("text")
+        rows = p.doc_meta.select(*[text if c == "text" else c
+                                   for c in SOURCE_COLUMNS], *layers)
+        src = rows if src is None else src.unionByName(rows)
+    build_index(spark, src, out_dir, cfg or parts[0].cfg)
+    for stage, dirname in (("relations", "_relations"),
+                           ("alignments", "_alignments")):
+        _carry_edge_artifact(spark, parts, out_dir, stage, dirname)
     return open_index(spark, out_dir)
 
 
-def _carry_edge_artifact(spark: SparkSession, old: InvertedIndex,
-                         edges: DataFrame, out_dir: str, stage: str,
-                         dirname: str) -> None:
-    """Rewrite a stored edge artifact against the compacted index's
-    dense doc ids: old doc_id → (conv_id, turn_idx) → new doc_id.
-    ``edges`` is already tombstone-filtered, and tombstoned docs have
-    no row in the new doc_meta, so deleted docs' edges drop out of
-    the joins either way. Records the stage in the new manifest so
-    the manifest-gated accessor serves it."""
+def _carry_edge_artifact(spark: SparkSession, parts: list[InvertedIndex],
+                         out_dir: str, stage: str, dirname: str) -> None:
+    """Stored edge artifacts are NOT derivable from doc_meta (the
+    HEAD/DEPREL and align_pairs inputs aren't stored columns), so the
+    surviving edges of every part are rewritten against the compacted
+    index's dense doc ids: part doc_id → (conv_id, turn_idx) → new
+    doc_id, written once. Each part's edges are already
+    tombstone-filtered. Records the stage in the new manifest so the
+    manifest-gated accessor serves it."""
     import time as _time
     from blacklab_spark.build import IndexBuilder, stage_jobs
+    keyed = None
+    for p in parts:
+        edges = p._stored_artifact(stage, dirname)
+        if edges is None:
+            continue
+        cols = [c for c in edges.columns if c != "doc_id"]
+        rows = edges.join(p.doc_meta.select("doc_id", "conv_id",
+                                            "turn_idx"), "doc_id") \
+            .drop("doc_id")
+        keyed = rows if keyed is None else keyed.unionByName(rows)
+    if keyed is None:
+        return
     new = open_index(spark, out_dir)
     t0 = _time.time()
-    old_map = old.doc_meta.select(F.col("doc_id").alias("_old_id"),
-                                  "conv_id", "turn_idx")
-    new_map = new.doc_meta.select("doc_id", "conv_id", "turn_idx")
-    cols = [c for c in edges.columns if c != "doc_id"]
-    remapped = (edges.withColumnRenamed("doc_id", "_old_id")
-                .join(old_map, "_old_id")
-                .join(new_map, ["conv_id", "turn_idx"])
-                .select("doc_id", *cols))
+    remapped = keyed.join(new.doc_meta.select("doc_id", "conv_id",
+                                              "turn_idx"),
+                          ["conv_id", "turn_idx"]).select("doc_id", *cols)
     path = os.path.join(out_dir.rstrip("/"), dirname)
     with stage_jobs(spark) as tag:
         remapped.write.mode("overwrite") \

@@ -43,6 +43,9 @@ from blacklab_spark.tokenizer import py_tokens_insensitive
 # the same size for its own rule.
 AUTO_EXHAUSTIVE_MAX_DOCS = 1_000_000
 
+# Plan handles kept per engine (SearchEngine._plan_cache, an LRU).
+PLAN_CACHE_SIZE = 64
+
 
 class SearchEngine:
     """``topk`` runs its jobs inside the call and returns a driver-built
@@ -54,7 +57,7 @@ class SearchEngine:
 
     def __init__(self, index: InvertedIndex,
                  settings: SearchSettings | None = None,
-                 cache_size: int = 0, plan_cache_size: int = 64):
+                 cache_size: int = 0):
         self.index = index
         self.spark = index.spark
         self.settings = settings or SearchSettings()
@@ -66,7 +69,7 @@ class SearchEngine:
         # deterministic in (query, immutable index artifacts), and the
         # key embeds the tombstone listing so deletes refresh it. The
         # LRU bound also bounds the shuffle files held lineages pin.
-        self._plan_cache = ResultCache(plan_cache_size)
+        self._plan_cache = ResultCache(PLAN_CACHE_SIZE)
 
     @classmethod
     def open(cls, spark: SparkSession, path: str,

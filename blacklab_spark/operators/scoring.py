@@ -53,7 +53,7 @@ TOPK_SCHEMA = T.StructType([
 
 
 def score_bucket(blocks_pdf: pd.DataFrame, idf_by_term: dict[int, float],
-                 k1: float, b: float, avgdl: float,
+                 avgdl: float,
                  local_k: int | None = None,
                  allowed: np.ndarray | None = None) -> pd.DataFrame:
     """One doc-range bucket's blocks → exact (doc_id, score): decode,
@@ -76,7 +76,7 @@ def score_bucket(blocks_pdf: pd.DataFrame, idf_by_term: dict[int, float],
         docs_out.append(doc)
         tids_out.append(np.full(doc.size, int(term_id), dtype=np.int64))
         contribs_out.append(bm25_contrib(idf_by_term[int(term_id)], tf, dl,
-                                         k1, b, avgdl))
+                                         avgdl))
     d = np.concatenate(docs_out) if docs_out else np.empty(0, np.int64)
     if d.size == 0:
         return pd.DataFrame({"doc_id": d, "score": np.empty(0, np.float64)})
@@ -97,7 +97,7 @@ def score_bucket(blocks_pdf: pd.DataFrame, idf_by_term: dict[int, float],
 
 
 def score_buckets(blocks: DataFrame, idf_by_term: dict[int, float],
-                  k1: float, b: float, avgdl: float,
+                  avgdl: float,
                   local_k: int | None = None,
                   allowed: DataFrame | None = None) -> DataFrame:
     """(doc_id, score) of every doc in ``blocks``, one
@@ -109,12 +109,11 @@ def score_buckets(blocks: DataFrame, idf_by_term: dict[int, float],
                .groupBy("bucket"))
     if allowed is None:
         return grouped.applyInPandas(
-            lambda key, pdf: score_bucket(pdf, idf_by_term, k1, b, avgdl,
-                                          local_k),
+            lambda key, pdf: score_bucket(pdf, idf_by_term, avgdl, local_k),
             SCORE_SCHEMA)
     return grouped.cogroup(allowed.groupBy("bucket")).applyInPandas(
         lambda key, pdf, apdf: score_bucket(
-            pdf, idf_by_term, k1, b, avgdl, local_k,
+            pdf, idf_by_term, avgdl, local_k,
             np.sort(apdf["doc_id"].to_numpy(np.int64))),
         SCORE_SCHEMA)
 
@@ -128,8 +127,8 @@ def doc_scores(index: InvertedIndex, terms: list[str],
         return spark.createDataFrame([], "doc_id long, score double")
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
     blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
-    scores = index.without_deleted(score_buckets(
-        blocks, idf_map, index.cfg.k1, index.cfg.b, index.avgdl))
+    scores = index.without_deleted(
+        score_buckets(blocks, idf_map, index.avgdl))
     if doc_filter is not None:
         allowed = index.doc_meta.filter(doc_filter).select("doc_id")
         scores = scores.join(allowed, "doc_id", "left_semi")

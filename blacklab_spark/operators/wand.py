@@ -144,8 +144,7 @@ def wand_scores(index: InvertedIndex, terms: list[str],
         seed = int(info["df"].sum()) >= WAND_SEED_MIN_POSTINGS
     t0 = _seed_threshold(blocks, k) if seed else 0.0
     pruned = prune_buckets(blocks, t0, F.col("max_score"), len(idf_map) == 1)
-    return score_buckets(pruned, idf_map, index.cfg.k1, index.cfg.b,
-                         index.avgdl, local_k=k)
+    return score_buckets(pruned, idf_map, index.avgdl, local_k=k)
 
 
 def prune_buckets(blocks: DataFrame, t0: float, ub: Column,
@@ -221,9 +220,8 @@ def parts_scores(parts: list[tuple], k: int, doc_filter: Column | None,
         """Union of every part's scores over ``cut(blocks, ub, idf_map)``."""
         out = None
         for index, off, idf_map, avgdl, ub, blocks, allowed in planned:
-            s = score_buckets(cut(blocks, ub, idf_map), idf_map,
-                              index.cfg.k1, index.cfg.b, avgdl, local_k,
-                              allowed)
+            s = score_buckets(cut(blocks, ub, idf_map), idf_map, avgdl,
+                              local_k, allowed)
             if allowed is None:
                 s = index.without_deleted(s)
             if off:

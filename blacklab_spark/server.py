@@ -1365,7 +1365,8 @@ class BlsApp:
             raise BlsError(400, "NO_DATA_GIVEN", "request body required")
         import tempfile
 
-        from blacklab_spark.streaming.ingest import append_delta, compact
+        from blacklab_spark.delete import compact
+        from blacklab_spark.streaming.ingest import append_delta
         from blacklab_spark.sources.files import read_transcripts
         spark = self.engine.index.spark
         fmt = self._formats.get(self.corpus, "jsonl")

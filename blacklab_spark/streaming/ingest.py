@@ -13,8 +13,9 @@ re-expression of "append a segment, merge later":
   per-delta and combined (BM25 global stats are recomputed from the
   union's terms tables at open time, so scores equal a from-scratch
   build's — verified in tests).
-* ``compact`` — offline merge of main + deltas into a fresh index
-  (≙ Lucene segment merge), after which deltas are dropped.
+* ``delete.compact`` — offline merge of main + deltas (minus their
+  tombstones) into a fresh index (≙ Lucene segment merge); the
+  compacted index equals a one-shot build of the surviving docs.
 * ``stream_ingest`` — Structured Streaming front door:
   ``readStream`` over a directory of transcript parquet,
   ``foreachBatch`` → ``append_delta``. Watermarking is not needed for
@@ -32,25 +33,26 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from blacklab_spark.build import build_index
 from blacklab_spark.config import BuildConfig
+from blacklab_spark.index import open_index
 from blacklab_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
-def _delta_dirs(root: str) -> list[str]:
-    ddir = os.path.join(root, "_deltas")
+def part_dirs(main_dir: str) -> list[str]:
+    """``main_dir`` and its complete ``_deltas/*`` parts, in order."""
+    ddir = os.path.join(main_dir, "_deltas")
     if not os.path.isdir(ddir):
-        return []
-    return sorted(os.path.join(ddir, d) for d in os.listdir(ddir)
-                  if os.path.isdir(os.path.join(ddir, d))
-                  and os.path.exists(os.path.join(ddir, d, "_index_meta.json")))
+        return [main_dir]
+    return [main_dir] + sorted(
+        os.path.join(ddir, d) for d in os.listdir(ddir)
+        if os.path.exists(os.path.join(ddir, d, "_index_meta.json")))
 
 
 def _doc_id_base(spark: SparkSession, main_dir: str) -> int:
     """One past the largest global doc id of main + its deltas: each
     part's ids are local-dense and its recorded offset shifts them.
     Read from the doc_meta footers' doc-id ranges, with no Spark job."""
-    from blacklab_spark.index import open_index
     base = -1
-    for p in [main_dir] + _delta_dirs(main_dir):
+    for p in part_dirs(main_dir):
         idx = open_index(spark, p)
         hi = max((h for _, _, h in idx._doc_meta_listing()), default=-1)
         base = max(base, idx.meta.get("doc_id_offset", 0) + hi)
@@ -62,14 +64,16 @@ def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
                  delta_name: str | None = None) -> str:
     """Index ``batch`` as a delta of ``main_dir``. Doc ids continue
     after the current maximum across main + existing deltas, so the
-    global id space stays dense-ish and unique. Idempotent per
-    ``delta_name`` (existing complete delta is left untouched)."""
+    global id space stays dense-ish and unique. ``cfg`` defaults to
+    the main index's, so the delta stores the layers its compaction
+    reads. Idempotent per ``delta_name`` (existing complete delta is
+    left untouched)."""
     base = _doc_id_base(spark, main_dir)
-    name = delta_name or f"delta{len(_delta_dirs(main_dir)):05d}"
+    name = delta_name or f"delta{len(part_dirs(main_dir)) - 1:05d}"
     out = os.path.join(main_dir, "_deltas", name)
     if os.path.exists(os.path.join(out, "_index_meta.json")):
         return out
-    cfg = cfg or BuildConfig()
+    cfg = cfg or open_index(spark, main_dir).cfg
     # shift doc ids by building standalone then offsetting at read —
     # simpler: build with an id offset recorded in the delta meta
     build_index(spark, batch, out, cfg)
@@ -81,33 +85,6 @@ def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
     return out
 
 
-def union_corpus(spark: SparkSession, main_dir: str) -> DataFrame:
-    """All SURVIVING turns of main + deltas as one transcript
-    DataFrame (per-part delete tombstones are honored, so compaction
-    expunges them — ≙ Lucene merge dropping deleted docs)."""
-    from blacklab_spark.index import open_index
-    dfs = []
-    for p in [main_dir] + _delta_dirs(main_dir):
-        dm = open_index(spark, p).doc_meta
-        dfs.append(dm.select("conv_id", "turn_idx", "role", "text",
-                             "tool", "ts"))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def compact(spark: SparkSession, main_dir: str, out_dir: str,
-            cfg: BuildConfig | None = None) -> dict:
-    """Merge main + deltas into a fresh index (≙ Lucene segment merge).
-
-    A full rebuild of the union corpus: global doc ids, df/cf and
-    avgdl are recomputed, so the compacted index is bit-identical to
-    an index built from the union in one shot (tested)."""
-    corpus = union_corpus(spark, main_dir)
-    return build_index(spark, corpus, out_dir, cfg or BuildConfig())
-
-
 class DeltaSearchEngine:
     """Query-time merge over main + delta indexes (≙ Lucene searching
     across unmerged segments). BM25 stats (N, avgdl, df) are the union
@@ -115,14 +92,9 @@ class DeltaSearchEngine:
     verified in tests against a compacted rebuild."""
 
     def __init__(self, spark: SparkSession, main_dir: str):
-        from blacklab_spark.index import open_index
         self.spark = spark
-        self.parts = [open_index(spark, p)
-                      for p in [main_dir] + _delta_dirs(main_dir)]
-        self.offsets = []
-        for p in self.parts:
-            with open(os.path.join(p.path, "_index_meta.json")) as f:
-                self.offsets.append(json.load(f).get("doc_id_offset", 0))
+        self.parts = [open_index(spark, p) for p in part_dirs(main_dir)]
+        self.offsets = [p.meta.get("doc_id_offset", 0) for p in self.parts]
         self.n_docs = sum(p.n_docs for p in self.parts)
         total_tokens = sum(p.meta["stats"]["total_tokens"] for p in self.parts)
         self.avgdl = total_tokens / max(1, self.n_docs)
@@ -132,15 +104,16 @@ class DeltaSearchEngine:
         segments): every part is a complete index, positional
         semantics are per-document, so each part executes the same
         plan locally — postings leaves, cost-based sequences, the
-        whole span algebra — its tombstones are honored, local hit
-        doc ids shift by the part's recorded offset, and the results
-        union. Identical to a compacted rebuild's hits by
-        construction (ids are the one-shot build's when parts were
-        appended in (conv_id, turn_idx) order — tested)."""
+        whole span algebra — its tombstones are honored (``find``
+        returns tombstone-free hits), local hit doc ids shift by the
+        part's recorded offset, and the results union. Identical to a
+        compacted rebuild's hits by construction (ids are the
+        one-shot build's when parts were appended in (conv_id,
+        turn_idx) order — tested)."""
         from blacklab_spark.plans.executor import find as _find
         outs = []
         for p, off in zip(self.parts, self.offsets):
-            hits = p.without_deleted(_find(p, cql))
+            hits = _find(p, cql)
             cols = [c for c in ("doc_id", "start", "end", "match_info")
                     if c in hits.columns]
             outs.append(hits.select(*cols).withColumn(
@@ -190,7 +163,7 @@ class DeltaSearchEngine:
             imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
                                   for x in kv])
             ub = bm25_contrib(imap[F.col("term_id")], F.col("max_tf"), 0,
-                              p.cfg.k1, p.cfg.b, self.avgdl)
+                              self.avgdl)
             parts.append((p, off, idf_map, self.avgdl, ub))
         if not parts:
             return self.spark.createDataFrame([], "doc_id long, score double")

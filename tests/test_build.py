@@ -268,14 +268,12 @@ def _assert_block_max_achieved(idx):
     blocks = idx.postings.select("term_id", "tfs", "dls",
                                  "max_score").toPandas()
     assert len(blocks)
-    cfg = idx.cfg
     for i, (tid, tfs, dls, want) in enumerate(zip(
             blocks["term_id"], blocks["tfs"], blocks["dls"],
             blocks["max_score"])):
         tf = codec.decode_varints(tfs).astype(np.float64)
         dl = codec.decode_varints(dls).astype(np.float64)
-        got = bm25_contrib(idf_of[tid], tf, dl, cfg.k1, cfg.b,
-                           idx.avgdl).max()
+        got = bm25_contrib(idf_of[tid], tf, dl, idx.avgdl).max()
         assert got == want, (i, got, want)
 
 
@@ -324,7 +322,7 @@ def test_synonym_target_collides_with_real_token(spark, tiny_pdf,
 
 
 def test_terms_single_partition_matches_distributed(spark, tiny_pdf,
-                                                    tmp_path):
+                                                    tmp_path, monkeypatch):
     """r5 terms fast path: the bounded single-task dictionary sort
     must produce EXACTLY the distributed dense-id scheme's output
     (term, term_id, df, cf) — the id assignment contract both the
@@ -333,8 +331,9 @@ def test_terms_single_partition_matches_distributed(spark, tiny_pdf,
     cfg_kw = dict(block_size=8, bucket_size=16, num_partitions=2)
     build_index(spark, df, str(tmp_path / "single"),
                 BuildConfig(**cfg_kw))
-    build_index(spark, df, str(tmp_path / "dist"),
-                BuildConfig(**cfg_kw, terms_single_partition_max=0))
+    import blacklab_spark.build as build_mod
+    monkeypatch.setattr(build_mod, "TERMS_SINGLE_PARTITION_MAX", 0)
+    build_index(spark, df, str(tmp_path / "dist"), BuildConfig(**cfg_kw))
     a = spark.read.parquet(str(tmp_path / "single" / "terms")) \
         .toPandas().sort_values("term_id").reset_index(drop=True)
     b = spark.read.parquet(str(tmp_path / "dist" / "terms")) \
@@ -344,10 +343,10 @@ def test_terms_single_partition_matches_distributed(spark, tiny_pdf,
     assert (a["term_id"].values == range(len(a))).all()
     # and the postings artifacts agree too (ids feed the merge join)
     pa_ = spark.read.parquet(str(tmp_path / "single" / "postings")) \
-        .toPandas().sort_values(["term_id", "bucket", "block_id"]) \
+        .toPandas().sort_values(["term_id", "bucket", "doc_ids"]) \
         .reset_index(drop=True)
     pb_ = spark.read.parquet(str(tmp_path / "dist" / "postings")) \
-        .toPandas().sort_values(["term_id", "bucket", "block_id"]) \
+        .toPandas().sort_values(["term_id", "bucket", "doc_ids"]) \
         .reset_index(drop=True)
     assert pa_.equals(pb_)
 
@@ -671,7 +670,7 @@ def test_resume_after_postings_kernel_failure(spark, tiny_pdf, tmp_path,
     clean = str(tmp_path / "clean")
     build_index(spark, df, clean, cfg)
 
-    def failing_finalize(cfg, n_docs, avgdl):
+    def failing_finalize(n_docs, avgdl):
         def kernel(batches):
             for _ in batches:
                 raise RuntimeError("injected postings kernel failure")

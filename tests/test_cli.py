@@ -99,3 +99,27 @@ def test_cli_query_languages_inprocess(tiny_index_dir, capsys, monkeypatch):
     assert main(["query", "--index", tiny_index_dir]) == 2
     assert main(["query", "--index", tiny_index_dir, "--terms", "a",
                  "--cql", '"a"']) == 2
+
+
+def test_cli_compact_keeps_delta_turns(spark, tmp_path, capsys,
+                                       monkeypatch):
+    """``compact`` merges the index's deltas too: every turn of main
+    and delta survives the rebuild."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    from pyspark.sql import functions as F
+
+    from blacklab_spark.build import build_index
+    from blacklab_spark.cli import main
+    from blacklab_spark.config import BuildConfig
+    from blacklab_spark.sources.transcripts import (TRANSCRIPT_SCHEMA,
+                                                    gen_transcripts_pandas)
+    from blacklab_spark.streaming.ingest import append_delta
+    df = spark.createDataFrame(gen_transcripts_pandas("micro", seed=42),
+                               schema=TRANSCRIPT_SCHEMA)
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "compacted")
+    build_index(spark, df.filter(F.col("conv_id") != "conv00002"), idx,
+                BuildConfig(block_size=8, bucket_size=8, num_partitions=2))
+    append_delta(spark, idx, df.filter(F.col("conv_id") == "conv00002"))
+    assert main(["compact", "--index", idx, "--out", out]) == 0
+    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert payload["n_docs"] == df.count() == 24

@@ -3,6 +3,9 @@ analog (reference: tools/.../IndexTool.java:65, Lucene tombstones)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,7 +13,12 @@ from blacklab_spark.build import build_index
 from blacklab_spark.config import BuildConfig
 from blacklab_spark.delete import compact, delete_docs
 from blacklab_spark.engine import SearchEngine
-from blacklab_spark.sources.transcripts import gen_transcripts_pandas
+from blacklab_spark.index import open_index
+from blacklab_spark.sources.transcripts import (TRANSCRIPT_SCHEMA,
+                                                gen_conllu_texts,
+                                                gen_tagged_pandas,
+                                                gen_transcripts_pandas)
+from blacklab_spark.streaming.ingest import append_delta
 
 
 @pytest.fixture(scope="module")
@@ -92,10 +100,9 @@ def test_compact_equals_fresh_build(spark, tmp_path, del_engine):
 
 def test_delete_visible_through_delta_engine(spark, tmp_path):
     """Tombstones on a part are honored by the delta-merged engine and
-    expunged by streaming compaction."""
+    expunged by compaction."""
     from blacklab_spark.streaming.ingest import (DeltaSearchEngine,
-                                                 append_delta, compact as
-                                                 stream_compact)
+                                                 append_delta)
     from blacklab_spark.index import open_index
     main = str(tmp_path / "main")
     pdf = gen_transcripts_pandas("micro", seed=42)
@@ -116,7 +123,7 @@ def test_delete_visible_through_delta_engine(spark, tmp_path):
     assert not (got & victims)
 
     out = str(tmp_path / "compacted_stream")
-    stream_compact(spark, main, out, cfg)
+    compact(spark, main, out, cfg)
     ceng = SearchEngine.open(spark, out)
     assert ceng.index.doc_meta.filter(
         F.col("conv_id") == "conv00000").count() == 0
@@ -163,3 +170,126 @@ def test_compact_carries_stored_relations(spark, tmp_path):
     b = sorted(map(tuple, new_edges.collect()))
     assert a == b and b
     assert not any(r[-2] == victim for r in b)  # victim's edges gone
+
+
+# Each shape runs a different leaf or combinator of the span engine.
+FIND_SHAPES = [
+    '"visa"',                                   # term
+    '"visa" "application"',                     # phrase
+    '"good" []{0,2} "visa"',                    # gapped sequence
+    '[]{2}',                                    # any-token repetition
+    '[word="vis.*"]',                           # regex expansion
+    '"visa"~1',                                 # fuzzy expansion
+    '"visa" | "good"',                          # OR
+    '"visa" within "visa" "application"',       # within
+    'A:"the" B:[] :: A.word != B.word',         # global constraint
+    '"the" "the"',                              # repeated term
+    '"the"{1,3}',                               # bounded repetition
+    '([]{3,3}) containing "visa"',              # containing
+    '[word_s="visa"]',                          # sensitive layer probe
+    '[pos="noun"]',                             # derived annotation layer
+]
+
+
+@pytest.mark.parametrize("cql", FIND_SHAPES)
+def test_find_returns_no_tombstoned_doc(del_engine, cql):
+    """``find`` is tombstone-free on its own: postings leaves and every
+    doc_meta/_spans/edge read are filtered, so callers (the delta
+    engine included) add no anti-join of their own."""
+    delete_docs(del_engine.index, "conv_id = 'conv00001'")
+    victims = {r["doc_id"] for r in
+               del_engine.index.deleted_doc_ids.collect()}
+    got = {r["doc_id"] for r in
+           del_engine.find(cql).select("doc_id").distinct().collect()}
+    assert victims and got
+    assert not (got & victims)
+
+
+def _survivor_rows(spark, out):
+    """What a compaction must reproduce: terms rows, decoded postings,
+    stored doc_meta rows and column names, span/relation rows keyed by
+    (conv_id, turn_idx), and the manifest config."""
+    from blacklab_spark import codec
+    idx = open_index(spark, out)
+    term_of = {r["term_id"]: r["term"] for r in idx.terms.collect()}
+    postings = set()
+    for r in idx.postings.collect():
+        docs = codec.decode_deltas(r["doc_ids"]).astype(int)
+        tfs = codec.decode_varints(r["tfs"]).astype(int)
+        dls = codec.decode_varints(r["dls"]).astype(int)
+        poss = codec.decode_positions(r["positions"], r["n_docs"])
+        for d, tf, dl, pos in zip(docs, tfs, dls, poss):
+            postings.add((term_of[r["term_id"]], int(d), int(tf), int(dl),
+                          tuple(pos.astype(int).tolist())))
+    keys = idx.doc_meta.select("doc_id", "conv_id", "turn_idx")
+    layers = {}
+    for name, df in (("spans", idx.doc_spans if idx.cfg.tags else None),
+                     ("relations", idx.doc_relations_stored)):
+        if df is not None:
+            layers[name] = sorted(map(tuple, df.join(keys, "doc_id")
+                                      .drop("doc_id").collect()))
+    with open(os.path.join(out, "_index_meta.json")) as f:
+        config = json.load(f)["config"]
+    stored = spark.read.parquet(os.path.join(out, "doc_meta"))
+    return {"terms": sorted(map(tuple, idx.terms.collect())),
+            "postings": postings,
+            "doc_meta": sorted(map(tuple, stored.collect())),
+            "doc_meta_stored": sorted(idx.doc_meta_stored),
+            "layers": layers, "config": config,
+            "stats": idx.meta["stats"]}
+
+
+def _compaction_corpus(spark, kind, tmp_path):
+    cfg = BuildConfig(block_size=8, bucket_size=8, num_partitions=2)
+    if kind == "plain":
+        pdf = gen_transcripts_pandas("micro", seed=42)
+        return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), cfg
+    if kind == "tags":
+        pdf = gen_tagged_pandas(seed=42)
+        return (spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA),
+                BuildConfig(block_size=8, bucket_size=8, num_partitions=2,
+                            tags=True))
+    from blacklab_spark.sources.files import read_conllu
+    src = tmp_path / "conllu_src"
+    src.mkdir()
+    for name, content in gen_conllu_texts(seed=42).items():
+        (src / name).write_text(content)
+    return read_conllu(spark, str(src)).cache(), cfg
+
+
+@pytest.mark.parametrize("kind", ["plain", "tags", "conllu"])
+def test_compact_equals_fresh_build_with_deltas(spark, tmp_path, kind):
+    """Main + a delta, a conversation tombstoned in main and one in the
+    delta: ``compact`` equals a fresh build of the surviving docs on
+    every artifact a query reads, and keeps the main index's config
+    (the delta takes it too, through ``append_delta``'s default)."""
+    df, cfg = _compaction_corpus(spark, kind, tmp_path)
+    convs = sorted(r["conv_id"] for r in
+                   df.select("conv_id").distinct().collect())
+    assert len(convs) >= 3
+    # turns split across the parts, so both parts hold every
+    # conversation and the compaction must interleave them
+    lo, hi = df.agg(F.min("turn_idx"), F.max("turn_idx")).first()
+    cut = lo + (hi - lo + 1) // 2
+    main = str(tmp_path / "main")
+    build_index(spark, df.filter(F.col("turn_idx") < cut), main, cfg)
+    delta = append_delta(spark, main, df.filter(F.col("turn_idx") >= cut))
+    assert delete_docs(open_index(spark, main),
+                       f"conv_id = '{convs[0]}'") > 0
+    assert delete_docs(open_index(spark, delta),
+                       f"conv_id = '{convs[1]}'") > 0
+
+    out = str(tmp_path / "compacted")
+    compact(spark, main, out)
+    fresh = str(tmp_path / "fresh")
+    survivors = df.filter(~(
+        (F.col("conv_id") == convs[0]) & (F.col("turn_idx") < cut)
+        | (F.col("conv_id") == convs[1]) & (F.col("turn_idx") >= cut)))
+    build_index(spark, survivors, fresh, cfg)
+
+    got, want = _survivor_rows(spark, out), _survivor_rows(spark, fresh)
+    assert want["postings"] and want["doc_meta"]
+    if kind != "plain":
+        assert want["layers"] and all(want["layers"].values())
+    for key in want:
+        assert got[key] == want[key], key

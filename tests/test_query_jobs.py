@@ -56,13 +56,15 @@ def multi_terms_dir(spark, tiny_pdf, tmp_path_factory):
     """The tiny corpus with the distributed terms path forced, so
     ``terms/`` spans several files (AQE would coalesce a dictionary
     this small into one partition)."""
+    from blacklab_spark import build
     out = str(tmp_path_factory.mktemp("idx") / "multiterms")
-    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=4,
-                      terms_single_partition_max=1)
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=4)
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(key, "false")
     try:
-        build_index(spark, spark.createDataFrame(tiny_pdf), out, cfg)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(build, "TERMS_SINGLE_PARTITION_MAX", 1)
+            build_index(spark, spark.createDataFrame(tiny_pdf), out, cfg)
     finally:
         spark.conf.set(key, "true")
     return out

@@ -10,8 +10,9 @@ import pytest
 from blacklab_spark.build import build_index
 from blacklab_spark.config import BuildConfig
 from blacklab_spark.engine import SearchEngine
+from blacklab_spark.delete import compact
 from blacklab_spark.streaming.ingest import (DeltaSearchEngine, append_delta,
-                                             compact, stream_ingest)
+                                             stream_ingest)
 
 
 @pytest.fixture()
