@@ -44,12 +44,9 @@ import shutil
 import time
 import uuid
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
-from blacklab_spark import codec
 from blacklab_spark.arrow_kernels import finalize_blocks_arrow, spimi_miniblocks
 from blacklab_spark.config import INDEX_FORMAT_VERSION, BuildConfig
 from blacklab_spark.index import read_artifact

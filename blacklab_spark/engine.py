@@ -2,7 +2,8 @@
 (reference: engine/src/main/java/nl/inl/blacklab/search/BlackLabIndex.java:180-201).
 
 Routes queries to physical strategies the way the reference's
-optimizer does (SURVEY.md §4.4): unfiltered top-k → block-max WAND;
+optimizer does (SURVEY.md §4.4): a top-k with few postings → exact
+scoring on the driver, no Spark job; unfiltered top-k → block-max WAND;
 filtered top-k → filter-then-score WAND (allowed-bucket semi-join
 prune + threshold seeded from filtered candidates); exhaustive
 scoring kept as the dual verification path; phrase →
@@ -32,8 +33,8 @@ class SearchSettings:
 from blacklab_spark.cache import ResultCache
 from blacklab_spark.operators import hits as H
 from blacklab_spark.operators import phrase as P
-from blacklab_spark.operators.scoring import (TOPK_SCHEMA, topk_exhaustive,
-                                              doc_scores, finish_topk)
+from blacklab_spark.operators.scoring import (TOPK_SCHEMA, doc_scores,
+                                              topk_driver, topk_exhaustive)
 from blacklab_spark.operators.wand import topk_wand, topk_wand_filtered
 from blacklab_spark.tokenizer import py_tokens_insensitive
 
@@ -43,13 +44,27 @@ from blacklab_spark.tokenizer import py_tokens_insensitive
 # the same size for its own rule.
 AUTO_EXHAUSTIVE_MAX_DOCS = 1_000_000
 
+# Σdf over the query terms (and over every part, for DeltaSearchEngine)
+# below which a top-k scores on the driver (scoring.driver_parts_topk):
+# no Spark job, the same kernel, the same bits. Measured on a 4-CPU Xeon
+# at local[2] (bench-fixture indexes of 44k and 165k turns, Σdf 10^2 to
+# 5.5×10^5): the Spark plans never ran under 0.41 s, fixed job cost
+# that no cluster size removes; the driver path took 0.07-0.34 s
+# unfiltered and 0.11-0.50 s role-filtered below this bound, and was
+# still faster at 5.5×10^5 (0.86 vs 1.17 s), so the bound sits where
+# the driver's time reaches the Spark plans' floor, not at the local[2]
+# crossover.
+DRIVER_TOPK_MAX_POSTINGS = 200_000
+
 # Plan handles kept per engine (SearchEngine._plan_cache, an LRU).
 PLAN_CACHE_SIZE = 64
 
 
 class SearchEngine:
-    """``topk`` runs its jobs inside the call and returns a driver-built
-    frame of ≤k rows; ``find`` and the hit operators stay lazy.
+    """``topk`` scores inside the call (on the driver below
+    DRIVER_TOPK_MAX_POSTINGS, in Spark jobs above it) and returns a
+    driver-built frame of ≤k rows; ``find`` and the hit operators stay
+    lazy.
     ``cache_size`` > 0 opts into the serving-path result cache
     (cache.py): repeated ``topk``/``count_hits`` calls return
     driver-materialized results without re-running Spark jobs, with
@@ -120,6 +135,20 @@ class SearchEngine:
             out = out & c
         return out
 
+    @staticmethod
+    def _filter_cols(role=None, tool=None, conv_id=None) -> list[str]:
+        """The doc_meta columns the structured filters read."""
+        return [c for c, v in (("role", role), ("tool", tool),
+                               ("conv_id", conv_id)) if v is not None]
+
+    def _on_driver(self, terms: list[str], where=None, filter=None) -> bool:
+        """Whether :meth:`topk` scores on the driver: Σdf below
+        DRIVER_TOPK_MAX_POSTINGS and no ``where``/``filter`` string,
+        which may name doc_meta columns the driver path does not read."""
+        return (where is None and filter is None
+                and int(self.index.lookup_terms(terms)["df"].sum())
+                < DRIVER_TOPK_MAX_POSTINGS)
+
     def _auto_mode(self, filt: Column | None) -> str:
         """``mode="auto"`` of :meth:`topk` (and what :meth:`explain`
         reports): cost-based (≙ ClauseCombinerNfa-style statistics
@@ -144,13 +173,20 @@ class SearchEngine:
         terms = self._terms(query)
         # one key computation (the tombstone listing is a filesystem
         # listing — don't do it twice per call on the serving path):
-        # the result-cache key equals the plan key when caching is on
+        # the result-cache key equals the plan key when caching is on.
+        # The key holds the driver bound, so a changed bound re-plans.
         pkey = self._plan_key("topk", tuple(terms), k, mode,
-                              role, tool, conv_id, where, filter)
+                              role, tool, conv_id, where, filter,
+                              DRIVER_TOPK_MAX_POSTINGS)
         key = pkey if self.cache.maxsize > 0 else None
 
         def build() -> DataFrame:
             filt = self._doc_filter(role, tool, conv_id, where, filter)
+            if self._on_driver(terms, where, filter):
+                # few postings: any mode scores exhaustively on the
+                # driver (mode picks among the Spark plans below)
+                return topk_driver(self.index, terms, k, filt,
+                                   self._filter_cols(role, tool, conv_id))
             m = self._auto_mode(filt) if mode == "auto" else mode
             if m == "wand":
                 if filt is not None:
@@ -392,15 +428,23 @@ class SearchEngine:
         filt = self._doc_filter(**filters)
         info = self.index.lookup_terms(terms)
         if self._auto_mode(filt) == "exhaustive":
-            strat = ("exhaustive-then-filter (cost-based: below ~1M docs "
-                     "the single-pass scorer beats the pruning plan's "
-                     "fixed job overhead)")
+            spark_plan = ("exhaustive-then-filter (cost-based: below ~1M "
+                          "docs the single-pass scorer beats the pruning "
+                          "plan's fixed job overhead)")
         elif filt is not None:
-            strat = ("filtered block-max WAND (bucket semi-join prune + "
-                     "seeded threshold)")
+            spark_plan = ("filtered block-max WAND (bucket semi-join "
+                          "prune + seeded threshold)")
         else:
-            strat = "block-max WAND"
+            spark_plan = "block-max WAND"
         lines = [f"query terms: {terms}",
                  f"resolved: {info.to_dict('records')}",
-                 f"strategy: {strat}"]
+                 f"postings: Σdf {int(info['df'].sum())}, driver bound "
+                 f"DRIVER_TOPK_MAX_POSTINGS = {DRIVER_TOPK_MAX_POSTINGS}"]
+        if self._on_driver(terms, filters.get("where"),
+                           filters.get("filter")):
+            lines += ["strategy: driver exhaustive (Σdf below the bound: "
+                      "score_bucket on the driver, no Spark job)",
+                      f"spark plan at or above the bound: {spark_plan}"]
+        else:
+            lines.append(f"strategy: {spark_plan}")
         return "\n".join(lines)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -88,8 +89,11 @@ class InvertedIndex:
         # entry is keyed on its file listing and refreshes when a
         # delete lands.
         self._df_cache: dict = {}
-        # driver-side Arrow reads: terms dataset, doc_meta file ranges
+        # driver-side Arrow reads: terms and postings datasets,
+        # tombstoned ids per listing, doc_meta file ranges
         self._terms_ds: ds.Dataset | None = None
+        self._postings_ds: ds.Dataset | None = None
+        self._dead_ids: tuple[tuple, np.ndarray] = ((), np.empty(0, np.int64))
         self._doc_meta_files: list[tuple[str, int, int]] | None = None
         self._doc_meta_stored: frozenset = frozenset()
         self._syn_values: frozenset | None = None
@@ -244,6 +248,19 @@ class InvertedIndex:
             ).select("doc_id").distinct()
         return self._df_cache[key]
 
+    def tombstoned_ids(self) -> np.ndarray:
+        """Sorted distinct tombstoned doc ids, read with Arrow on the
+        driver from the files the tombstone listing names; memoized per
+        listing like :attr:`deleted_doc_ids`."""
+        listing = self._tombstone_listing()
+        if listing != self._dead_ids[0]:
+            ids = ds.dataset(
+                [os.path.join(self.deletes_path, f) for f in listing],
+                format="parquet").to_table(columns=["doc_id"])["doc_id"]
+            self._dead_ids = (listing,
+                              np.unique(ids.to_numpy().astype(np.int64)))
+        return self._dead_ids[1]
+
     def without_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join a (doc_id, ...) frame against the tombstones —
         no-op (and no plan change) when the index has no deletes.
@@ -278,6 +295,19 @@ class InvertedIndex:
             self._term_cache[key] = \
                 pdf.sort_values("term_id").reset_index(drop=True)
         return self._term_cache[key]
+
+    def posting_blocks(self, term_ids: list[int]) -> pd.DataFrame:
+        """The posting blocks of ``term_ids`` — the columns the BM25
+        kernel reads — with a driver-side Arrow read. The files are
+        sorted by term_id, so the filter prunes row groups by their
+        min/max stats."""
+        if self._postings_ds is None:
+            self._postings_ds = ds.dataset(
+                os.path.join(self.path, "postings"), format="parquet")
+        return self._postings_ds.to_table(
+            columns=["term_id", "doc_ids", "tfs", "dls"],
+            filter=ds.field("term_id").isin(pa.array(term_ids, pa.int64())),
+        ).to_pandas()
 
     def _doc_meta_listing(self) -> list[tuple[str, int, int]]:
         """(file, min doc_id, max doc_id) of every doc_meta parquet
@@ -317,11 +347,13 @@ class InvertedIndex:
         """doc_meta ``columns`` of ``doc_ids`` (stored columns only, no
         tombstone filter), read with Arrow on the driver from only the
         files whose footer doc-id range holds one of the ids."""
+        ids = np.unique(np.asarray(doc_ids, np.int64))
         files = [p for p, lo, hi in self._doc_meta_listing()
-                 if any(lo <= i <= hi for i in doc_ids)]
+                 if np.searchsorted(ids, hi, "right")
+                 > np.searchsorted(ids, lo)]
         return ds.dataset(files, format="parquet").to_table(
             columns=columns,
-            filter=ds.field("doc_id").isin(pa.array(doc_ids, pa.int64())),
+            filter=ds.field("doc_id").isin(pa.array(ids)),
         )
 
     def _expand(self, key: tuple, cond: Column, limit: int) -> pd.DataFrame:

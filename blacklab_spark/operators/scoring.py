@@ -11,14 +11,21 @@ for block ``max_score``. The exhaustive path finishes with
 ``orderBy(score desc, doc_id).limit(k)`` (Catalyst compiles this to
 TakeOrderedAndProject — per-partition top-k, no global sort).
 
+A query whose terms hold few postings
+(``engine.DRIVER_TOPK_MAX_POSTINGS``) skips Spark:
+``driver_parts_topk`` reads the posting blocks with Arrow and runs
+``score_bucket`` on the driver over every candidate, with no seed and
+no prune. Both paths finish through ``winner_rows``.
+
 **Float determinism contract** (SURVEY.md §7 hard part 4): a doc's
 final score is always the sum of its per-term contributions in
 *term_id-ascending* order, computed inside one kernel invocation — a
 doc's postings live in exactly one doc-range bucket, so no partial
 sums are ever combined across tasks and the result is bit-identical
-across paths, partitionings and cluster sizes. The Python oracle sums
-in sorted-term order (= term_id order) with the identical expression
-shape, so engine ties resolve exactly like oracle ties.
+across paths (the driver path included), partitionings and cluster
+sizes. The Python oracle sums in sorted-term order (= term_id order)
+with the identical expression shape, so engine ties resolve exactly
+like oracle ties.
 
 Mirrors the role of plain Lucene scoring without WAND; the WAND path
 (operators/wand.py) must be rank- and score-identical to this one
@@ -30,8 +37,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from blacklab_spark import codec
 from blacklab_spark.arrow_kernels import bm25_contrib
@@ -135,26 +144,104 @@ def doc_scores(index: InvertedIndex, terms: list[str],
     return scores
 
 
-def finish_topk(index: InvertedIndex, scores: DataFrame, k: int) -> DataFrame:
-    """orderBy+limit (TakeOrderedAndProject) → collect the ≤k winners
-    → attach their conv_id/turn_idx/text with a driver-side read
-    (InvertedIndex.doc_rows; a k-row result needs no cluster job) →
-    rank. Winners are tombstone-free already: doc_scores anti-joins
-    the tombstones, and WAND reroutes to the filtered plan when
-    deletes exist. Collecting the local result runs no Spark job."""
-    top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    if not top:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
-    winners = pd.DataFrame({"doc_id": [int(r["doc_id"]) for r in top],
-                            "score": [float(r["score"]) for r in top]})
+def local_frame(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """``pdf`` as a frame of ``schema`` whose collect runs no Spark job.
+    Spark would plan an empty pandas frame (or list) as an RDD scan,
+    one job, so an empty one goes through an empty Arrow table."""
+    if pdf.empty:
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+    return spark.createDataFrame(pdf, schema)
+
+
+def winner_rows(index: InvertedIndex, winners: pd.DataFrame) -> DataFrame:
+    """The ≤k sorted (doc_id, score) winners of a top-k → its result
+    frame: conv_id/turn_idx/text attached with a driver-side read
+    (InvertedIndex.doc_rows; a k-row result needs no cluster job),
+    then rank. A local frame: collecting it runs no Spark job."""
+    if winners.empty:
+        return local_frame(index.spark, winners, TOPK_SCHEMA)
     meta = index.doc_rows(winners["doc_id"].tolist(),
                           ["doc_id", "conv_id", "turn_idx", "text"]
                           ).to_pandas()
     out = winners.merge(meta, on="doc_id")
     out.insert(0, "rank", np.arange(1, len(out) + 1, dtype=np.int32))
-    return index.spark.createDataFrame(
+    return local_frame(
+        index.spark,
         out[["rank", "doc_id", "conv_id", "turn_idx", "score", "text"]],
         TOPK_SCHEMA)
+
+
+def finish_topk(index: InvertedIndex, scores: DataFrame, k: int) -> DataFrame:
+    """orderBy+limit (TakeOrderedAndProject) → collect the ≤k winners
+    → :func:`winner_rows`. Winners are tombstone-free already:
+    doc_scores anti-joins the tombstones, and WAND reroutes to the
+    filtered plan when deletes exist."""
+    top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+    return winner_rows(index, pd.DataFrame(
+        {"doc_id": [int(r["doc_id"]) for r in top],
+         "score": [float(r["score"]) for r in top]}))
+
+
+def _passing_ids(index: InvertedIndex, ids: np.ndarray, doc_filter: Column,
+                 filter_cols: list[str]) -> np.ndarray:
+    """The ``ids`` whose doc_meta rows pass ``doc_filter``, a predicate
+    over ``filter_cols`` only. Spark evaluates it on one row per
+    distinct value combination, in a local frame: Catalyst folds a
+    filter over a local relation into the relation, so this runs no
+    job and keeps Spark's semantics for the predicate."""
+    rows = index.doc_rows(ids.tolist(), ["doc_id", *filter_cols])
+    group = (rows.select(filter_cols).to_pandas()
+             .groupby(filter_cols, dropna=False, sort=False).ngroup()
+             .to_numpy())
+    groups, first = np.unique(group, return_index=True)
+    combos = rows.select(filter_cols).take(first).append_column(
+        "_group", pa.array(groups))
+    ok = [r["_group"] for r in index.spark.createDataFrame(combos)
+          .filter(doc_filter).select("_group").collect()]
+    return rows["doc_id"].to_numpy()[np.isin(group, ok)]
+
+
+def driver_parts_topk(parts: list[tuple], k: int,
+                      doc_filter: Column | None = None,
+                      filter_cols: list[str] = ()) -> pd.DataFrame:
+    """Exact BM25 top-k (doc_id, score) over index parts in one doc-id
+    space, scored on the driver with no Spark job — the plan of a
+    query whose postings are few (engine.DRIVER_TOPK_MAX_POSTINGS).
+    Each part is ``(index, doc_id offset, {term_id: idf}, avgdl)``.
+
+    Every candidate posting is scored: the part's blocks of the query
+    terms, read with Arrow, go through one :func:`score_bucket` call.
+    A doc's sum is its contributions in term_id order whatever the
+    blocks are grouped by, so scores are bit-identical to the Spark
+    plans. The part's tombstoned ids are dropped; under ``doc_filter``
+    (a predicate over the doc_meta ``filter_cols``) only passing docs
+    stay. Ids shift by the part's offset; rows sort by score desc,
+    then doc_id, as the Spark plans' orderBy does."""
+    docs, scores = [np.empty(0, np.int64)], [np.empty(0, np.float64)]
+    for index, off, idf_map, avgdl in parts:
+        s = score_bucket(index.posting_blocks(list(idf_map)), idf_map, avgdl)
+        ids = s["doc_id"].to_numpy()
+        keep = ~np.isin(ids, index.tombstoned_ids())
+        if doc_filter is not None and keep.any():
+            keep &= np.isin(ids, _passing_ids(index, ids[keep], doc_filter,
+                                              list(filter_cols)))
+        docs.append(ids[keep] + off)
+        scores.append(s["score"].to_numpy()[keep])
+    d, sc = np.concatenate(docs), np.concatenate(scores)
+    top = np.lexsort((d, -sc))[:k]
+    return pd.DataFrame({"doc_id": d[top], "score": sc[top]})
+
+
+def topk_driver(index: InvertedIndex, terms: list[str], k: int = 10,
+                doc_filter: Column | None = None,
+                filter_cols: list[str] = ()) -> DataFrame:
+    """:func:`driver_parts_topk` over one index, finished by
+    :func:`winner_rows`: a top-k that runs no Spark job."""
+    info = index.lookup_terms(terms)
+    idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
+    parts = [(index, 0, idf_map, index.avgdl)] if idf_map else []
+    return winner_rows(index,
+                       driver_parts_topk(parts, k, doc_filter, filter_cols))
 
 
 def topk_exhaustive(index: InvertedIndex, terms: list[str], k: int = 10,

@@ -32,6 +32,11 @@ set first, an exact seed from the top blocks, the same
 stored ``max_score`` for one index, a dl-free ``max_tf`` bound under
 the union statistics of the delta engine.
 
+These plans run at or above ``engine.DRIVER_TOPK_MAX_POSTINGS``
+candidate postings; below it ``scoring.driver_parts_topk`` scores
+every candidate on the driver with the same kernel, and no Spark job
+runs.
+
 Rank/score-identical to operators/scoring.py by construction; the
 dual-path pytest enforces it (≙ reference _FI1/_FI2 goldens,
 test/test/hits.js:55-57).
@@ -48,9 +53,11 @@ from blacklab_spark.operators.scoring import finish_topk, score_buckets
 # Skip the threshold-seeding pass below this many candidate postings
 # (Σ df over the query terms). Seeding costs one fixed Spark job
 # (collect round-trip + block-metadata scan) before scoring can start;
-# decoding the unpruned postings is vectorized ~10^7 entries/s/core,
-# so below ~10^6 entries the seed job costs more wall-clock than the
-# decode it could save. At 10^11-posting stopword volume the seed +
+# score_bucket decodes and scores about 8×10^5 postings/s per core
+# (quartiles 6.7×10^5-1.1×10^6, measured on a 4-CPU Xeon along with
+# engine.DRIVER_TOPK_MAX_POSTINGS), so below ~10^6 entries spread over
+# the executors' cores the seed job costs about as much wall-clock as
+# the decode it could save. At 10^11-posting stopword volume the seed +
 # block-max prune is what makes the query feasible at all — the same
 # statistics-driven physical choice as engine.topk's mode="auto".
 WAND_SEED_MIN_POSTINGS = 1_000_000

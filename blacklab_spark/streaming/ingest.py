@@ -127,8 +127,13 @@ class DeltaSearchEngine:
              role=None, tool=None, conv_id=None):
         """Top-k (doc_id, score) over main + deltas with union-corpus
         BM25 stats and metadata filters, through the single-index
-        plan: ``operators.wand.parts_scores`` with one part per index
-        (same kernel, seed, prune and tombstone rule).
+        plans with one part per index (same kernel, same tombstone
+        rule). When Σdf over every part is below
+        ``engine.DRIVER_TOPK_MAX_POSTINGS``,
+        ``scoring.driver_parts_topk`` scores every candidate on the
+        driver and returns a local frame: no Spark job, whatever
+        ``mode``. Otherwise
+        ``operators.wand.parts_scores`` runs (same seed and prune).
 
         The stored per-block ``max_score`` was computed with the
         PART's build-time idf/avgdl, so it is not a valid bound under
@@ -141,7 +146,10 @@ class DeltaSearchEngine:
         exhaustive (dual verification path)."""
         from blacklab_spark.arrow_kernels import bm25_contrib, bm25_idf
         from blacklab_spark.engine import (AUTO_EXHAUSTIVE_MAX_DOCS,
+                                           DRIVER_TOPK_MAX_POSTINGS,
                                            SearchEngine)
+        from blacklab_spark.operators.scoring import (
+            SCORE_SCHEMA, driver_parts_topk, local_frame)
         from blacklab_spark.operators.wand import parts_scores
         filt = SearchEngine._doc_filter(role, tool, conv_id)
         if mode == "auto":
@@ -160,15 +168,20 @@ class DeltaSearchEngine:
                 continue
             idf_map = {int(tid): float(bm25_idf(self.n_docs, df_by_term[t]))
                        for t, tid in zip(info["term"], info["term_id"])}
+            parts.append((p, off, idf_map, self.avgdl))
+        n_postings = sum(df_by_term.values())
+        if not parts or n_postings < DRIVER_TOPK_MAX_POSTINGS:
+            top = driver_parts_topk(
+                parts, k, filt, SearchEngine._filter_cols(role, tool, conv_id))
+            return local_frame(self.spark, top, SCORE_SCHEMA)
+        planned = []
+        for p, off, idf_map, avgdl in parts:
             imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
                                   for x in kv])
             ub = bm25_contrib(imap[F.col("term_id")], F.col("max_tf"), 0,
-                              self.avgdl)
-            parts.append((p, off, idf_map, self.avgdl, ub))
-        if not parts:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return (parts_scores(parts, k, filt, mode == "wand",
-                             sum(df_by_term.values()))
+                              avgdl)
+            planned.append((p, off, idf_map, avgdl, ub))
+        return (parts_scores(planned, k, filt, mode == "wand", n_postings)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 

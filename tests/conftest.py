@@ -64,3 +64,20 @@ def tiny_engine(spark, tiny_index_dir):
 @pytest.fixture(scope="session")
 def small_engine(spark, small_index_dir):
     return SearchEngine.open(spark, small_index_dir)
+
+
+@pytest.fixture()
+def topk_paths(monkeypatch):
+    """Iterate it to run a test body on both top-k paths: first with
+    ``engine.DRIVER_TOPK_MAX_POSTINGS`` at its default, so a top-k with
+    few postings scores on the driver, then with the bound at 0, so
+    every top-k runs its Spark plan and WAND, exhaustive and the oracle
+    stay compared there. Yields the path's name."""
+    from blacklab_spark import engine
+
+    def paths():
+        for path, bound in (("driver", engine.DRIVER_TOPK_MAX_POSTINGS),
+                            ("spark", 0)):
+            monkeypatch.setattr(engine, "DRIVER_TOPK_MAX_POSTINGS", bound)
+            yield path
+    return paths()

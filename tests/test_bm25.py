@@ -32,70 +32,83 @@ def _assert_rank_identical(got, expected):
 
 @pytest.mark.parametrize("terms", QUERIES, ids=["-".join(q) for q in QUERIES])
 @pytest.mark.parametrize("mode", ["exhaustive", "wand"])
-def test_topk_tiny(tiny_engine, tiny_oracle, terms, mode):
+def test_topk_tiny(tiny_engine, tiny_oracle, topk_paths, terms, mode):
     expected = brute_topk(tiny_oracle, terms, k=10)
-    got = _engine_topk(tiny_engine, terms, 10, mode)
-    _assert_rank_identical(got, expected)
+    for _ in topk_paths:
+        got = _engine_topk(tiny_engine, terms, 10, mode)
+        _assert_rank_identical(got, expected)
 
 
 @pytest.mark.parametrize("terms", [["visa"], ["visa", "application"],
                                    ["the"], ["very", "good", "please"]],
                          ids=lambda q: "-".join(q))
 @pytest.mark.parametrize("mode", ["exhaustive", "wand"])
-def test_topk_small(small_engine, small_oracle, terms, mode):
+def test_topk_small(small_engine, small_oracle, topk_paths, terms, mode):
     expected = brute_topk(small_oracle, terms, k=10)
-    got = _engine_topk(small_engine, terms, 10, mode)
-    _assert_rank_identical(got, expected)
-
-
-@pytest.mark.parametrize("k", [1, 3, 25, 1000])
-def test_topk_various_k(small_engine, small_oracle, k):
-    expected = brute_topk(small_oracle, ["visa", "good"], k=k)
-    for mode in ("exhaustive", "wand"):
-        got = _engine_topk(small_engine, ["visa", "good"], k, mode)
+    for _ in topk_paths:
+        got = _engine_topk(small_engine, terms, 10, mode)
         _assert_rank_identical(got, expected)
 
 
-def test_wand_equals_exhaustive_dualpath(small_engine):
+@pytest.mark.parametrize("k", [1, 3, 25, 1000])
+def test_topk_various_k(small_engine, small_oracle, topk_paths, k):
+    expected = brute_topk(small_oracle, ["visa", "good"], k=k)
+    for _ in topk_paths:
+        for mode in ("exhaustive", "wand"):
+            got = _engine_topk(small_engine, ["visa", "good"], k, mode)
+            _assert_rank_identical(got, expected)
+
+
+def test_wand_equals_exhaustive_dualpath(small_engine, topk_paths):
     """Dual-path gate ≙ reference _FI1/_FI2 (hits.js:55-57)."""
-    for terms in (["visa"], ["the"], ["visa", "application", "good"]):
-        a = _engine_topk(small_engine, terms, 20, "wand")
-        b = _engine_topk(small_engine, terms, 20, "exhaustive")
-        assert [x[0] for x in a] == [x[0] for x in b]
-        for x, y in zip(a, b):
-            assert x[1] == pytest.approx(y[1], abs=1e-9)
+    for _ in topk_paths:
+        for terms in (["visa"], ["the"], ["visa", "application", "good"]):
+            a = _engine_topk(small_engine, terms, 20, "wand")
+            b = _engine_topk(small_engine, terms, 20, "exhaustive")
+            assert [x[0] for x in a] == [x[0] for x in b]
+            for x, y in zip(a, b):
+                assert x[1] == pytest.approx(y[1], abs=1e-9)
 
 
-def test_topk_result_schema(tiny_engine):
-    df = tiny_engine.topk(["visa"], k=5)
-    assert [f.name for f in df.schema.fields] == \
-        ["rank", "doc_id", "conv_id", "turn_idx", "score", "text"]
-    rows = df.collect()
-    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+def test_topk_result_schema(tiny_engine, topk_paths):
+    for _ in topk_paths:
+        df = tiny_engine.topk(["visa"], k=5)
+        assert [f.name for f in df.schema.fields] == \
+            ["rank", "doc_id", "conv_id", "turn_idx", "score", "text"]
+        rows = df.collect()
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
 
 
-def test_filtered_topk_role(small_engine, small_oracle):
+def test_filtered_topk_role(small_engine, small_oracle, topk_paths):
     expected = brute_topk(small_oracle, ["visa"], k=10,
                           predicate=lambda m: m["role"] == "assistant")
-    got = small_engine.topk(["visa"], k=10, role="assistant").collect()
-    _assert_rank_identical([(r["doc_id"], r["score"]) for r in got], expected)
+    for _ in topk_paths:
+        got = small_engine.topk(["visa"], k=10, role="assistant").collect()
+        _assert_rank_identical([(r["doc_id"], r["score"]) for r in got],
+                               expected)
 
 
-def test_filtered_topk_tool(small_engine, small_oracle):
+def test_filtered_topk_tool(small_engine, small_oracle, topk_paths):
     expected = brute_topk(small_oracle, ["search"], k=10,
                           predicate=lambda m: m["tool"] is not None)
-    got = small_engine.topk(["search"], k=10, tool=True).collect()
-    _assert_rank_identical([(r["doc_id"], r["score"]) for r in got], expected)
+    for _ in topk_paths:
+        got = small_engine.topk(["search"], k=10, tool=True).collect()
+        _assert_rank_identical([(r["doc_id"], r["score"]) for r in got],
+                               expected)
 
 
-def test_filtered_topk_conv(small_engine, small_oracle):
+def test_filtered_topk_conv(small_engine, small_oracle, topk_paths):
     expected = brute_topk(small_oracle, ["good"], k=10,
                           predicate=lambda m: m["conv_id"] == "conv00001")
-    got = small_engine.topk(["good"], k=10, conv_id="conv00001").collect()
-    _assert_rank_identical([(r["doc_id"], r["score"]) for r in got], expected)
+    for _ in topk_paths:
+        got = small_engine.topk(["good"], k=10,
+                                conv_id="conv00001").collect()
+        _assert_rank_identical([(r["doc_id"], r["score"]) for r in got],
+                               expected)
 
 
-def test_filtered_wand_equals_filtered_exhaustive(small_engine):
+def test_filtered_wand_equals_filtered_exhaustive(small_engine,
+                                                   topk_paths):
     """Round-2 dual path: filter-then-score WAND (bucket prune +
     seeded threshold) must be rank- and score-identical to
     exhaustive-then-filter (VERDICT r01 #3)."""
@@ -103,13 +116,14 @@ def test_filtered_wand_equals_filtered_exhaustive(small_engine):
              ((["visa", "application"],), {"role": "user"}),
              ((["the"],), {"tool": True}),
              ((["good"],), {"conv_id": "conv00001"})]
-    for (terms,), filt in cases:
-        a = small_engine.topk(terms, k=10, mode="wand", **filt).collect()
-        b = small_engine.topk(terms, k=10, mode="exhaustive",
-                              **filt).collect()
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
-        for x, y in zip(a, b):
-            assert x["score"] == pytest.approx(y["score"], abs=1e-9)
+    for _ in topk_paths:
+        for (terms,), filt in cases:
+            a = small_engine.topk(terms, k=10, mode="wand", **filt).collect()
+            b = small_engine.topk(terms, k=10, mode="exhaustive",
+                                  **filt).collect()
+            assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
+            for x, y in zip(a, b):
+                assert x["score"] == pytest.approx(y["score"], abs=1e-9)
 
 
 def test_filtered_wand_seeds_threshold_and_prunes(small_engine):
@@ -174,7 +188,7 @@ _ROLES = [None, "assistant", "user"]
 
 
 @pytest.mark.parametrize("seed", range(25))
-def test_topk_random(seed, tiny_engine, tiny_oracle):
+def test_topk_random(seed, tiny_engine, tiny_oracle, topk_paths):
     """Seeded random term multisets × k × mode × role filter, rank- and
     score-identical to the brute-force scorer. Duplicate query terms
     are generated on purpose (choices with replacement) — both engine
@@ -186,8 +200,10 @@ def test_topk_random(seed, tiny_engine, tiny_oracle):
     role = rng.choice(_ROLES)
     pred = (lambda m: m["role"] == role) if role else None
     expected = brute_topk(tiny_oracle, terms, k=k, predicate=pred)
-    for mode in ("exhaustive", "wand"):
-        kwargs = {"role": role} if role else {}
-        got = [(r["doc_id"], r["score"]) for r in
-               tiny_engine.topk(terms, k=k, mode=mode, **kwargs).collect()]
-        _assert_rank_identical(got, expected)
+    kwargs = {"role": role} if role else {}
+    for _ in topk_paths:
+        for mode in ("exhaustive", "wand"):
+            got = [(r["doc_id"], r["score"]) for r in
+                   tiny_engine.topk(terms, k=k, mode=mode,
+                                    **kwargs).collect()]
+            _assert_rank_identical(got, expected)

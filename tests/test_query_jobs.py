@@ -1,7 +1,8 @@
 """Spark jobs on the query path: exact-term lookups read the terms
-dictionary on the driver, a top-k attaches its winners' rows on the
-driver, and a BLS /hits page reads its KWIC and docInfos on the
-driver, so none pays a Spark job for work that small. Artifacts open
+dictionary on the driver, a top-k with few postings scores on the
+driver and every top-k attaches its winners' rows there, and a BLS
+/hits page reads its KWIC and docInfos on the driver, so none pays a
+Spark job for work that small. Artifacts open
 with the schema stored in their footers, so opening one runs no
 schema-inference job, and a build or an append pays no job for its
 statistics or its doc-id base. Checked with the status store's job
@@ -96,28 +97,106 @@ def test_lookup_terms_runs_no_spark_job(spark, tiny_index_dir):
     assert len(info) == 2 and n == 0
 
 
-def test_topk_runs_at_most_two_jobs(spark, tiny_index_dir):
+def test_topk_runs_no_spark_job(spark, tiny_index_dir):
     eng = SearchEngine.open(spark, tiny_index_dir)
     rows, n = _jobs(spark,
                     lambda: eng.topk("visa application", k=5).collect())
-    assert len(rows) == 5 and n <= 2
+    assert len(rows) == 5 and n == 0
     # the plan cache holds the rows: a repeat runs no job
     again, n = _jobs(spark,
                      lambda: eng.topk("visa application", k=5).collect())
     assert again == rows and n == 0
 
 
-def test_topk_plans_raise_no_user_warning(spark, tiny_index_dir):
+def test_topk_plans_raise_no_user_warning(spark, tiny_index_dir,
+                                          topk_paths):
     """Every applyInPandas kernel on the top-k and phrase paths is
     hinted so PySpark can infer its eval type, or not hinted at all."""
+    for _ in topk_paths:
+        eng = SearchEngine.open(spark, tiny_index_dir)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            eng.topk("visa application", k=5).collect()
+            eng.topk("visa", k=5, role="assistant").collect()
+            eng.topk("good", k=3, mode="wand", role="user").collect()
+            eng.phrase_hits("very good").count()
+        assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+# ---- top-k below the driver bound: no job, the Spark plans' bits ----
+
+@pytest.fixture(scope="module")
+def delta_index_dir(spark, tiny_pdf, tiny_index_dir, tmp_path_factory):
+    """A copy of the tiny index with one delta part: the tiny corpus's
+    first conversation appended again."""
+    from blacklab_spark.streaming.ingest import append_delta
+    out = str(tmp_path_factory.mktemp("idx") / "tiny_delta")
+    shutil.copytree(tiny_index_dir, out)
+    first = sorted(tiny_pdf["conv_id"].unique())[0]
+    append_delta(spark, out, spark.createDataFrame(
+        tiny_pdf[tiny_pdf["conv_id"] == first]),
+        BuildConfig(block_size=8, bucket_size=16, num_partitions=2))
+    return out
+
+
+# shape → (index fixture, top-k filters); "delta" opens main + delta
+_TOPK_SHAPES = {"unfiltered": ("tiny_index_dir", {}),
+                "role": ("tiny_index_dir", {"role": "assistant"}),
+                "tombstones": ("deleted_index_dir", {}),
+                "delta": ("delta_index_dir", {})}
+
+
+def _shape_topk(spark, request, shape):
+    """k → the (doc_id, score) rows of a "visa good" top-k of ``shape``,
+    run through a fresh engine."""
+    from blacklab_spark.streaming.ingest import DeltaSearchEngine
+    fixture, filters = _TOPK_SHAPES[shape]
+    path = request.getfixturevalue(fixture)
+    eng = (DeltaSearchEngine(spark, path) if shape == "delta"
+           else SearchEngine.open(spark, path))
+
+    def topk(k, mode="auto"):
+        return [(r["doc_id"], r["score"]) for r in eng.topk(
+            ["visa", "good"], k=k, mode=mode, **filters).collect()]
+    return topk
+
+
+@pytest.mark.parametrize("shape", ["role", "tombstones", "delta"])
+def test_topk_shapes_run_no_spark_job(spark, request, shape):
+    topk = _shape_topk(spark, request, shape)
+    rows, n = _jobs(spark, lambda: topk(5))
+    assert len(rows) == 5 and n == 0
+
+
+@pytest.mark.parametrize("shape", list(_TOPK_SHAPES))
+def test_driver_topk_rows_equal_spark_rows_bitwise(spark, request,
+                                                   monkeypatch, shape):
+    """Below the bound the driver scores with the Spark plans' kernel:
+    its rows equal the Spark exhaustive rows bit for bit."""
+    from blacklab_spark import engine
+    topk = _shape_topk(spark, request, shape)
+    driver = {k: topk(k) for k in (1, 5, 10)}
+    monkeypatch.setattr(engine, "DRIVER_TOPK_MAX_POSTINGS", 0)
+    for k, rows in driver.items():
+        want, n = _jobs(spark, lambda: topk(k, "exhaustive"))
+        assert n > 0 and len(rows) == k
+        assert [(d, s.hex()) for d, s in rows] == \
+            [(d, s.hex()) for d, s in want]
+
+
+def test_where_topk_runs_the_spark_plan(spark, tiny_index_dir, tiny_oracle):
+    """A ``where=`` string may name any doc_meta column, so its top-k
+    keeps the Spark plan, and stays oracle-exact."""
+    from blacklab_spark.oracle import brute_topk
     eng = SearchEngine.open(spark, tiny_index_dir)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        eng.topk("visa application", k=5).collect()
-        eng.topk("visa", k=5, role="assistant").collect()
-        eng.topk("good", k=3, mode="wand", role="user").collect()
-        eng.phrase_hits("very good").count()
-    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    rows, n = _jobs(spark, lambda: eng.topk(
+        "visa good", k=5, where="turn_idx > 2").collect())
+    want = brute_topk(tiny_oracle, ["visa", "good"], k=5,
+                      predicate=lambda m: m["turn_idx"] > 2)
+    assert n > 0 and len(want) == 5
+    assert [r["doc_id"] for r in rows] == [d for d, _ in want]
+    assert [r["score"] for r in rows] == \
+        pytest.approx([s for _, s in want], abs=1e-9)
 
 
 # ---- BLS /hits page: one window action and one count action --------

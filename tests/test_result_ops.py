@@ -114,22 +114,27 @@ def test_explain(tiny_engine):
     assert "WAND" in s and "visa" in s
 
 
-@pytest.mark.parametrize("threshold,filters,runs,strategy", [
-    (None, {}, "topk_wand", "block-max WAND"),
-    (None, {"role": "user"}, "topk_exhaustive", "exhaustive-then-filter"),
-    (0, {"role": "user"}, "topk_wand_filtered", "filtered block-max WAND"),
-], ids=["unfiltered", "filtered", "filtered-large"])
+@pytest.mark.parametrize("bound,threshold,filters,runs,strategy", [
+    (0, None, {}, "topk_wand", "block-max WAND"),
+    (0, None, {"role": "user"}, "topk_exhaustive", "exhaustive-then-filter"),
+    (0, 0, {"role": "user"}, "topk_wand_filtered", "filtered block-max WAND"),
+    (None, None, {"role": "user"}, "topk_driver", "driver exhaustive"),
+], ids=["unfiltered", "filtered", "filtered-large", "driver"])
 def test_explain_names_the_strategy_topk_runs(tiny_engine, monkeypatch,
-                                              threshold, filters, runs,
-                                              strategy):
+                                              bound, threshold, filters,
+                                              runs, strategy):
     """explain() and topk() share the mode="auto" rule: the strategy
     explain() prints is the plan function topk() calls. "filtered-large"
-    lowers the size threshold so the filtered WAND plan is chosen."""
+    lowers the size threshold so the filtered WAND plan is chosen; the
+    Spark cases set the driver bound to 0, and "driver" keeps it."""
     from blacklab_spark import engine as E
+    if bound is not None:
+        monkeypatch.setattr(E, "DRIVER_TOPK_MAX_POSTINGS", bound)
     if threshold is not None:
         monkeypatch.setattr(E, "AUTO_EXHAUSTIVE_MAX_DOCS", threshold)
     called = []
-    for name in ("topk_wand", "topk_wand_filtered", "topk_exhaustive"):
+    for name in ("topk_wand", "topk_wand_filtered", "topk_exhaustive",
+                 "topk_driver"):
         fn = getattr(E, name)
         monkeypatch.setattr(E, name, lambda *a, _n=name, _f=fn, **kw:
                             called.append(_n) or _f(*a, **kw))
@@ -138,6 +143,9 @@ def test_explain_names_the_strategy_topk_runs(tiny_engine, monkeypatch,
     assert called == [runs]
     explained = eng.explain(["visa"], k=3, **filters)
     assert f"strategy: {strategy}" in explained
+    sum_df = int(tiny_engine.index.lookup_terms(["visa"])["df"].sum())
+    assert (f"Σdf {sum_df}, driver bound DRIVER_TOPK_MAX_POSTINGS = "
+            f"{E.DRIVER_TOPK_MAX_POSTINGS}") in explained
 
 
 def test_kwic_pushes_anchor_docs_into_scan(tiny_engine):

@@ -27,27 +27,30 @@ def split_fixture(spark, tiny_pdf, tmp_path):
     return root, cfg, parts
 
 
-def test_append_delta_and_merge_equals_compacted(spark, split_fixture):
+def test_append_delta_and_merge_equals_compacted(spark, split_fixture,
+                                                 topk_paths):
     root, cfg, parts = split_fixture
     append_delta(spark, f"{root}/main",
                  spark.createDataFrame(parts["conv00001"]), cfg, "d1")
     append_delta(spark, f"{root}/main",
                  spark.createDataFrame(parts["conv00002"]), cfg, "d2")
     dse = DeltaSearchEngine(spark, f"{root}/main")
-    merged = [(r["doc_id"], r["score"]) for r in
-              dse.topk(["visa"], k=8).collect()]
     compact(spark, f"{root}/main", f"{root}/compacted", cfg)
     ceng = SearchEngine.open(spark, f"{root}/compacted")
-    crows = [(r["doc_id"], r["score"]) for r in
-             ceng.topk(["visa"], k=8, mode="exhaustive").collect()]
-    # same global BM25 stats → identical scores; doc ids may be
-    # permuted between id spaces, so compare score sequences + counts
-    assert [round(s, 9) for _, s in merged] == \
-        [round(s, 9) for _, s in crows]
+    for _ in topk_paths:
+        merged = [(r["doc_id"], r["score"]) for r in
+                  dse.topk(["visa"], k=8).collect()]
+        crows = [(r["doc_id"], r["score"]) for r in
+                 ceng.topk(["visa"], k=8, mode="exhaustive").collect()]
+        # same global BM25 stats → identical scores; doc ids may be
+        # permuted between id spaces, so compare score sequences
+        assert [round(s, 9) for _, s in merged] == \
+            [round(s, 9) for _, s in crows]
     assert dse.n_docs == ceng.index.n_docs
 
 
-def test_delta_wand_equals_exhaustive(spark, split_fixture, monkeypatch):
+def test_delta_wand_equals_exhaustive(spark, split_fixture, monkeypatch,
+                                      topk_paths):
     """Delta-engine block-pruned path ≡ exhaustive path, unfiltered
     and filtered (VERDICT r02 #7 'done' criterion — the delta path now
     carries the same dual-path guarantee as the main engine). The
@@ -61,17 +64,19 @@ def test_delta_wand_equals_exhaustive(spark, split_fixture, monkeypatch):
     append_delta(spark, f"{root}/main",
                  spark.createDataFrame(parts["conv00002"]), cfg, "d2")
     dse = DeltaSearchEngine(spark, f"{root}/main")
-    for kw in ({}, {"role": "assistant"}):
-        w = [(r["doc_id"], round(r["score"], 9)) for r in
-             dse.topk(["visa", "good"], k=6, mode="wand", **kw).collect()]
-        e = [(r["doc_id"], round(r["score"], 9)) for r in
-             dse.topk(["visa", "good"], k=6, mode="exhaustive",
-                      **kw).collect()]
-        assert w == e and w
+    for _ in topk_paths:
+        for kw in ({}, {"role": "assistant"}):
+            w = [(r["doc_id"], round(r["score"], 9)) for r in
+                 dse.topk(["visa", "good"], k=6, mode="wand",
+                          **kw).collect()]
+            e = [(r["doc_id"], round(r["score"], 9)) for r in
+                 dse.topk(["visa", "good"], k=6, mode="exhaustive",
+                          **kw).collect()]
+            assert w == e and w
 
 
 def test_delta_wand_keeps_live_docs_of_part_with_tombstones(
-        spark, split_fixture, monkeypatch):
+        spark, split_fixture, monkeypatch, topk_paths):
     """A part with tombstones feeds its live doc_meta rows to the
     kernel as the allowed set before the local top-k cut. Cutting
     first and anti-joining the tombstones after let a deleted doc take
@@ -95,16 +100,19 @@ def test_delta_wand_keeps_live_docs_of_part_with_tombstones(
         return [(r["doc_id"], r["score"]) for r in
                 dse.topk(terms, k=k, mode=mode).collect()]
 
-    want = {k: top(k, "exhaustive") for k in (1, 2, 3, 5, 8)}
-    assert [d for d, _ in want[2]] == [42, 29]
-    assert 21 in {d for d, _ in want[3]}
-    for gate in (wand.WAND_SEED_MIN_POSTINGS, 0):  # unseeded, seeded
-        monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", gate)
-        for k, expected in want.items():
-            got = top(k, "wand")
-            assert [d for d, _ in got] == [d for d, _ in expected], (gate, k)
-            assert [s for _, s in got] == [s for _, s in expected]
-            assert not {2, 27} & {d for d, _ in got}
+    seed_gate = wand.WAND_SEED_MIN_POSTINGS
+    for path in topk_paths:
+        want = {k: top(k, "exhaustive") for k in (1, 2, 3, 5, 8)}
+        assert [d for d, _ in want[2]] == [42, 29]
+        assert 21 in {d for d, _ in want[3]}
+        for gate in (seed_gate, 0):  # unseeded, seeded
+            monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", gate)
+            for k, expected in want.items():
+                got = top(k, "wand")
+                assert [d for d, _ in got] == [d for d, _ in expected], \
+                    (path, gate, k)
+                assert [s for _, s in got] == [s for _, s in expected]
+                assert not {2, 27} & {d for d, _ in got}
 
 
 def test_append_delta_idempotent(spark, split_fixture):
