@@ -63,8 +63,9 @@ PLAN_CACHE_SIZE = 64
 class SearchEngine:
     """``topk`` scores inside the call (on the driver below
     DRIVER_TOPK_MAX_POSTINGS, in Spark jobs above it) and returns a
-    driver-built frame of ≤k rows; ``find`` and the hit operators stay
-    lazy.
+    driver-built frame of ≤k rows; ``find`` decodes postings leaves and
+    phrases inside the call below hits.DRIVER_HITS_MAX_POSITIONS, and
+    stays lazy above it, like the hit operators.
     ``cache_size`` > 0 opts into the serving-path result cache
     (cache.py): repeated ``topk``/``count_hits`` calls return
     driver-materialized results without re-running Spark jobs, with
@@ -80,10 +81,15 @@ class SearchEngine:
         # PLAN-HANDLE memoization (always on): repeated queries return
         # the SAME DataFrame object — for top-k a local frame of its
         # ≤k rows; for find a lineage whose shuffle map outputs Spark
-        # reuses, re-running only the result stage. Results are
-        # deterministic in (query, immutable index artifacts), and the
-        # key embeds the tombstone listing so deletes refresh it. The
-        # LRU bound also bounds the shuffle files held lineages pin.
+        # reuses, re-running only the result stage, or, when its
+        # postings decoded on the driver, a local frame of fewer than
+        # hits.DRIVER_HITS_MAX_POSITIONS (10^5) hit rows. Such a frame
+        # holds about 100 B of driver JVM heap per row, so
+        # PLAN_CACHE_SIZE entries pin at most 64 × 10^5 × 100 B ≈ 640
+        # MB. Results are deterministic in (query, immutable index
+        # artifacts), and the key embeds the tombstone listing so
+        # deletes refresh it. The LRU bound also bounds the shuffle
+        # files held lineages pin.
         self._plan_cache = ResultCache(PLAN_CACHE_SIZE)
 
     @classmethod
@@ -237,8 +243,7 @@ class SearchEngine:
         from blacklab_spark.tokenizer import py_fold_insensitive
         info = self.index.expand_fuzzy(py_fold_insensitive(term),
                                        max_edits)
-        hits = H.hits_for_term_ids(self.index,
-                                   [int(t) for t in info["term_id"]])
+        hits = H.hits_for_term_ids(self.index, info)
         filt = self._doc_filter(**filters)
         if filt is not None:
             allowed = self.index.doc_meta.filter(filt).select("doc_id")
@@ -354,9 +359,11 @@ class SearchEngine:
                 hits = hits.limit(self.settings.max_hits_to_process)
             return hits
 
+        # the key holds the driver decode bound: a changed bound re-plans
         pkey = self._plan_key("find", cql, sensitivity, role, tool,
                               conv_id, where, filter,
-                              self.settings.max_hits_to_process)
+                              self.settings.max_hits_to_process,
+                              H.DRIVER_HITS_MAX_POSITIONS)
         return (build() if pkey is None
                 else self._plan_cache.get_or(pkey, build))
 

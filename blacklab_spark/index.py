@@ -32,12 +32,17 @@ def read_artifact(spark: SparkSession, path: str,
     footer, so opening it runs no schema-inference job (~50 ms each).
     Inference would return that same stored schema; a dir whose first
     file has none (written by pyarrow, say) reads with inference as
-    before. Spark lists more root paths than
+    before. A dir whose name starts with ``_`` (``_spans``,
+    ``_relations``, ``_alignments``, ``_deletes``) is read through its
+    file list: Spark would ignore it as a root path and log "All paths
+    were ignored". Spark lists more root paths than
     ``parallelPartitionDiscovery.threshold`` in a job, so a longer
     ``files`` list reads the whole dir instead."""
     names = files if files is not None else sorted(
         f for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith((".", "_")))
+    if files is None and os.path.basename(path).startswith("_"):
+        files = names  # Spark ignores a root path named "_x", with a warning
     paths = [path]
     if files is not None and len(files) <= int(spark.conf.get(
             "spark.sql.sources.parallelPartitionDiscovery.threshold")):
@@ -296,16 +301,19 @@ class InvertedIndex:
                 pdf.sort_values("term_id").reset_index(drop=True)
         return self._term_cache[key]
 
-    def posting_blocks(self, term_ids: list[int]) -> pd.DataFrame:
-        """The posting blocks of ``term_ids`` — the columns the BM25
-        kernel reads — with a driver-side Arrow read. The files are
+    def posting_blocks(self, term_ids: list[int],
+                       columns: tuple = ("term_id", "doc_ids", "tfs", "dls")
+                       ) -> pd.DataFrame:
+        """The posting blocks of ``term_ids`` — by default the columns
+        the BM25 kernel reads; the hit kernels read ``positions`` in
+        place of ``dls`` — with a driver-side Arrow read. The files are
         sorted by term_id, so the filter prunes row groups by their
         min/max stats."""
         if self._postings_ds is None:
             self._postings_ds = ds.dataset(
                 os.path.join(self.path, "postings"), format="parquet")
         return self._postings_ds.to_table(
-            columns=["term_id", "doc_ids", "tfs", "dls"],
+            columns=list(columns),
             filter=ds.field("term_id").isin(pa.array(term_ids, pa.int64())),
         ).to_pandas()
 

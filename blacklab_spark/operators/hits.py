@@ -14,11 +14,30 @@ the Spark equivalent of Contexts.java:34-120 forward-index lookups.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from blacklab_spark.index import InvertedIndex
 
 DEFAULT_CONTEXT = 5  # reference: search/BlackLabIndex.java:71
+
+# Σcf of the term_ids a postings leaf or phrase decodes (the positions
+# its blocks hold) below which it decodes on the driver
+# (decodes_on_driver): the blocks are read with Arrow and the hits come
+# back as a local frame. Measured with find(q).count() on fresh plans at
+# local[2] on a 4-CPU Xeon (bench-fixture index, 82k turns, block_size
+# 128, bucket_size 4096): a leaf, whose every position is a hit row,
+# took 0.30-0.36 s on the driver against 0.89-1.02 s in Spark at Σcf
+# 10^4-3×10^4, 0.76 against 0.89 s at 1.1×10^5, and 1.88 against
+# 1.10 s at 4×10^5; the driver's time grows about 4 µs per hit row,
+# most of it Spark's count over the local relation (0.81 of 1.26 s at
+# 2.3×10^5 rows), so the crossover is near 1.5×10^5. Phrases return few rows and were
+# faster on the driver still at 3.3×10^5 (0.50-0.59 against 0.90-1.17
+# s). The bound sits below the leaf crossover. A local frame holds
+# about 100 B of driver JVM heap per row (10.7 MB measured for 1.08×10^5
+# rows), so a cached find pins under 10 MB and the engine's plan cache,
+# at worst engine.PLAN_CACHE_SIZE = 64 such finds, about 640 MB.
+DRIVER_HITS_MAX_POSITIONS = 100_000
 
 
 #: sensitivity → (doc_meta token column, query-term desensitizer).
@@ -65,29 +84,47 @@ def term_hits(index: InvertedIndex, term: str,
                     (F.col("start") + 1).cast("int").alias("end")))
 
 
-def hits_for_term_ids(index: InvertedIndex,
-                      term_ids: list[int]) -> DataFrame:
-    """Positions of a set of term_ids decoded from POSTING BLOCKS —
-    the postings-backed leaf (≙ Lucene reading a term's postings
-    instead of walking the forward index). Touches only the terms'
-    blocks: for a hapax term this reads a few KB, where the
-    token-array probe would scan the whole corpus. No shuffle, no
-    groupBy — each block row decodes independently (mapInArrow).
+def decodes_on_driver(n_positions: int) -> bool:
+    """Whether a postings leaf or phrase that decodes ``n_positions``
+    positions (the Σcf of its term_ids) runs on the driver."""
+    return n_positions < DRIVER_HITS_MAX_POSITIONS
+
+
+def hits_for_term_ids(index: InvertedIndex, terms: pd.DataFrame) -> DataFrame:
+    """Positions of a set of terms decoded from POSTING BLOCKS — the
+    postings-backed leaf (≙ Lucene reading a term's postings instead of
+    walking the forward index). ``terms`` are the leaf's terms rows
+    (``lookup_terms``/``expand_*``: ``term_id`` and ``cf``). Touches
+    only the terms' blocks: for a hapax term this reads a few KB, where
+    the token-array probe would scan the whole corpus.
+
+    Below ``DRIVER_HITS_MAX_POSITIONS`` (Σcf) the blocks are read with
+    Arrow and decoded on the driver by the phrase kernel with one slot
+    (phrase.postings_hits): a local frame sorted by (doc_id, start),
+    tombstones dropped. Otherwise each block row decodes independently
+    in a ``mapInArrow`` task — no shuffle, no groupBy. No terms → an
+    empty local frame.
 
     Reference analog: BLSpanTermQuery over Lucene postings
     (search/lucene/BLSpanTermQuery.java:52); dual physical path to
     :func:`term_hits` like SpansFiSeq vs postings sequences
     (SURVEY.md §4.4)."""
     import pyarrow as pa
-    from blacklab_spark.operators.phrase import _decode_doc_positions
+    from blacklab_spark.operators.phrase import (_decode_doc_positions,
+                                                 postings_hits)
+    from blacklab_spark.operators.spans import no_hits
 
-    if not term_ids:
-        return index.spark.createDataFrame(
-            [], "doc_id long, start int, end int")
+    if terms.empty:
+        return no_hits(index)
     if not index.cfg.store_positions:
         raise ValueError("index built without positions")
+    term_ids = [int(t) for t in terms["term_id"]]
+    n_positions = int(terms["cf"].sum())
+    if decodes_on_driver(n_positions):
+        return postings_hits(index, {t: [0] for t in term_ids}, (0,),
+                             n_positions)
     blocks = (index.postings
-              .filter(F.col("term_id").isin([int(t) for t in term_ids]))
+              .filter(F.col("term_id").isin(term_ids))
               .select("doc_ids", "tfs", "positions"))
 
     def gen(batches):
@@ -116,8 +153,7 @@ def hits_for_term_ids(index: InvertedIndex,
 def term_hits_via_postings(index: InvertedIndex, term: str) -> DataFrame:
     """Single-term postings leaf (insensitive layer — postings are
     built over @i tokens)."""
-    info = index.lookup_terms([term])
-    return hits_for_term_ids(index, [int(t) for t in info["term_id"]])
+    return hits_for_term_ids(index, index.lookup_terms([term]))
 
 
 def term_hits_auto(index: InvertedIndex, term: str,

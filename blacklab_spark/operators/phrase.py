@@ -14,9 +14,15 @@ decision logic SURVEY.md §4.4):
   acceptable or a cheap pre-filter (array_contains of the rarest term)
   prunes most docs — exactly the reference's NFA-side win.
 * ``phrase_via_postings`` — decode the phrase terms' position lists
-  from posting blocks, per-bucket document-at-a-time position
-  intersection (numpy). Best for rare phrases over huge corpora:
-  touches only the terms' postings, never the corpus.
+  from posting blocks and intersect them (numpy, ``_phrase_kernel``).
+  Best for rare phrases over huge corpora: touches only the terms'
+  postings, never the corpus. Slots carry offsets, so a fixed-gap
+  phrase (``"a" [] "b"``, offsets 0 and 2) is the same intersection.
+  Below ``hits.DRIVER_HITS_MAX_POSITIONS`` (the terms' Σcf) the blocks
+  are read with Arrow and the kernel runs once on the driver, giving a
+  local frame; at or above it the kernel runs per doc-range bucket in
+  ``applyInPandas``. A postings leaf (``hits.hits_for_term_ids``)
+  decodes on the driver through the same kernel with one slot.
 
 Both must return identical hit lists (dual-path test ≙ reference
 _FI1/_FI2 goldens, test/test/hits.js:55-57). Hits are half-open token
@@ -32,6 +38,9 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from blacklab_spark import codec
 from blacklab_spark.index import InvertedIndex
+
+# the posting-block columns the hit kernels decode
+POSITION_COLUMNS = ("term_id", "doc_ids", "tfs", "positions")
 
 HITS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -86,17 +95,25 @@ def _decode_doc_positions(blob_doc: bytes, blob_tf: bytes,
     return np.repeat(docs, tf), pos
 
 
-def _phrase_kernel(slots_of: dict[int, list[int]], n_terms: int):
-    """Per-bucket kernel: vectorized position intersection.
+def _phrase_kernel(slots_of: dict[int, list[int]], offsets: tuple[int, ...]):
+    """Position-intersection kernel over posting blocks → hits sorted
+    by (doc_id, start): one call per bucket on the Spark path, one call
+    over every block on the driver, and, with one slot, the decode of a
+    postings leaf.
 
     Keys (doc_id << 21 | position) make slot membership an int64
     ``isin`` (sort + searchsorted in numpy) — no per-doc Python.
     Positions are < 2^21 tokens/turn by construction; doc ids fit the
-    remaining 42 bits per bucket. ``slots_of`` maps a term_id to EVERY
-    phrase slot it occupies — a repeated word ("the" "the") decodes
-    once and feeds each of its slots."""
+    remaining 42 bits. Slot ``i`` holds its term at ``start +
+    offsets[i]`` (``offsets[0] == 0``) and the hit ends one token after
+    the last slot, so ``"a" [] "b"`` is offsets (0, 2), hits 3 tokens
+    wide. Grouping the blocks differently does not change the output:
+    a key is one doc's position. ``slots_of`` maps a term_id to EVERY slot it occupies — a
+    repeated word ("the" "the") decodes once and feeds each of its
+    slots; a slot fed by several terms (an OR leaf) keeps one key per
+    (term, position)."""
     def kernel(key, pdf):
-        slot_keys: list[list[np.ndarray]] = [[] for _ in range(n_terms)]
+        slot_keys: list[list[np.ndarray]] = [[] for _ in offsets]
         for term_id, blob_doc, blob_tf, blob_pos in zip(
                 pdf["term_id"], pdf["doc_ids"], pdf["tfs"], pdf["positions"]):
             d, p = _decode_doc_positions(blob_doc, blob_tf, blob_pos)
@@ -109,26 +126,58 @@ def _phrase_kernel(slots_of: dict[int, list[int]], n_terms: int):
             return empty
         keys = [np.sort(np.concatenate(ks)) for ks in slot_keys]
         cand = keys[0]
-        for i in range(1, n_terms):
-            cand = cand[np.isin(cand + i, keys[i], assume_unique=True)]
+        for off, k in zip(offsets[1:], keys[1:]):
+            cand = cand[np.isin(cand + off, k, assume_unique=True)]
             if cand.size == 0:
                 return empty
-        doc = cand >> np.int64(21)
         start = (cand & np.int64((1 << 21) - 1)).astype(np.int32)
-        return pd.DataFrame({"doc_id": doc, "start": start,
-                             "end": start + n_terms})
+        return pd.DataFrame({"doc_id": cand >> np.int64(21), "start": start,
+                             "end": start + np.int32(offsets[-1] + 1)})
 
     return kernel
 
 
-def phrase_via_postings(index: InvertedIndex, terms: list[str]) -> DataFrame:
-    """Postings path: bucket-grouped position intersection."""
+def postings_hits(index: InvertedIndex, slots_of: dict[int, list[int]],
+                  offsets: tuple[int, ...], n_positions: int) -> DataFrame:
+    """Hits of :func:`_phrase_kernel` over the blocks of the term_ids in
+    ``slots_of``, tombstones dropped. ``n_positions`` — the term_ids'
+    Σcf, what the decode produces — picks the side: below
+    ``hits.DRIVER_HITS_MAX_POSITIONS`` the blocks are read with Arrow
+    and the kernel runs once on the driver, giving a local frame sorted
+    by (doc_id, start); otherwise it runs per bucket in Spark."""
+    from blacklab_spark.operators import hits as H
+    if not H.decodes_on_driver(n_positions):
+        blocks = index.postings.filter(
+            F.col("term_id").isin(list(slots_of.keys())))
+        out = (blocks.select("bucket", "term_id", "doc_ids", "tfs",
+                             "positions")
+               .groupBy("bucket")
+               .applyInPandas(_phrase_kernel(slots_of, offsets),
+                              HITS_SCHEMA))
+        return index.without_deleted(out).orderBy("doc_id", "start")
+    from blacklab_spark.operators.scoring import local_frame
+    blocks = index.posting_blocks(list(slots_of), POSITION_COLUMNS)
+    hits = _phrase_kernel(slots_of, offsets)(None, blocks)
+    dead = index.tombstoned_ids()
+    if dead.size:
+        hits = hits[~np.isin(hits["doc_id"].to_numpy(), dead)]
+    return local_frame(index.spark, hits, HITS_SCHEMA)
+
+
+def phrase_via_postings(index: InvertedIndex, terms: list[str],
+                        offsets: tuple[int, ...] | None = None) -> DataFrame:
+    """Postings path: position intersection of ``terms``, term ``i`` at
+    ``start + offsets[i]`` (default: adjacent, a plain phrase), hits
+    ending one token after the last term."""
     if not index.cfg.store_positions:
         raise ValueError("index built without positions")
+    if offsets is None:
+        offsets = tuple(range(len(terms)))
     info = index.lookup_terms(terms)
     have = set(info["term"])
     if any(t not in have for t in terms):
-        return index.spark.createDataFrame([], HITS_SCHEMA)
+        from blacklab_spark.operators.spans import no_hits
+        return no_hits(index)
     tid_of = {t: int(i) for t, i in zip(info["term"], info["term_id"])}
     # slots_of: term_id → every slot it fills; a repeated word's
     # positions decode once and serve all its slots (no forward-index
@@ -136,10 +185,5 @@ def phrase_via_postings(index: InvertedIndex, terms: list[str]) -> DataFrame:
     slots_of: dict[int, list[int]] = {}
     for i, t in enumerate(terms):
         slots_of.setdefault(tid_of[t], []).append(i)
-    n = len(terms)
-    blocks = index.postings.filter(
-        F.col("term_id").isin(list(slots_of.keys())))
-    out = (blocks.select("bucket", "term_id", "doc_ids", "tfs", "positions")
-           .groupBy("bucket")
-           .applyInPandas(_phrase_kernel(slots_of, n), HITS_SCHEMA))
-    return index.without_deleted(out).orderBy("doc_id", "start")
+    return postings_hits(index, slots_of, tuple(offsets),
+                         int(info["cf"].sum()))

@@ -133,7 +133,7 @@ def doc_scores(index: InvertedIndex, terms: list[str],
     info = index.lookup_terms(terms)
     spark = index.spark
     if info.empty:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, pd.DataFrame(), SCORE_SCHEMA)
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
     blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
     scores = index.without_deleted(
@@ -151,6 +151,17 @@ def local_frame(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
     if pdf.empty:
         return spark.createDataFrame(to_arrow_schema(schema).empty_table())
     return spark.createDataFrame(pdf, schema)
+
+
+def local_rows(df: DataFrame) -> list | None:
+    """The rows of ``df`` if its optimized plan is a local relation
+    (a :func:`local_frame`, maybe under a projection or limit, which
+    Catalyst folds into it) — collecting it runs no Spark job — else
+    None."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return df.collect()
 
 
 def winner_rows(index: InvertedIndex, winners: pd.DataFrame) -> DataFrame:

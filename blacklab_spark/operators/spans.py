@@ -172,9 +172,12 @@ def any_token(index: InvertedIndex, min_len: int = 1,
 
 
 def no_hits(index: InvertedIndex) -> DataFrame:
-    """Empty relation (SpanQueryNoHits.java:20)."""
-    return index.spark.createDataFrame(
-        [], "doc_id long, start int, end int")
+    """Empty relation (SpanQueryNoHits.java:20), a local frame whose
+    collect runs no Spark job."""
+    import pandas as pd
+    from blacklab_spark.operators.phrase import HITS_SCHEMA
+    from blacklab_spark.operators.scoring import local_frame
+    return local_frame(index.spark, pd.DataFrame(), HITS_SCHEMA)
 
 
 def fixed_span(index: InvertedIndex, start: int, end: int) -> DataFrame:

@@ -44,11 +44,13 @@ test/test/hits.js:55-57).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from blacklab_spark.index import InvertedIndex
-from blacklab_spark.operators.scoring import finish_topk, score_buckets
+from blacklab_spark.operators.scoring import (SCORE_SCHEMA, finish_topk,
+                                              local_frame, score_buckets)
 
 # Skip the threshold-seeding pass below this many candidate postings
 # (Σ df over the query terms). Seeding costs one fixed Spark job
@@ -144,7 +146,7 @@ def wand_scores(index: InvertedIndex, terms: list[str],
     True/False forces it (tests / debugging)."""
     info = index.lookup_terms(terms)
     if info.empty:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(index.spark, pd.DataFrame(), SCORE_SCHEMA)
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
     blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
     if seed is None:
@@ -269,8 +271,8 @@ def topk_wand_filtered(index: InvertedIndex, terms: list[str],
     score-identical to exhaustive-then-filter (dual-path tested)."""
     info = index.lookup_terms(terms)
     if info.empty:
-        return finish_topk(index, index.spark.createDataFrame(
-            [], "doc_id long, score double"), k)
+        return finish_topk(
+            index, local_frame(index.spark, pd.DataFrame(), SCORE_SCHEMA), k)
     idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
     part = (index, 0, idf_map, index.avgdl, F.col("max_score"))
     return finish_topk(index, parts_scores(

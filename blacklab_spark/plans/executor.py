@@ -8,13 +8,16 @@ function, and Catalyst then handles join strategy, pushdown and AQE.
 Physical leaf strategy (round 2): Term/Regex leaves decode POSTING
 BLOCKS (hits_for_term_ids) instead of scanning the corpus's token
 arrays — a hapax-term CQL query now reads a few KB of blocks, not
-every doc. Sequences of width-1 leaves pick between three plans from
-term statistics, mirroring the reference's cost-based
+every doc. Below hits.DRIVER_HITS_MAX_POSITIONS (Σcf) a leaf or phrase
+decodes on the driver and returns a local frame. Sequences of width-1
+leaves pick between three plans from term statistics, mirroring the
+reference's cost-based
 ClauseCombinerNfa decision (optimize/ClauseCombinerNfa.java:38-200,
 threshold :67):
 
-* all-Term phrase → vectorized postings intersection
-  (phrase_via_postings);
+* all-Term phrase, or fixed-gap phrase (``"a" []{m} "b"``, rewritten
+  to ``SEQ(EXPAND(a, right, m, m), b)``) → vectorized postings
+  intersection with slot offsets (phrase_via_postings);
 * rare anchor + ≫cf neighbours → FiSeq: decode only the anchor's
   postings, push the anchor's doc ids into the doc_meta parquet scan
   (row-group pruning) and verify neighbours by probing token arrays
@@ -29,6 +32,7 @@ engine/src/main/java/nl/inl/blacklab/search/BlackLabIndex.java:230).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from blacklab_spark.index import InvertedIndex
@@ -72,7 +76,7 @@ _NO_STATS = 1 << 60   # non-word layers have no dictionary stats
 
 
 def _leaf_info(index: InvertedIndex, c: Q.Pattern):
-    """(cf, df, term_ids) for a width-1 leaf, from the terms table.
+    """(cf, df, terms rows) for a width-1 leaf, from the terms table.
     Non-word annotation layers carry no postings/stats → effectively
     infinite cost, so they are never picked as the FiSeq anchor but
     CAN be verified by the forward-index probe."""
@@ -82,8 +86,7 @@ def _leaf_info(index: InvertedIndex, c: Q.Pattern):
         info = index.lookup_terms([c.text])
     else:
         info = index.expand_regex(f"(?iu)^(?:{c.pattern})$")
-    return (int(info["cf"].sum()), int(info["df"].sum()),
-            [int(t) for t in info["term_id"]])
+    return (int(info["cf"].sum()), int(info["df"].sum()), info)
 
 
 def _fiseq(index: InvertedIndex, clauses, stats, a: int) -> DataFrame:
@@ -149,16 +152,49 @@ def _fiseq(index: InvertedIndex, clauses, stats, a: int) -> DataFrame:
                     (start0 + n).cast("int").alias("end"))
 
 
+def _word_term(c) -> bool:
+    return isinstance(c, Q.Term) and c.layer == "word"
+
+
+def _gap_offsets(clauses) -> tuple[int, ...] | None:
+    """Slot offsets of a fixed-gap phrase: every clause a word Term or,
+    except the last, ``Expand(word Term, right, m, m)`` — the rewrite of
+    ``"a" []{m} "b"``. The following term's hit proves the expansion
+    in bounds, so no doc-length clamp is needed. None otherwise."""
+    offsets, pos = [], 0
+    for i, c in enumerate(clauses):
+        offsets.append(pos)
+        if _word_term(c):
+            pos += 1
+        elif (isinstance(c, Q.Expand) and _word_term(c.clause)
+              and c.direction == "right" and c.min_exp == c.max_exp
+              and i < len(clauses) - 1):
+            pos += 1 + c.min_exp
+        else:
+            return None
+    return tuple(offsets)
+
+
 def _seq_choice(index: InvertedIndex, clauses):
-    """Cost-based physical decision for a sequence of width-1 leaves:
-    ('fiseq', anchor_idx, stats) | ('phrase',) | ('empty',) |
-    ('generic',). Shared by execution and explain()."""
+    """Cost-based physical decision for a sequence of width-1 leaves
+    or a fixed-gap phrase: ('fiseq', anchor_idx, stats) |
+    ('phrase', terms, offsets) | ('empty',) | ('generic',). Shared by
+    execution and explain()."""
     if not index.cfg.store_positions:
         return ("generic",)
+    if any(isinstance(c, Q.Expand) for c in clauses):
+        offsets = _gap_offsets(clauses)
+        if offsets is None:
+            return ("generic",)
+        terms = [c.clause.text if isinstance(c, Q.Expand) else c.text
+                 for c in clauses]
+        if len(index.lookup_terms(terms)) < len(set(terms)):
+            return ("empty",)
+        return ("phrase", terms, offsets)
     if not all(isinstance(c, (Q.Term, Q.Regex)) for c in clauses):
         return ("generic",)
     stats = [_leaf_info(index, c) for c in clauses]
-    if any(s[2] is not None and not s[2] for s in stats):
+    if any(s[2] is not None and s[2].empty for s in stats):
         return ("empty",)         # a word-layer leaf matches no term
     a = min(range(len(clauses)), key=lambda i: stats[i][0])
     if stats[a][2] is None:
@@ -175,8 +211,9 @@ def _seq_choice(index: InvertedIndex, clauses):
             # primary values too)
             and not _fiseq_synonym_unsafe(index, clauses)):
         return ("fiseq", a, stats)
-    if all(isinstance(c, Q.Term) and c.layer == "word" for c in clauses):
-        return ("phrase",)
+    if all(_word_term(c) for c in clauses):
+        return ("phrase", [c.text for c in clauses],
+                tuple(range(len(clauses))))
     return ("generic",)
 
 
@@ -188,11 +225,12 @@ def _seq_strategy(index: InvertedIndex, clauses) -> DataFrame | None:
     if choice[0] == "fiseq":
         return _fiseq(index, clauses, choice[2], choice[1])
     if choice[0] == "phrase":
-        return P.phrase_via_postings(index, [c.text for c in clauses])
+        return P.phrase_via_postings(index, choice[1], choice[2])
     return None
 
 
-def _or_merge_term_ids(index: InvertedIndex, clauses) -> list[int] | None:
+def _or_merge_term_ids(index: InvertedIndex,
+                       clauses) -> pd.DataFrame | None:
     """Memoizing wrapper: planning calls this for the same Or node
     up to three times per query (_guar, the exec branch, explain()),
     and each uncached call re-runs the driver-side dictionary
@@ -212,8 +250,9 @@ def _or_merge_term_ids(index: InvertedIndex, clauses) -> list[int] | None:
 
 
 def _or_merge_term_ids_uncached(index: InvertedIndex,
-                                clauses) -> list[int] | None:
-    """OR of word-layer term-set leaves → ONE postings decode.
+                                clauses) -> pd.DataFrame | None:
+    """OR of word-layer term-set leaves → ONE postings decode over
+    their combined terms rows (term_id, cf).
 
     When every clause is a word-layer Term/Regex/Fuzzy and their
     dictionary expansions are pairwise DISJOINT, the union of hits is
@@ -227,7 +266,7 @@ def _or_merge_term_ids_uncached(index: InvertedIndex,
     (the SimplestMatcher family, query rewriting.md:30-64)."""
     if not index.cfg.store_positions:
         return None
-    ids: list[int] = []
+    infos = []
     for c in clauses:
         if getattr(c, "layer", None) != "word":
             return None
@@ -239,10 +278,11 @@ def _or_merge_term_ids_uncached(index: InvertedIndex,
             info = index.expand_fuzzy(c.text, c.max_edits)
         else:
             return None
-        ids.extend(int(t) for t in info["term_id"])
-    if len(ids) != len(set(ids)):
+        infos.append(info[["term_id", "cf"]])
+    rows = pd.concat(infos, ignore_index=True)
+    if not rows["term_id"].is_unique:
         return None          # overlap → union semantics must keep dups
-    return ids
+    return rows
 
 
 def _or_annot_merge(clauses) -> tuple[str, tuple[str, ...]] | None:
@@ -584,18 +624,15 @@ def _exec(index: InvertedIndex, p: Q.Pattern) -> DataFrame:
             return S.annot_term(index, p.layer, p.text)
         if index.cfg.store_positions:
             from blacklab_spark.operators.hits import hits_for_term_ids
-            info = index.lookup_terms([p.text])
-            return hits_for_term_ids(index,
-                                     [int(t) for t in info["term_id"]])
+            return hits_for_term_ids(index, index.lookup_terms([p.text]))
         return S.term(index, p.text)
     if isinstance(p, Q.Regex):
         if p.layer != "word":
             return S.annot_regex(index, p.layer, p.pattern)
         if index.cfg.store_positions:
             from blacklab_spark.operators.hits import hits_for_term_ids
-            info = index.expand_regex(f"(?iu)^(?:{p.pattern})$")
-            return hits_for_term_ids(index,
-                                     [int(t) for t in info["term_id"]])
+            return hits_for_term_ids(
+                index, index.expand_regex(f"(?iu)^(?:{p.pattern})$"))
         return S.regex_terms(index, p.pattern)
     if isinstance(p, Q.Fuzzy):
         if p.layer != "word":
@@ -606,8 +643,7 @@ def _exec(index: InvertedIndex, p: Q.Pattern) -> DataFrame:
             return S.no_hits(index)
         if index.cfg.store_positions:
             from blacklab_spark.operators.hits import hits_for_term_ids
-            return hits_for_term_ids(index,
-                                     [int(t) for t in info["term_id"]])
+            return hits_for_term_ids(index, info)
         return S.or_(*[S.term(index, t) for t in info["term"]])
     if isinstance(p, Q.NoHits):
         return S.no_hits(index)
@@ -1037,7 +1073,8 @@ def explain(cql: str, index: InvertedIndex | None = None) -> str:
                 if merged is not None:
                     lines.append(
                         f"or {Q.pattern_str(node)} -> merged postings "
-                        f"decode ({len(merged)} terms, one block scan)")
+                        f"decode ({len(merged)} terms, one block scan)"
+                        + _decode_note(merged))
                 elif _or_annot_merge(node.clauses) is not None:
                     layer = node.clauses[0].layer
                     lines.append(
@@ -1061,6 +1098,9 @@ def explain(cql: str, index: InvertedIndex | None = None) -> str:
                         "empty": "no-hits (term absent)",
                         "generic": generic_desc}[choice[0]]
                 extra = ""
+                if choice[0] == "phrase":
+                    extra = (f", offsets {list(choice[2])}" + _decode_note(
+                        index.lookup_terms(choice[1])))
                 if choice[0] == "fiseq":
                     a = choice[1]
                     extra = (f" [anchor clause {a}: "
@@ -1068,17 +1108,29 @@ def explain(cql: str, index: InvertedIndex | None = None) -> str:
                 lines.append(
                     f"seq {Q.pattern_str(node)} -> {desc}{extra}")
             elif isinstance(node, Q.Fuzzy):
-                n = len(index.expand_fuzzy(node.text, node.max_edits))
+                info = index.expand_fuzzy(node.text, node.max_edits)
                 lines.append(f"leaf {Q.pattern_str(node)} -> fuzzy "
-                             f"dictionary expansion ({n} terms) + "
-                             "postings decode")
+                             f"dictionary expansion ({len(info)} terms) + "
+                             "postings decode" + _decode_note(info))
             elif isinstance(node, (Q.Term, Q.Regex)):
                 layer = getattr(node, "layer", "word")
-                strat = ("postings block decode" if
-                         layer == "word" and index.cfg.store_positions
-                         else f"forward-index probe ({layer} layer)")
+                if layer == "word" and index.cfg.store_positions:
+                    strat = "postings block decode" + _decode_note(
+                        _leaf_info(index, node)[2])
+                else:
+                    strat = f"forward-index probe ({layer} layer)"
                 lines.append(f"leaf {Q.pattern_str(node)} -> {strat}")
     return "\n".join(lines)
+
+
+def _decode_note(terms: pd.DataFrame) -> str:
+    """explain()'s note on a postings decode: the Σcf of its terms rows,
+    the driver bound and the side the decode runs on."""
+    from blacklab_spark.operators import hits as H
+    n = int(terms["cf"].sum())
+    side = "driver decode" if H.decodes_on_driver(n) else "Spark decode"
+    return (f" [Σcf={n}, DRIVER_HITS_MAX_POSITIONS="
+            f"{H.DRIVER_HITS_MAX_POSITIONS}: {side}]")
 
 
 def _walk(p: Q.Pattern):

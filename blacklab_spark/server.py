@@ -703,6 +703,10 @@ class BlsApp:
             }
 
         counted = hits
+        # a local frame (a postings leaf or phrase decoded on the
+        # driver) collects without a job: window and count its rows here
+        from blacklab_spark.operators.scoring import local_rows
+        local = None if sort else local_rows(hits)
         if sort:
             from blacklab_spark.operators.properties import sort_hits
             try:
@@ -711,6 +715,9 @@ class BlsApp:
             except ValueError as e:
                 raise BlsError(400, "UNKNOWN_SORT_PROPERTY",
                                str(e)) from None
+        elif local is not None:
+            window = sorted(local, key=lambda r: (r["doc_id"], r["start"])
+                            )[first:first + number]
         else:
             from blacklab_spark.operators.hits import window_hits
             window = window_hits(hits, first, number).collect()
@@ -751,6 +758,8 @@ class BlsApp:
         # numberOfHits and numberOfDocs come from one action; a count
         # cap is min(total, cap), what a limit-then-count returns
         def counts() -> tuple[int, int]:
+            if local is not None:
+                return len(local), len({r["doc_id"] for r in local})
             n, d = (counted.groupBy("doc_id").count()
                     .agg(F.sum("count"), F.count("*")).collect()[0])
             return int(n or 0), int(d)

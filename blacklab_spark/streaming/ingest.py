@@ -106,7 +106,10 @@ class DeltaSearchEngine:
         plan locally — postings leaves, cost-based sequences, the
         whole span algebra — its tombstones are honored (``find``
         returns tombstone-free hits), local hit doc ids shift by the
-        part's recorded offset, and the results union. Identical to a
+        part's recorded offset, and the results union. Each part picks
+        its own decode side (hits.DRIVER_HITS_MAX_POSITIONS, on the
+        part's Σcf), so the union of driver-decoded parts is one of
+        local frames. Identical to a
         compacted rebuild's hits by construction (ids are the
         one-shot build's when parts were appended in (conv_id,
         turn_idx) order — tested)."""

@@ -66,6 +66,14 @@ def small_engine(spark, small_index_dir):
     return SearchEngine.open(spark, small_index_dir)
 
 
+def _bound_paths(monkeypatch, module, name: str):
+    """Yield "driver" with the driver bound ``module.name`` at its
+    default, then "spark" with it at 0."""
+    for path, bound in (("driver", getattr(module, name)), ("spark", 0)):
+        monkeypatch.setattr(module, name, bound)
+        yield path
+
+
 @pytest.fixture()
 def topk_paths(monkeypatch):
     """Iterate it to run a test body on both top-k paths: first with
@@ -74,10 +82,15 @@ def topk_paths(monkeypatch):
     every top-k runs its Spark plan and WAND, exhaustive and the oracle
     stay compared there. Yields the path's name."""
     from blacklab_spark import engine
+    return _bound_paths(monkeypatch, engine, "DRIVER_TOPK_MAX_POSTINGS")
 
-    def paths():
-        for path, bound in (("driver", engine.DRIVER_TOPK_MAX_POSTINGS),
-                            ("spark", 0)):
-            monkeypatch.setattr(engine, "DRIVER_TOPK_MAX_POSTINGS", bound)
-            yield path
-    return paths()
+
+@pytest.fixture()
+def hits_paths(monkeypatch):
+    """Iterate it to run a test body on both CQL postings paths: first
+    with ``hits.DRIVER_HITS_MAX_POSITIONS`` at its default, so a leaf or
+    phrase with few positions decodes on the driver into a local frame,
+    then with the bound at 0, so every one runs its Spark plan. Yields
+    the path's name."""
+    from blacklab_spark.operators import hits
+    return _bound_paths(monkeypatch, hits, "DRIVER_HITS_MAX_POSITIONS")

@@ -60,9 +60,24 @@ def test_rewrite_rules():
     assert rewrite(Q.Not(Q.Not(Q.Term("x")))) == Q.Term("x")
 
 
-def test_explain():
+def test_explain(idx, monkeypatch):
     s = explain('"a" [] "b"')
     assert "original" in s and "EXPAND" in s
+    # with an index, each leaf and phrase line names its Σcf, the
+    # driver bound and the side its postings decode runs on
+    from blacklab_spark.operators import hits
+    bound = hits.DRIVER_HITS_MAX_POSITIONS
+    cf = {t: int(idx.lookup_terms([t])["cf"].sum())
+          for t in ("visa", "application")}
+    s = explain('"visa" [] "application"', idx)
+    assert ("-> postings position-intersection, offsets [0, 2] "
+            f"[Σcf={cf['visa'] + cf['application']}, "
+            f"DRIVER_HITS_MAX_POSITIONS={bound}: driver decode]") in s
+    assert (f'leaf "visa" -> postings block decode [Σcf={cf["visa"]}, '
+            f"DRIVER_HITS_MAX_POSITIONS={bound}: driver decode]") in s
+    monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
+    s = explain('"visa" [] "application"', idx)
+    assert "driver decode" not in s and s.count("Spark decode") == 3
 
 
 # ---------------- executor vs oracle ----------------
@@ -75,29 +90,31 @@ def otoks(o):
     return o.tokens
 
 
-def test_find_term(idx, tiny_oracle):
-    got = hits_of(find(idx, '"visa"'))
+def test_find_term(idx, tiny_oracle, hits_paths):
     expected = sorted((d, p, p + 1)
                       for d, ps in tiny_oracle.postings["visa"].items()
                       for p in ps)
-    assert got == expected
+    for _ in hits_paths:
+        assert hits_of(find(idx, '"visa"')) == expected
 
 
-def test_find_phrase(idx, tiny_oracle):
+def test_find_phrase(idx, tiny_oracle, hits_paths):
     from blacklab_spark.oracle import phrase_hits
-    assert hits_of(find(idx, '"very good"')) == \
-        phrase_hits(tiny_oracle, ["very", "good"])
+    for _ in hits_paths:
+        assert hits_of(find(idx, '"very good"')) == \
+            phrase_hits(tiny_oracle, ["very", "good"])
 
 
-def test_find_gap_pattern(idx, tiny_oracle):
+def test_find_gap_pattern(idx, tiny_oracle, hits_paths):
     """"visa" [] "application" — visa, one token, application."""
-    got = hits_of(find(idx, '"visa" [] "application"'))
     expected = []
     for d, toks in otoks(tiny_oracle).items():
         for p in range(len(toks) - 2):
             if toks[p] == "visa" and toks[p + 2] == "application":
                 expected.append((d, p, p + 3))
-    assert got == sorted(expected)
+    for _ in hits_paths:
+        assert hits_of(find(idx, '"visa" [] "application"')) == \
+            sorted(expected)
 
 
 def test_find_optional(idx, tiny_oracle):
@@ -113,15 +130,15 @@ def test_find_optional(idx, tiny_oracle):
     assert got == sorted(expected)
 
 
-def test_find_or_and_regex(idx, tiny_oracle):
-    got = hits_of(find(idx, '"visa" | [word="goo."]'))
+def test_find_or_and_regex(idx, tiny_oracle, hits_paths):
     rx = re.compile(r"^(?:goo.)$")
     expected = sorted(
         [(d, p, p + 1) for d, ps in tiny_oracle.postings["visa"].items()
          for p in ps] +
         [(d, p, p + 1) for t, plist in tiny_oracle.postings.items()
          if rx.match(t) for d, ps in plist.items() for p in ps])
-    assert got == expected
+    for _ in hits_paths:
+        assert hits_of(find(idx, '"visa" | [word="goo."]')) == expected
 
 
 def test_find_repetition(idx, tiny_oracle):
@@ -283,6 +300,91 @@ def test_group_or_repetition(idx, tiny_oracle):
     assert got == expected
 
 
+# ---------------- fixed-gap phrases: one position intersection -------
+def _slot_hits(oracle, slots):
+    """Oracle hits of a sequence of ``slots``: a word, or None for any
+    token; a hit spans every slot."""
+    w = len(slots)
+    return sorted((d, p, p + w) for d, toks in oracle.tokens.items()
+                  for p in range(len(toks) - w + 1)
+                  if all(s is None or toks[p + i] == s
+                         for i, s in enumerate(slots)))
+
+
+def _generic_fold(idx, q, monkeypatch):
+    """Hits of ``q`` through the generic join fold, the plan a fixed-gap
+    phrase took before the position intersection served it."""
+    from blacklab_spark.plans import executor as E
+    with monkeypatch.context() as m:
+        m.setattr(E, "_seq_choice", lambda index, clauses: ("generic",))
+        return hits_of(find(idx, q))
+
+
+# (CQL with {0}.. for drawn words, slots with None for [])
+_GAP_SHAPES = {"one": ('{0} [] {1}', (0, None, 1)),
+               "two": ('{0} []{{2}} {1}', (0, None, None, 1)),
+               "chain": ('{0} [] {1} [] {2}', (0, None, 1, None, 2))}
+
+
+def _draw(oracle, slots, seed):
+    """Words of a seeded window of the tiny corpus that fits ``slots``,
+    so the pattern has at least one hit."""
+    import random
+    rng = random.Random(seed)
+    docs = sorted(oracle.tokens)
+    while True:
+        toks = oracle.tokens[rng.choice(docs)]
+        if len(toks) < len(slots):
+            continue
+        p = rng.randrange(len(toks) - len(slots) + 1)
+        words = [toks[p + i] for i, s in enumerate(slots) if s is not None]
+        if all(w.isalpha() for w in words):
+            return words
+
+
+@pytest.mark.parametrize("shape", [*_GAP_SHAPES, "the_the"])
+def test_fixed_gap_phrase_equals_oracle_and_generic_fold(
+        idx, tiny_oracle, monkeypatch, hits_paths, shape):
+    """``"a" [] "b"`` and its kin run as one position intersection with
+    slot offsets; the hits equal the oracle's and the old generic
+    fold's, on both sides of the driver decode bound."""
+    from blacklab_spark.plans import executor as E
+    if shape == "the_the":
+        q, words, slots = '"the" [] "the"', ["the", "the"], (0, None, 1)
+    else:
+        pattern, slots = _GAP_SHAPES[shape]
+        words = _draw(tiny_oracle, slots, seed=sum(map(ord, shape)))
+        q = pattern.format(*[f'"{w}"' for w in words])
+    want = _slot_hits(tiny_oracle, [None if s is None else words[s]
+                                    for s in slots])
+    assert want
+    seq = rewrite(parse(q))
+    assert E._seq_choice(idx, seq.clauses)[0] == "phrase"
+    assert _generic_fold(idx, q, monkeypatch) == want
+    for _ in hits_paths:
+        assert hits_of(find(idx, q)) == want
+
+
+@pytest.mark.parametrize("q, slot_sets", [
+    ('"visa" []', [("visa", None)]),
+    ('"very" "good" []', [("very", "good", None)]),
+    ('"visa" []{1,2} "application"', [("visa", None, "application"),
+                                      ("visa", None, None,
+                                       "application")]),
+])
+def test_trailing_and_variable_gaps_take_the_generic_plan(
+        idx, tiny_oracle, q, slot_sets):
+    """A gap at the end has no following term to prove it in bounds, and
+    a variable gap has no fixed offset: both keep the generic plan."""
+    from blacklab_spark.plans import executor as E
+    seqs = [n for n in E._walk(rewrite(parse(q))) if isinstance(n, Q.Seq)]
+    assert all(E._seq_choice(idx, n.clauses) == ("generic",) for n in seqs)
+    assert "position-intersection" not in explain(q, idx)
+    want = sorted(h for slots in slot_sets
+                  for h in _slot_hits(tiny_oracle, slots))
+    assert hits_of(find(idx, q)) == want and want
+
+
 def test_regex_case_insensitive(idx):
     """Uppercase in a regex must still match the lowercased @i
     dictionary (reference desensitizes the pattern)."""
@@ -292,13 +394,25 @@ def test_regex_case_insensitive(idx):
 
 
 # ---------------- round-2: postings-backed leaves + cost choice ------
-def test_term_leaf_uses_postings_not_corpus_scan(idx):
+def test_term_leaf_uses_postings_not_corpus_scan(idx, monkeypatch):
     """A rare-term CQL query's physical plan must read posting blocks
-    only — never scan doc_meta's token arrays (VERDICT r01 #1)."""
+    only — never scan doc_meta's token arrays (VERDICT r01 #1). The
+    bound at 0 keeps the leaf on its Spark plan."""
+    from blacklab_spark.operators import hits
+    monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
     df = find(idx, '"visa"')
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "postings" in plan
     assert "doc_meta" not in plan
+
+
+def test_term_leaf_below_bound_is_a_local_frame(idx):
+    """Below the bound the same leaf decodes on the driver: its plan is
+    a LocalTableScan, with no postings or doc_meta scan."""
+    df = find(idx, '"visa"')
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "doc_meta" not in plan and "postings" not in plan
 
 
 def test_postings_leaf_equals_probe_leaf(idx):
@@ -312,17 +426,19 @@ def test_postings_leaf_equals_probe_leaf(idx):
         assert probe == post and probe
 
 
-def test_fiseq_equals_generic_join(idx, monkeypatch):
+def test_fiseq_equals_generic_join(idx, monkeypatch, hits_paths):
     """FiSeq (anchor postings + forward-index verify) must produce the
     same hits as the generic positional-join plan for the same query
-    (cost threshold forced each way)."""
+    (cost threshold forced each way), on both sides of the driver
+    decode bound."""
     from blacklab_spark.plans import executor as E
     q = '"visa" [word="applicatio."]'
-    monkeypatch.setattr(E, "FI_MATCH_FACTOR", 0)          # always FiSeq
-    fiseq = sorted(map(tuple, find(idx, q).collect()))
-    monkeypatch.setattr(E, "FI_MATCH_FACTOR", 10 ** 18)   # never FiSeq
-    generic = sorted(map(tuple, find(idx, q).collect()))
-    assert fiseq == generic and fiseq
+    for _ in hits_paths:
+        monkeypatch.setattr(E, "FI_MATCH_FACTOR", 0)          # always FiSeq
+        fiseq = sorted(map(tuple, find(idx, q).collect()))
+        monkeypatch.setattr(E, "FI_MATCH_FACTOR", 10 ** 18)   # never FiSeq
+        generic = sorted(map(tuple, find(idx, q).collect()))
+        assert fiseq == generic and fiseq
 
 
 def test_fiseq_regex_anchor(idx, monkeypatch):

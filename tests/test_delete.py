@@ -32,7 +32,7 @@ def del_engine(spark, tmp_path_factory):
     return SearchEngine.open(spark, out)
 
 
-def test_delete_hides_docs_everywhere(del_engine, topk_paths):
+def test_delete_hides_docs_everywhere(del_engine, topk_paths, hits_paths):
     eng = del_engine
     idx = eng.index
     before_docs = idx.doc_meta.count()
@@ -46,12 +46,17 @@ def test_delete_hides_docs_everywhere(del_engine, topk_paths):
     assert n == len(victims) > 0
     assert idx.doc_meta.count() == before_docs - n
 
-    # postings term hits, phrase, CQL — no victims
-    for df in (eng.find('"visa"'),
-               eng.phrase_hits(["very", "good"], path="postings"),
-               eng.find('"very" "good"')):
-        got = {r["doc_id"] for r in df.collect()}
-        assert not (got & victims)
+    # postings term hits, phrase, fixed-gap phrase, CQL — no victims,
+    # and the same hits from the driver decode and the Spark plans
+    found = {}
+    for path in hits_paths:
+        found[path] = [sorted(map(tuple, df.collect())) for df in (
+            eng.find('"visa"'),
+            eng.phrase_hits(["very", "good"], path="postings"),
+            eng.find('"very" "good"'), eng.find('"the" [] "visa"'))]
+        for rows in found[path]:
+            assert not ({r[0] for r in rows} & victims)
+    assert found["driver"] == found["spark"] and all(found["driver"])
 
     for _ in topk_paths:
         # BM25 (both modes) — no victims

@@ -19,34 +19,40 @@ def test_phrase_matches_oracle_tiny(tiny_engine, tiny_oracle, phrase, path):
 
 
 @pytest.mark.parametrize("phrase", [["visa", "application"], ["very", "good"]])
-def test_phrase_dualpath_small(small_engine, small_oracle, phrase):
+def test_phrase_dualpath_small(small_engine, small_oracle, phrase,
+                               hits_paths):
     expected = oracle_phrase(small_oracle, phrase)
-    a = _collect_hits(small_engine.phrase_hits(phrase, path="postings"))
     b = _collect_hits(small_engine.phrase_hits(phrase, path="tokens"))
-    assert a == expected
     assert b == expected
+    for _ in hits_paths:   # postings decode on the driver, then in Spark
+        a = _collect_hits(small_engine.phrase_hits(phrase, path="postings"))
+        assert a == expected
 
 
-def test_phrase_repeated_term(tiny_engine, tiny_oracle):
+def test_phrase_repeated_term(tiny_engine, tiny_oracle, hits_paths):
     # "the the": the repeated word's positions decode once and feed
     # both slots of the postings kernel (no forward-index fallback)
     expected = oracle_phrase(tiny_oracle, ["the", "the"])
-    got = _collect_hits(tiny_engine.phrase_hits(["the", "the"]))
-    assert got == expected
+    for _ in hits_paths:
+        got = _collect_hits(tiny_engine.phrase_hits(["the", "the"]))
+        assert got == expected
 
 
 @pytest.mark.parametrize("phrase", [
     ["the", "the"], ["the", "a", "the"], ["a", "a"],
 ])
-def test_phrase_repeated_term_dualpath(tiny_engine, tiny_oracle, phrase):
+def test_phrase_repeated_term_dualpath(tiny_engine, tiny_oracle, phrase,
+                                       hits_paths):
     """Repeated-word phrases: postings intersection ≡ forward-index
     probe ≡ oracle (the multi-slot kernel must re-use one decode per
-    term without slot aliasing)."""
+    term without slot aliasing), on both sides of the driver decode
+    bound."""
     expected = oracle_phrase(tiny_oracle, phrase)
-    a = _collect_hits(tiny_engine.phrase_hits(phrase, path="postings"))
     b = _collect_hits(tiny_engine.phrase_hits(phrase, path="tokens"))
-    assert a == expected
     assert b == expected
+    for _ in hits_paths:
+        a = _collect_hits(tiny_engine.phrase_hits(phrase, path="postings"))
+        assert a == expected
 
 
 def test_phrase_three_terms(small_engine, small_oracle):

@@ -2,7 +2,8 @@
 dictionary on the driver, a top-k with few postings scores on the
 driver and every top-k attaches its winners' rows there, and a BLS
 /hits page reads its KWIC and docInfos on the driver, so none pays a
-Spark job for work that small. Artifacts open
+Spark job for work that small, and neither does a CQL postings leaf
+or phrase with few positions. Artifacts open
 with the schema stored in their footers, so opening one runs no
 schema-inference job, and a build or an append pays no job for its
 statistics or its doc-id base. Checked with the status store's job
@@ -199,6 +200,28 @@ def test_where_topk_runs_the_spark_plan(spark, tiny_index_dir, tiny_oracle):
         pytest.approx([s for _, s in want], abs=1e-9)
 
 
+# ---- CQL postings leaves and phrases below the driver bound ---------
+
+@pytest.mark.parametrize("cql", ['"zzzunknown"', '"zzzunknown" "the"'])
+def test_find_of_unknown_term_runs_no_job(spark, tiny_index_dir, cql):
+    """A query whose leaf matches no term is an empty local frame."""
+    eng = SearchEngine.open(spark, tiny_index_dir)
+    rows, n = _jobs(spark, lambda: eng.find(cql).collect())
+    assert rows == [] and n == 0
+
+
+@pytest.mark.parametrize("cql", ['"visa"', '"visa" | "good"',
+                                 '"visa" "application"',
+                                 '"visa" [] "application"'])
+def test_find_below_hits_bound_runs_no_job(spark, tiny_index_dir, cql):
+    """Leaves, OR-merged leaves, phrases and fixed-gap phrases whose
+    Σcf is below hits.DRIVER_HITS_MAX_POSITIONS decode on the driver:
+    planning and collecting the hits run no Spark job."""
+    eng = SearchEngine.open(spark, tiny_index_dir)
+    rows, n = _jobs(spark, lambda: eng.find(cql).collect())
+    assert rows and n == 0
+
+
 # ---- BLS /hits page: one window action and one count action --------
 
 _HITS_PAGES = ['"visa"', '"the"', '"visa" "application"', 'a:"visa"']
@@ -218,6 +241,27 @@ def test_hits_page_runs_at_most_four_jobs(spark, tiny_index_dir, patt):
     assert n <= 4
 
 
+@pytest.mark.parametrize("patt", _HITS_PAGES)
+def test_hits_page_below_hits_bound_equals_spark_page(spark, tiny_index_dir,
+                                                      monkeypatch, patt):
+    """A page over a driver-decoded hits frame windows and counts its
+    rows on the driver with no job, and answers as the Spark plan's
+    page does."""
+    from blacklab_spark.operators import hits as H
+    from blacklab_spark.server import BlsApp
+    q = {"patt": [patt], "number": ["20"], "first": ["3"]}
+
+    def page():
+        app = BlsApp(SearchEngine.open(spark, tiny_index_dir), corpus="t")
+        return _jobs(spark, lambda: app.handle("/blacklab-server/t/hits", q))
+    (st, _, body), n = page()
+    monkeypatch.setattr(H, "DRIVER_HITS_MAX_POSITIONS", 0)
+    (st0, _, body0), n0 = page()
+    assert st == st0 == 200 and n == 0 < n0
+    got, want = json.loads(body), json.loads(body0)
+    assert got == want and got["hits"]
+
+
 def test_hits_page_kwic_and_doc_infos_run_no_job(spark, tiny_index_dir):
     from blacklab_spark.operators.hits import window_hits
     from blacklab_spark.server import BlsApp
@@ -235,9 +279,14 @@ def test_hits_page_kwic_and_doc_infos_run_no_job(spark, tiny_index_dir):
 
 
 def test_hits_page_repeat_with_cache_runs_only_the_window(
-        spark, tiny_index_dir):
+        spark, tiny_index_dir, monkeypatch):
+    """The cached hit and doc counts save the count action of a hits
+    frame that Spark computes (the bound at 0: a local frame's page
+    runs no job at all)."""
+    from blacklab_spark.operators import hits as H
     from blacklab_spark.operators.hits import window_hits
     from blacklab_spark.server import BlsApp
+    monkeypatch.setattr(H, "DRIVER_HITS_MAX_POSITIONS", 0)
     eng = SearchEngine(open_index(spark, tiny_index_dir), cache_size=16)
     app = BlsApp(eng, corpus="t")
     q = {"patt": ['"visa" "application"'], "number": ["20"]}

@@ -163,19 +163,24 @@ def test_kwic_pushes_anchor_docs_into_scan(tiny_engine):
     assert "In(doc_id" in plan or "EqualTo(doc_id" in plan
 
 
-def test_facade_term_hits_uses_postings(tiny_engine):
+def test_facade_term_hits_uses_postings(tiny_engine, monkeypatch):
     """Unfiltered RARE-term facade term_hits must ride the postings
     leaf, never the doc_meta token-array probe (VERDICT r02 #2; hot
     terms deliberately keep the probe — see
-    test_term_hits_auto_hot_term_uses_probe)."""
+    test_term_hits_auto_hot_term_uses_probe). Below the driver decode
+    bound the leaf is a local frame; at 0 it is the postings scan."""
     from pyspark.sql import functions as F
+
+    from blacklab_spark.operators import hits
     idx = tiny_engine.index
     rare = (idx.terms.filter(F.col("df") * 4 < idx.n_docs)
             .orderBy(F.desc("df"), "term_id").limit(1)
             .collect()[0]["term"])
-    df = tiny_engine.term_hits(rare)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "postings" in plan and "doc_meta" not in plan
+    for scan in ("LocalTableScan", "postings"):
+        df = tiny_engine.term_hits(rare)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert scan in plan and "doc_meta" not in plan
+        monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
 
 
 def test_facade_term_hits_filtered_matches_probe(tiny_engine):
@@ -190,10 +195,14 @@ def test_facade_term_hits_filtered_matches_probe(tiny_engine):
     assert probe == auto and probe
 
 
-def test_collocations_plan_uses_postings_anchor(tiny_engine):
+def test_collocations_plan_uses_postings_anchor(tiny_engine, monkeypatch):
     """RARE-term collocations anchor via postings + pushed context
-    fetch (hot terms take the single-pass probe — cost-based)."""
+    fetch (hot terms take the single-pass probe — cost-based). The
+    bound at 0 keeps the anchor on its postings scan."""
     from pyspark.sql import functions as F
+
+    from blacklab_spark.operators import hits
+    monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
     hapax = (tiny_engine.index.terms.filter(F.col("df") == 1)
              .orderBy("term_id").limit(1).collect()[0]["term"])
     df = tiny_engine.collocations(hapax, window=5)

@@ -288,24 +288,29 @@ def test_ccnot_result_identity(idx, tiny_oracle):
         assert got == want, cql
 
 
-def test_ccnot_plan_avoids_token_complement(idx):
+def test_ccnot_plan_avoids_token_complement(idx, monkeypatch):
     """The rewritten plan never generates the corpus-wide token
     complement: the neighbour's postings expand by one token and
     anti-join the complemented term's hits. On the tiny corpus 'the'
     is HOT (df·4 ≥ n_docs), so the filter side probes the token
     arrays of ONLY the producer's docs — the doc_meta scan must carry
-    the pushed doc_id IN-list, and no any-token generation appears."""
-    df = find(idx, '[word!="the"] "visa"')
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "postings" in plan
-    if "doc_meta" in plan:
-        # the hot-filter probe path: an array_contains-guarded token
-        # probe (doc-id IN-pushed when the selectivity guard allows;
-        # on the tiny corpus the guard correctly skips the IN-list)
-        assert "array_contains" in plan
-    # the any-token complement would show as a sequence(0, n_tokens…)
-    # generator — absent
-    assert "sequence(0" not in plan
+    the pushed doc_id IN-list, and no any-token generation appears.
+    The neighbour's postings decode on the driver (a local frame)
+    below the hits bound, and in a postings scan at a bound of 0."""
+    from blacklab_spark.operators import hits
+    for leaf_scan in ("LocalTableScan", "postings"):
+        df = find(idx, '[word!="the"] "visa"')
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert leaf_scan in plan
+        if "doc_meta" in plan:
+            # the hot-filter probe path: an array_contains-guarded token
+            # probe (doc-id IN-pushed when the selectivity guard allows;
+            # on the tiny corpus the guard correctly skips the IN-list)
+            assert "array_contains" in plan
+        # the any-token complement would show as a sequence(0,
+        # n_tokens…) generator — absent
+        assert "sequence(0" not in plan
+        monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
 
 
 def test_ccnot_hot_filter_pruned_probe_identity(idx, tiny_oracle):

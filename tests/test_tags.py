@@ -3,6 +3,8 @@ SpanQueryTags.java:30, TextPatternTags)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +30,45 @@ def tagged_engine_idx(spark, tmp_path_factory):
     build_index(spark, spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA),
                 out, cfg)
     return SearchEngine.open(spark, out)
+
+
+@contextlib.contextmanager
+def _spark_log(spark):
+    """Yield a function returning what Spark logged inside the block.
+    The JVM writes its log to the stderr it inherited when the session
+    started, which ``capfd`` does not see, so this adds a log4j appender
+    to the root logger instead."""
+    jvm = spark._jvm
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    appender = jvm.org.apache.logging.log4j.core.appender.WriterAppender \
+        .createAppender(jvm.org.apache.logging.log4j.core.layout
+                        .PatternLayout.createDefaultLayout(),
+                        None, writer, "spark-log-probe", False, True)
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        yield writer.toString
+    finally:
+        root.removeAppender("spark-log-probe")
+        ctx.updateLoggers()
+        appender.stop()
+
+
+def test_spans_open_without_ignored_path_warning(spark, tagged_engine_idx):
+    """``_spans`` opens through its file list: Spark logs no "All paths
+    were ignored" warning, and the rows equal a read of the dir."""
+    import os
+
+    from blacklab_spark.index import open_index
+    path = tagged_engine_idx.index.path
+    with _spark_log(spark) as log:
+        rows = sorted(open_index(spark, path).doc_spans.collect())
+    assert "All paths were ignored" not in log()
+    assert rows == sorted(spark.read.parquet(
+        os.path.join(path, "_spans")).collect()) and rows
 
 
 # -- span derivation ------------------------------------------------
@@ -243,16 +284,21 @@ def test_tag_attr_int_range(spark, tmp_path_factory):
     assert eng.find('<chunk n="7" n=in[5,9]/>').count() == 1
 
 
-def test_tag_edge_seq_plan_reads_spans_and_postings_only(tagged_engine_idx):
+def test_tag_edge_seq_plan_reads_spans_and_postings_only(tagged_engine_idx,
+                                                        monkeypatch):
     """'<s> "the"' physical plan: the tag edge reads the _spans
     artifact, the term reads posting blocks — doc_meta token arrays
     are never scanned (the postings-leaf guarantee survives the
-    zero-width sequence join)."""
-    df = tagged_engine_idx.find('<s> "the"')
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "_spans" in plan
-    assert "postings" in plan
-    assert "doc_meta" not in plan
+    zero-width sequence join). The term's blocks decode on the driver
+    (a local frame) below the hits bound, in a postings scan at 0."""
+    from blacklab_spark.operators import hits
+    for leaf_scan in ("LocalTableScan", "postings"):
+        df = tagged_engine_idx.find('<s> "the"')
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "_spans" in plan
+        assert leaf_scan in plan
+        assert "doc_meta" not in plan
+        monkeypatch.setattr(hits, "DRIVER_HITS_MAX_POSITIONS", 0)
 
 
 def test_server_contents_highlight_through_markup(tagged_engine_idx):
