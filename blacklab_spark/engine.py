@@ -3,10 +3,10 @@
 
 Routes queries to physical strategies the way the reference's
 optimizer does (SURVEY.md §4.4): a top-k with few postings → exact
-scoring on the driver, no Spark job; unfiltered top-k → block-max WAND;
-filtered top-k → filter-then-score WAND (allowed-bucket semi-join
-prune + threshold seeded from filtered candidates); exhaustive
-scoring kept as the dual verification path; phrase →
+scoring on the driver, no Spark job; above that, one Spark plan
+(``wand.parts_scores``): block-max WAND seeded from exact scores of
+the top blocks (filtered: allowed-bucket semi-join prune first), or
+exhaustive scoring, kept as the dual verification path; phrase →
 postings-intersection or forward-index probe.
 ``explain()`` reports the chosen plan, mirroring
 BlackLabIndex.explain (BlackLabIndex.java:230).
@@ -14,6 +14,7 @@ BlackLabIndex.explain (BlackLabIndex.java:230).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from dataclasses import dataclass
@@ -33,9 +34,9 @@ class SearchSettings:
 from blacklab_spark.cache import ResultCache
 from blacklab_spark.operators import hits as H
 from blacklab_spark.operators import phrase as P
-from blacklab_spark.operators.scoring import (TOPK_SCHEMA, doc_scores,
-                                              topk_driver, topk_exhaustive)
-from blacklab_spark.operators.wand import topk_wand, topk_wand_filtered
+from blacklab_spark.operators.scoring import (SCORE_SCHEMA, TOPK_SCHEMA,
+                                              local_frame, winner_rows)
+from blacklab_spark.operators.wand import parts_scores, parts_topk, wand_mode
 from blacklab_spark.tokenizer import py_tokens_insensitive
 
 
@@ -176,6 +177,11 @@ class SearchEngine:
     def topk(self, query: str | list[str], k: int = 10, mode: str = "auto",
              role=None, tool=None, conv_id=None, where=None,
              filter=None) -> DataFrame:
+        """BM25 top-k as a local frame of ≤k TOPK_SCHEMA rows, through
+        ``wand.parts_topk`` with this index as its one part and the
+        stored block ``max_score`` as the bound. ``mode``: auto
+        (:meth:`_auto_mode`) | wand | exhaustive; any other value
+        raises ValueError."""
         terms = self._terms(query)
         # one key computation (the tombstone listing is a filesystem
         # listing — don't do it twice per call on the serving path):
@@ -188,23 +194,16 @@ class SearchEngine:
 
         def build() -> DataFrame:
             filt = self._doc_filter(role, tool, conv_id, where, filter)
-            if self._on_driver(terms, where, filter):
-                # few postings: any mode scores exhaustively on the
-                # driver (mode picks among the Spark plans below)
-                return topk_driver(self.index, terms, k, filt,
-                                   self._filter_cols(role, tool, conv_id))
-            m = self._auto_mode(filt) if mode == "auto" else mode
-            if m == "wand":
-                if filt is not None:
-                    # filter-then-score plan: allowed buckets pruned
-                    # before decode, threshold seeded from filtered
-                    # candidates (topk_wand_filtered docstring; the
-                    # unfiltered metadata bound is not valid here).
-                    return topk_wand_filtered(self.index, terms,
-                                              filt, k)
-                return topk_wand(self.index, terms, k)
-            return topk_exhaustive(self.index, terms, k,
-                                   doc_filter=filt)
+            wand = wand_mode(mode, self._auto_mode(filt) == "wand")
+            info = self.index.lookup_terms(terms)
+            # few postings: any mode scores exhaustively on the driver
+            # (mode picks the Spark plan's cut above the bound)
+            top = parts_topk(
+                self._parts(info), k, filt,
+                self._filter_cols(role, tool, conv_id), wand,
+                self._on_driver(terms, where, filter),
+                int(info["df"].sum()), lambda m, a: F.col("max_score"))
+            return winner_rows(self.index, top)
 
         plan = (build() if pkey is None
                 else self._plan_cache.get_or(pkey, build))
@@ -213,10 +212,25 @@ class SearchEngine:
         rows = self.cache.get_or(key, plan.collect)
         return self.spark.createDataFrame(rows, TOPK_SCHEMA)
 
+    def _parts(self, info) -> list[tuple]:
+        """The one part ``(index, 0, {term_id: idf}, avgdl)`` of a
+        top-k over this index (none when no query term is known)."""
+        if info.empty:
+            return []
+        return [(self.index, 0, {int(t): float(i) for t, i in
+                                 zip(info["term_id"], info["idf"])},
+                 self.index.avgdl)]
+
     def scores(self, query: str | list[str], role=None, tool=None,
                conv_id=None, where=None) -> DataFrame:
-        return doc_scores(self.index, self._terms(query),
-                          self._doc_filter(role, tool, conv_id, where))
+        """Full BM25 (doc_id, score) per candidate doc, no top-k cut:
+        the exhaustive Spark plan (``wand.parts_scores``)."""
+        parts = self._parts(self.index.lookup_terms(self._terms(query)))
+        if not parts:
+            return local_frame(self.spark, pd.DataFrame(), SCORE_SCHEMA)
+        return parts_scores([(*parts[0], None)], 0,
+                            self._doc_filter(role, tool, conv_id, where),
+                            False, 0)
 
     # -- positional -----------------------------------------------------
     def phrase_hits(self, phrase: str | list[str], path: str = "postings",
@@ -442,7 +456,7 @@ class SearchEngine:
             spark_plan = ("filtered block-max WAND (bucket semi-join "
                           "prune + seeded threshold)")
         else:
-            spark_plan = "block-max WAND"
+            spark_plan = "block-max WAND (seeded threshold + bucket prune)"
         lines = [f"query terms: {terms}",
                  f"resolved: {info.to_dict('records')}",
                  f"postings: Σdf {int(info['df'].sum())}, driver bound "

@@ -14,10 +14,13 @@ the Spark equivalent of Contexts.java:34-120 forward-index lookups.
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from blacklab_spark.index import InvertedIndex
+from blacklab_spark.operators.scoring import local_frame, local_rows
 
 DEFAULT_CONTEXT = 5  # reference: search/BlackLabIndex.java:71
 
@@ -567,7 +570,15 @@ def window_hits(hits: DataFrame, first: int, size: int,
     TakeOrderedAndProject (per-partition top-(first+size), merged on
     the driver) — no global sort, no single-partition window over the
     full hit set. The row_number window then runs over ≤ first+size
-    rows (one tiny partition)."""
+    rows (one tiny partition). A local frame (a postings leaf or
+    phrase decoded on the driver) is sliced on the driver into a
+    local frame instead: no Spark job, whatever the window."""
+    rows = local_rows(hits)
+    if rows is not None:
+        cols = hits.columns
+        rows = sorted(rows, key=itemgetter(*map(cols.index, order_cols)))
+        return local_frame(hits.sparkSession, pd.DataFrame.from_records(
+            rows[first:first + size], columns=cols), hits.schema)
     from pyspark.sql import Window as W
     cols = [F.col(c) for c in order_cols]
     head = hits.orderBy(*cols).limit(first + size)

@@ -1,21 +1,20 @@
-"""Exhaustive BM25 scorer — the reference path of the dual-path gate —
-and the one per-bucket kernel every BM25 top-k plan shares.
+"""The one per-bucket BM25 kernel every top-k plan shares, and the
+driver-side top-k below the postings bound.
 
 ``score_buckets`` groups posting blocks by doc-range bucket and runs
 ``score_bucket`` on each group, optionally cogrouped with an allowed
-doc-id set and cut to a local top-k. The exhaustive path, the WAND
-paths (operators/wand.py) and the main+delta engine
-(streaming/ingest.py) all score through it; the contribution itself
-is ``arrow_kernels.bm25_contrib``, the same expression the build uses
-for block ``max_score``. The exhaustive path finishes with
-``orderBy(score desc, doc_id).limit(k)`` (Catalyst compiles this to
-TakeOrderedAndProject — per-partition top-k, no global sort).
+doc-id set and cut to a local top-k. The one Spark plan
+(``operators/wand.py``: ``parts_scores``, exhaustive or WAND, one
+index or main + deltas) scores through it; the contribution itself is
+``arrow_kernels.bm25_contrib``, the same expression the build uses
+for block ``max_score``.
 
 A query whose terms hold few postings
 (``engine.DRIVER_TOPK_MAX_POSTINGS``) skips Spark:
 ``driver_parts_topk`` reads the posting blocks with Arrow and runs
 ``score_bucket`` on the driver over every candidate, with no seed and
-no prune. Both paths finish through ``winner_rows``.
+no prune. ``SearchEngine`` finishes both paths' winners through
+``winner_rows``.
 
 **Float determinism contract** (SURVEY.md §7 hard part 4): a doc's
 final score is always the sum of its per-term contributions in
@@ -27,10 +26,10 @@ sizes. The Python oracle sums in sorted-term order (= term_id order)
 with the identical expression shape, so engine ties resolve exactly
 like oracle ties.
 
-Mirrors the role of plain Lucene scoring without WAND; the WAND path
-(operators/wand.py) must be rank- and score-identical to this one
-(dual-path testing ≙ the reference's _FI1/_FI2 golden equality,
-reference: test/test/hits.js:55-57).
+Exhaustive scoring mirrors plain Lucene scoring without WAND; WAND
+must be rank- and score-identical to it (dual-path testing ≙ the
+reference's _FI1/_FI2 golden equality, reference:
+test/test/hits.js:55-57).
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from blacklab_spark import codec
@@ -127,23 +126,6 @@ def score_buckets(blocks: DataFrame, idf_by_term: dict[int, float],
         SCORE_SCHEMA)
 
 
-def doc_scores(index: InvertedIndex, terms: list[str],
-               doc_filter: Column | None = None) -> DataFrame:
-    """Full BM25 score per candidate doc (no top-k cut). Empty-safe."""
-    info = index.lookup_terms(terms)
-    spark = index.spark
-    if info.empty:
-        return local_frame(spark, pd.DataFrame(), SCORE_SCHEMA)
-    idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
-    blocks = index.postings.filter(F.col("term_id").isin(list(idf_map)))
-    scores = index.without_deleted(
-        score_buckets(blocks, idf_map, index.avgdl))
-    if doc_filter is not None:
-        allowed = index.doc_meta.filter(doc_filter).select("doc_id")
-        scores = scores.join(allowed, "doc_id", "left_semi")
-    return scores
-
-
 def local_frame(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
     """``pdf`` as a frame of ``schema`` whose collect runs no Spark job.
     Spark would plan an empty pandas frame (or list) as an RDD scan,
@@ -180,17 +162,6 @@ def winner_rows(index: InvertedIndex, winners: pd.DataFrame) -> DataFrame:
         index.spark,
         out[["rank", "doc_id", "conv_id", "turn_idx", "score", "text"]],
         TOPK_SCHEMA)
-
-
-def finish_topk(index: InvertedIndex, scores: DataFrame, k: int) -> DataFrame:
-    """orderBy+limit (TakeOrderedAndProject) → collect the ≤k winners
-    → :func:`winner_rows`. Winners are tombstone-free already:
-    doc_scores anti-joins the tombstones, and WAND reroutes to the
-    filtered plan when deletes exist."""
-    top = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    return winner_rows(index, pd.DataFrame(
-        {"doc_id": [int(r["doc_id"]) for r in top],
-         "score": [float(r["score"]) for r in top]}))
 
 
 def _passing_ids(index: InvertedIndex, ids: np.ndarray, doc_filter: Column,
@@ -241,20 +212,3 @@ def driver_parts_topk(parts: list[tuple], k: int,
     d, sc = np.concatenate(docs), np.concatenate(scores)
     top = np.lexsort((d, -sc))[:k]
     return pd.DataFrame({"doc_id": d[top], "score": sc[top]})
-
-
-def topk_driver(index: InvertedIndex, terms: list[str], k: int = 10,
-                doc_filter: Column | None = None,
-                filter_cols: list[str] = ()) -> DataFrame:
-    """:func:`driver_parts_topk` over one index, finished by
-    :func:`winner_rows`: a top-k that runs no Spark job."""
-    info = index.lookup_terms(terms)
-    idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
-    parts = [(index, 0, idf_map, index.avgdl)] if idf_map else []
-    return winner_rows(index,
-                       driver_parts_topk(parts, k, doc_filter, filter_cols))
-
-
-def topk_exhaustive(index: InvertedIndex, terms: list[str], k: int = 10,
-                    doc_filter: Column | None = None) -> DataFrame:
-    return finish_topk(index, doc_scores(index, terms, doc_filter), k)

@@ -704,7 +704,7 @@ class BlsApp:
 
         counted = hits
         # a local frame (a postings leaf or phrase decoded on the
-        # driver) collects without a job: window and count its rows here
+        # driver) collects without a job: count its rows here
         from blacklab_spark.operators.scoring import local_rows
         local = None if sort else local_rows(hits)
         if sort:
@@ -715,9 +715,6 @@ class BlsApp:
             except ValueError as e:
                 raise BlsError(400, "UNKNOWN_SORT_PROPERTY",
                                str(e)) from None
-        elif local is not None:
-            window = sorted(local, key=lambda r: (r["doc_id"], r["start"])
-                            )[first:first + number]
         else:
             from blacklab_spark.operators.hits import window_hits
             window = window_hits(hits, first, number).collect()

@@ -129,14 +129,12 @@ class DeltaSearchEngine:
     def topk(self, terms: list[str], k: int = 10, mode: str = "auto",
              role=None, tool=None, conv_id=None):
         """Top-k (doc_id, score) over main + deltas with union-corpus
-        BM25 stats and metadata filters, through the single-index
-        plans with one part per index (same kernel, same tombstone
-        rule). When Σdf over every part is below
-        ``engine.DRIVER_TOPK_MAX_POSTINGS``,
-        ``scoring.driver_parts_topk`` scores every candidate on the
-        driver and returns a local frame: no Spark job, whatever
-        ``mode``. Otherwise
-        ``operators.wand.parts_scores`` runs (same seed and prune).
+        BM25 stats and metadata filters, as a local frame: the
+        single-index top-k (``operators.wand.parts_topk``) with one
+        part per index (same kernel, same tombstone rule). When Σdf
+        over every part is below ``engine.DRIVER_TOPK_MAX_POSTINGS``
+        every candidate scores on the driver with no Spark job,
+        whatever ``mode``; otherwise ``wand.parts_scores`` runs.
 
         The stored per-block ``max_score`` was computed with the
         PART's build-time idf/avgdl, so it is not a valid bound under
@@ -146,18 +144,15 @@ class DeltaSearchEngine:
         mode: auto (exhaustive below AUTO_EXHAUSTIVE_MAX_DOCS union
         docs, filtered or not — unlike SearchEngine.topk, which sends
         unfiltered queries through WAND at any size) | wand |
-        exhaustive (dual verification path)."""
+        exhaustive (dual verification path); any other value raises
+        ValueError."""
         from blacklab_spark.arrow_kernels import bm25_contrib, bm25_idf
         from blacklab_spark.engine import (AUTO_EXHAUSTIVE_MAX_DOCS,
                                            DRIVER_TOPK_MAX_POSTINGS,
                                            SearchEngine)
-        from blacklab_spark.operators.scoring import (
-            SCORE_SCHEMA, driver_parts_topk, local_frame)
-        from blacklab_spark.operators.wand import parts_scores
-        filt = SearchEngine._doc_filter(role, tool, conv_id)
-        if mode == "auto":
-            mode = ("exhaustive" if self.n_docs < AUTO_EXHAUSTIVE_MAX_DOCS
-                    else "wand")
+        from blacklab_spark.operators.scoring import SCORE_SCHEMA, local_frame
+        from blacklab_spark.operators.wand import parts_topk, wand_mode
+        wand = wand_mode(mode, self.n_docs >= AUTO_EXHAUSTIVE_MAX_DOCS)
         # global df per term across parts
         df_by_term: dict[str, int] = {}
         infos = [p.lookup_terms(terms) for p in self.parts]
@@ -172,20 +167,18 @@ class DeltaSearchEngine:
             idf_map = {int(tid): float(bm25_idf(self.n_docs, df_by_term[t]))
                        for t, tid in zip(info["term"], info["term_id"])}
             parts.append((p, off, idf_map, self.avgdl))
-        n_postings = sum(df_by_term.values())
-        if not parts or n_postings < DRIVER_TOPK_MAX_POSTINGS:
-            top = driver_parts_topk(
-                parts, k, filt, SearchEngine._filter_cols(role, tool, conv_id))
-            return local_frame(self.spark, top, SCORE_SCHEMA)
-        planned = []
-        for p, off, idf_map, avgdl in parts:
+
+        def ub(idf_map, avgdl):
             imap = F.create_map(*[F.lit(x) for kv in idf_map.items()
                                   for x in kv])
-            ub = bm25_contrib(imap[F.col("term_id")], F.col("max_tf"), 0,
-                              avgdl)
-            planned.append((p, off, idf_map, avgdl, ub))
-        return (parts_scores(planned, k, filt, mode == "wand", n_postings)
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+            return bm25_contrib(imap[F.col("term_id")], F.col("max_tf"), 0,
+                                avgdl)
+        filt = SearchEngine._doc_filter(role, tool, conv_id)
+        cols = SearchEngine._filter_cols(role, tool, conv_id)
+        n_postings = sum(df_by_term.values())
+        top = parts_topk(parts, k, filt, cols, wand,
+                         n_postings < DRIVER_TOPK_MAX_POSTINGS, n_postings, ub)
+        return local_frame(self.spark, top, SCORE_SCHEMA)
 
 
 def stream_ingest(spark: SparkSession, source_dir: str, main_dir: str,

@@ -126,57 +126,105 @@ def test_filtered_wand_equals_filtered_exhaustive(small_engine,
                 assert x["score"] == pytest.approx(y["score"], abs=1e-9)
 
 
-def test_filtered_wand_seeds_threshold_and_prunes(small_engine):
+def _part(index, terms):
+    """The one ``wand.parts_scores`` part of a top-k over ``index``,
+    bounded by the stored block ``max_score``, and its Σdf."""
+    from pyspark.sql import functions as F
+    info = index.lookup_terms(terms)
+    idf_map = {int(t): float(i) for t, i in zip(info["term_id"], info["idf"])}
+    return ((index, 0, idf_map, index.avgdl, F.col("max_score")),
+            int(info["df"].sum()))
+
+
+def test_filtered_wand_seeds_threshold_and_prunes(small_engine,
+                                                  monkeypatch):
     """The filtered path must seed a nonzero threshold from filtered
     candidates and prune buckets whose upper bound falls below it."""
     from pyspark.sql import functions as F
-    from blacklab_spark.operators.wand import topk_wand_filtered
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
+    part, n = _part(small_engine.index, ["visa"])
     dbg = {}
-    df = topk_wand_filtered(small_engine.index, ["visa"],
-                            F.col("role") == "assistant", k=3, seed=True,
-                            _debug=dbg)
-    rows = df.collect()
+    df = wand.parts_scores([part], 3, F.col("role") == "assistant", True, n,
+                           _debug=dbg)
+    rows = df.orderBy(F.desc("score"), F.asc("doc_id")).limit(3).collect()
     assert len(rows) == 3
     assert dbg["t0"] > 0.0
     assert dbg["blocks_after_prune"] < dbg["blocks_total"]
 
 
-def test_seeded_wand_rank_identical_forced(small_engine, small_oracle):
-    """Forced-seed WAND (two-level k-th threshold) stays
-    rank/score-identical to the oracle — the r3→r4 seed rewrite
-    (groupBy salt slices instead of a per-term window) must be an
-    exact k-th, not an approximation."""
-    from blacklab_spark.operators.wand import wand_scores
-    from blacklab_spark.operators.scoring import finish_topk
+def test_seeded_wand_rank_identical_forced(small_engine, small_oracle,
+                                           monkeypatch):
+    """Seeded WAND (the seed gate lowered to 0, the driver bound too)
+    stays rank/score-identical to the oracle — the seed must certify
+    an exact k-th, not an approximation."""
+    from blacklab_spark import engine
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
+    monkeypatch.setattr(engine, "DRIVER_TOPK_MAX_POSTINGS", 0)
+    eng = engine.SearchEngine(small_engine.index)  # fresh plan cache
     for terms in (["visa"], ["the"], ["visa", "application", "good"]):
         for k in (1, 5, 10):
             expected = brute_topk(small_oracle, terms, k=k)
-            got = finish_topk(
-                small_engine.index,
-                wand_scores(small_engine.index, terms, k, seed=True),
-                k).collect()
+            got = eng.topk(terms, k=k, mode="wand").collect()
             _assert_rank_identical(
                 [(r["doc_id"], r["score"]) for r in got], expected)
 
 
-def test_seed_threshold_plan_has_no_window(small_engine):
-    """r3 What's-wrong #3: the threshold seed must contain NO window
+def test_seed_threshold_plan_has_no_window(small_engine, monkeypatch):
+    """r3 What's-wrong #3: the seeded plan must contain NO window
     operator — a Window.partitionBy(term_id) funnels a stopword's
-    ~10^8 bucket maxima through one task at 10^12-doc scale. The
-    two-level k-th is groupBy-only (map-side partial aggregation,
-    bounded task input at every stage)."""
-    from pyspark.sql import functions as F
-    from blacklab_spark.operators.wand import _seed_threshold_frame
-    idx = small_engine.index
-    info = idx.lookup_terms(["the", "visa"])
-    blocks = idx.postings.filter(
-        F.col("term_id").isin([int(t) for t in info["term_id"]]))
-    plan = _seed_threshold_frame(blocks, 10) \
+    ~10^8 bucket maxima through one task at 10^12-doc scale. The seed
+    is a top-blocks decode and the prune groupBy-only (map-side
+    partial aggregation, bounded task input at every stage)."""
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
+    part, n = _part(small_engine.index, ["the", "visa"])
+    dbg = {}
+    plan = wand.parts_scores([part], 10, None, True, n, _debug=dbg) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     # and it still computes a real threshold on this corpus
-    from blacklab_spark.operators.wand import _seed_threshold
-    assert _seed_threshold(blocks, 10) > 0.0
+    assert dbg["t0"] > 0.0
+
+
+def _metadata_bound(index, terms, k) -> float:
+    """The unfiltered seed the exact one replaced: the max over the
+    query terms of each term's k-th largest per-bucket ``max_score``
+    (0 when no term has k buckets)."""
+    from pyspark.sql import functions as F
+    info = index.lookup_terms(terms)
+    blocks = (index.postings
+              .filter(F.col("term_id").isin([int(t) for t in info["term_id"]]))
+              .select("term_id", "bucket", "max_score").toPandas())
+    per_bucket = blocks.groupby(["term_id", "bucket"])["max_score"].max()
+    kth = [s.sort_values(ascending=False).iloc[k - 1]
+           for _, s in per_bucket.groupby(level="term_id") if len(s) >= k]
+    return max(kth, default=0.0)
+
+
+@pytest.mark.parametrize("k", [1, 10, 25, 40])
+@pytest.mark.parametrize("terms", [["the"], ["the", "visa"],
+                                   ["the", "a", "good"]],
+                         ids=lambda q: "-".join(q))
+def test_seed_is_never_below_the_metadata_bound(small_engine, monkeypatch,
+                                                k, terms):
+    """The unfiltered seed decodes max(WAND_SEED_BLOCKS, k × terms)
+    top blocks: each block's max_score is reached by one of its docs
+    and a doc sits in at most one block per term, so its exact k-th
+    is at least the k-th best bucket max of any term. Cases with
+    k × terms > WAND_SEED_BLOCKS (k=25 or 40, 3 terms; k=40, 2 terms)
+    need the k × terms rule. The small index has fewer than 40
+    buckets, so at k=40 the bound is 0."""
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
+    index = small_engine.index
+    bound = _metadata_bound(index, terms, k)
+    part, n = _part(index, terms)
+    dbg = {}
+    wand.parts_scores([part], k, None, True, n, _debug=dbg)
+    assert dbg["t0"] >= bound
+    assert (bound > 0.0) == (k < 40)  # below 40, a real bound
 
 
 # ---------------- randomized differential top-k ----------------

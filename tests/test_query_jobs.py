@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 import warnings
@@ -185,6 +186,17 @@ def test_driver_topk_rows_equal_spark_rows_bitwise(spark, request,
             [(d, s.hex()) for d, s in want]
 
 
+@pytest.mark.parametrize("shape", ["unfiltered", "role", "delta"])
+def test_unknown_topk_mode_raises(spark, request, topk_paths, shape):
+    """An unknown mode is a ValueError on both engines and on both
+    sides of the driver bound, not a silent exhaustive run."""
+    topk = _shape_topk(spark, request, shape)
+    for _ in topk_paths:
+        with pytest.raises(ValueError,
+                           match=re.escape("auto|wand|exhaustive")):
+            topk(3, "WAND")
+
+
 def test_where_topk_runs_the_spark_plan(spark, tiny_index_dir, tiny_oracle):
     """A ``where=`` string may name any doc_meta column, so its top-k
     keeps the Spark plan, and stays oracle-exact."""
@@ -260,6 +272,28 @@ def test_hits_page_below_hits_bound_equals_spark_page(spark, tiny_index_dir,
     assert st == st0 == 200 and n == 0 < n0
     got, want = json.loads(body), json.loads(body0)
     assert got == want and got["hits"]
+
+
+@pytest.mark.parametrize("first,size", [(0, 5), (3, 20), (0, 10_000),
+                                        (10_000, 20)])
+def test_window_of_a_local_frame_runs_no_job(spark, tiny_index_dir,
+                                             first, size):
+    """A window of a driver-decoded hits frame, inside its rows or past
+    them, is sliced on the driver into a local frame: no Spark job,
+    and the rows a Spark window of the same hits gives."""
+    from blacklab_spark.operators.hits import window_hits
+    from blacklab_spark.operators.scoring import local_rows
+    eng = SearchEngine.open(spark, tiny_index_dir)
+    hits = eng.find('"the"')
+    rows = local_rows(hits)
+    assert rows is not None and 20 < len(rows) < 10_000
+    got, n = _jobs(spark, lambda: window_hits(hits, first, size).collect())
+    assert n == 0
+    spark_hits = hits.repartition(2)  # no longer a local relation
+    assert local_rows(spark_hits) is None
+    want = window_hits(spark_hits, first, size).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert len(got) == max(0, min(size, len(rows) - first))
 
 
 def test_hits_page_kwic_and_doc_infos_run_no_job(spark, tiny_index_dir):

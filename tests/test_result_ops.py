@@ -115,29 +115,33 @@ def test_explain(tiny_engine):
 
 
 @pytest.mark.parametrize("bound,threshold,filters,runs,strategy", [
-    (0, None, {}, "topk_wand", "block-max WAND"),
-    (0, None, {"role": "user"}, "topk_exhaustive", "exhaustive-then-filter"),
-    (0, 0, {"role": "user"}, "topk_wand_filtered", "filtered block-max WAND"),
-    (None, None, {"role": "user"}, "topk_driver", "driver exhaustive"),
+    (0, None, {}, (True, False), "block-max WAND"),
+    (0, None, {"role": "user"}, (False, False), "exhaustive-then-filter"),
+    (0, 0, {"role": "user"}, (True, False), "filtered block-max WAND"),
+    (None, None, {"role": "user"}, (False, True), "driver exhaustive"),
 ], ids=["unfiltered", "filtered", "filtered-large", "driver"])
 def test_explain_names_the_strategy_topk_runs(tiny_engine, monkeypatch,
                                               bound, threshold, filters,
                                               runs, strategy):
     """explain() and topk() share the mode="auto" rule: the strategy
-    explain() prints is the plan function topk() calls. "filtered-large"
-    lowers the size threshold so the filtered WAND plan is chosen; the
-    Spark cases set the driver bound to 0, and "driver" keeps it."""
+    explain() prints is the (wand, on_driver) pair topk() passes to its
+    one dispatch, wand.parts_topk. "filtered-large" lowers the size
+    threshold so the filtered WAND plan is chosen; the Spark cases set
+    the driver bound to 0, and "driver" keeps it."""
+    import inspect
     from blacklab_spark import engine as E
     if bound is not None:
         monkeypatch.setattr(E, "DRIVER_TOPK_MAX_POSTINGS", bound)
     if threshold is not None:
         monkeypatch.setattr(E, "AUTO_EXHAUSTIVE_MAX_DOCS", threshold)
-    called = []
-    for name in ("topk_wand", "topk_wand_filtered", "topk_exhaustive",
-                 "topk_driver"):
-        fn = getattr(E, name)
-        monkeypatch.setattr(E, name, lambda *a, _n=name, _f=fn, **kw:
-                            called.append(_n) or _f(*a, **kw))
+    called, fn = [], E.parts_topk
+    sig = inspect.signature(fn)
+
+    def spy(*a, **kw):
+        args = sig.bind(*a, **kw).arguments
+        called.append((args["wand"], args["on_driver"]))
+        return fn(*a, **kw)
+    monkeypatch.setattr(E, "parts_topk", spy)
     eng = E.SearchEngine(tiny_engine.index)  # fresh plan cache
     eng.topk(["visa"], k=3, **filters)
     assert called == [runs]
@@ -245,27 +249,34 @@ def _join_topk_rows(index, scores, k):
     return [tuple(r) for r in out.collect()]
 
 
+def _winner_rows(index, scores, k):
+    """``scoring.winner_rows`` over the ≤k winners of ``scores``."""
+    from blacklab_spark.operators.scoring import winner_rows
+    return winner_rows(index, scores.orderBy(
+        F.desc("score"), F.asc("doc_id")).limit(k).toPandas())
+
+
 def test_topk_finish_equals_join(spark, tiny_index_dir, tmp_path):
-    """finish_topk's driver-side metadata read returns exactly the rows
+    """winner_rows' driver-side metadata read returns exactly the rows
     of a Spark join against doc_meta, including on an index with
     tombstoned docs (the deleted winners drop out before the finish)."""
     import shutil
     from blacklab_spark.delete import delete_docs
+    from blacklab_spark.engine import SearchEngine
     from blacklab_spark.index import open_index
-    from blacklab_spark.operators.scoring import (TOPK_SCHEMA, doc_scores,
-                                                  finish_topk)
+    from blacklab_spark.operators.scoring import TOPK_SCHEMA
     live = open_index(spark, tiny_index_dir)
     shutil.copytree(tiny_index_dir, str(tmp_path / "del"))
     dead = open_index(spark, str(tmp_path / "del"))
-    victims = [r["doc_id"] for r in doc_scores(dead, ["visa", "good"])
-               .orderBy(F.desc("score"), F.asc("doc_id")).limit(2)
-               .collect()]
+    victims = [r["doc_id"] for r in SearchEngine(dead).scores(
+        ["visa", "good"]).orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(2).collect()]
     assert delete_docs(dead, F.col("doc_id").isin(victims)) == 2
     for idx in (live, dead):
         for terms in (["visa", "good"], ["the"], ["nosuchterm"]):
-            scores = doc_scores(idx, terms)
+            scores = SearchEngine(idx).scores(terms)
             for k in (1, 5, 10):
-                df = finish_topk(idx, scores, k)
+                df = _winner_rows(idx, scores, k)
                 assert df.schema == TOPK_SCHEMA
                 got = [tuple(r) for r in df.collect()]
                 assert got == _join_topk_rows(idx, scores, k)
@@ -282,22 +293,22 @@ def test_topk_finish_opens_winner_files_only(spark, tiny_index_dir,
     import glob
     import os
     import shutil
+    from blacklab_spark.engine import SearchEngine
     from blacklab_spark.index import open_index
-    from blacklab_spark.operators.scoring import doc_scores, finish_topk
     d = str(tmp_path / "idx")
     shutil.copytree(tiny_index_dir, d)
     idx = open_index(spark, d)
+    scores = SearchEngine(idx).scores(["visa"])
     files = sorted(glob.glob(os.path.join(d, "doc_meta", "*.parquet")))
     assert len(files) > 1
-    want = [tuple(r) for r in
-            finish_topk(idx, doc_scores(idx, ["visa"]), 1).collect()]
-    assert want == _join_topk_rows(idx, doc_scores(idx, ["visa"]), 1)
+    want = [tuple(r) for r in _winner_rows(idx, scores, 1).collect()]
+    assert want == _join_topk_rows(idx, scores, 1)
     for f in files:
         ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
         if want[0][1] not in ids:
             os.remove(f)
     assert len(glob.glob(os.path.join(d, "doc_meta", "*.parquet"))) == 1
-    got = finish_topk(idx, doc_scores(idx, ["visa"]), 1).collect()
+    got = _winner_rows(idx, scores, 1).collect()
     assert [tuple(r) for r in got] == want
 
 
@@ -311,12 +322,18 @@ def test_window_hits_plan_take_ordered(tiny_engine):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_wand_block_prune_reaches_parquet_scan(tiny_engine):
+def test_wand_block_prune_reaches_parquet_scan(tiny_engine, monkeypatch):
     """Single-term WAND: the max_score >= t0 block filter must land on
     the postings parquet scan (row-group pruning — pruned payloads are
     never materialized)."""
-    from blacklab_spark.operators.wand import wand_scores
-    df = wand_scores(tiny_engine.index, ["visa"], k=2, seed=True)
+    from blacklab_spark.operators import wand
+    monkeypatch.setattr(wand, "WAND_SEED_MIN_POSTINGS", 0)
+    idx = tiny_engine.index
+    info = idx.lookup_terms(["visa"])
+    part = (idx, 0, {int(t): float(i) for t, i in
+                     zip(info["term_id"], info["idf"])},
+            idx.avgdl, F.col("max_score"))
+    df = wand.parts_scores([part], 2, None, True, int(info["df"].sum()))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "max_score" in plan
 
