@@ -1720,9 +1720,10 @@ def gate_queries() -> dict:
     def spans_edge_trailing(spark, sf_dir):
         """Trailing edge of term hits (SpanQueryEdge)."""
         from blacklab_spark.operators import spans as SP
-        from blacklab_spark.operators.hits import term_hits_via_postings
+        from blacklab_spark.operators.hits import hits_for_term_ids
         eng = docs_engine(spark, sf_dir)
-        hits = SP.edge(term_hits_via_postings(eng.index, "spark"),
+        idx = eng.index
+        hits = SP.edge(hits_for_term_ids(idx, idx.lookup_terms(["spark"])),
                        trailing=True)
         return with_conv(eng, hits).select(
             _orig_doc_id(), F.col("start"), F.col("end"))
@@ -1731,11 +1732,12 @@ def gate_queries() -> dict:
         """Overlap regions of 'the'-anchored and 'table'-anchored
         2-gram spans (SpanQueryOverlapping)."""
         from blacklab_spark.operators import spans as SP
-        from blacklab_spark.operators.hits import term_hits_via_postings
+        from blacklab_spark.operators.hits import hits_for_term_ids
         eng = docs_engine(spark, sf_dir)
-        a = SP.expand(eng.index, term_hits_via_postings(eng.index, "the"),
+        idx = eng.index
+        a = SP.expand(idx, hits_for_term_ids(idx, idx.lookup_terms(["the"])),
                       "right", 1, 1)
-        b = SP.expand(eng.index, term_hits_via_postings(eng.index, "table"),
+        b = SP.expand(idx, hits_for_term_ids(idx, idx.lookup_terms(["table"])),
                       "right", 1, 1)
         return with_conv(eng, SP.overlapping(a, b)).select(
             _orig_doc_id(), F.col("start"), F.col("end"))

@@ -101,62 +101,41 @@ def hits_for_term_ids(index: InvertedIndex, terms: pd.DataFrame) -> DataFrame:
     only the terms' blocks: for a hapax term this reads a few KB, where
     the token-array probe would scan the whole corpus.
 
-    Below ``DRIVER_HITS_MAX_POSITIONS`` (Σcf) the blocks are read with
-    Arrow and decoded on the driver by the phrase kernel with one slot
-    (phrase.postings_hits): a local frame sorted by (doc_id, start),
-    tombstones dropped. Otherwise each block row decodes independently
-    in a ``mapInArrow`` task — no shuffle, no groupBy. No terms → an
-    empty local frame.
+    The decode is :func:`phrase.postings_hits` with one slot that every
+    term feeds, on both sides of ``DRIVER_HITS_MAX_POSITIONS`` (Σcf):
+    below it a local frame sorted by (doc_id, start), above it unordered
+    Spark rows; tombstones dropped either way. No terms → an empty local
+    frame.
 
     Reference analog: BLSpanTermQuery over Lucene postings
     (search/lucene/BLSpanTermQuery.java:52); dual physical path to
     :func:`term_hits` like SpansFiSeq vs postings sequences
     (SURVEY.md §4.4)."""
-    import pyarrow as pa
-    from blacklab_spark.operators.phrase import (_decode_doc_positions,
-                                                 postings_hits)
+    from blacklab_spark.operators.phrase import postings_hits
     from blacklab_spark.operators.spans import no_hits
 
     if terms.empty:
         return no_hits(index)
     if not index.cfg.store_positions:
         raise ValueError("index built without positions")
-    term_ids = [int(t) for t in terms["term_id"]]
-    n_positions = int(terms["cf"].sum())
-    if decodes_on_driver(n_positions):
-        return postings_hits(index, {t: [0] for t in term_ids}, (0,),
-                             n_positions)
-    blocks = (index.postings
-              .filter(F.col("term_id").isin(term_ids))
-              .select("doc_ids", "tfs", "positions"))
-
-    def gen(batches):
-        import numpy as np
-        for batch in batches:
-            docs_out, pos_out = [], []
-            col_d, col_tf, col_p = (batch.column(i) for i in range(3))
-            for i in range(batch.num_rows):       # per BLOCK, not per hit
-                d, p = _decode_doc_positions(
-                    col_d[i].as_py(), col_tf[i].as_py(), col_p[i].as_py())
-                docs_out.append(d)
-                pos_out.append(p)
-            if not docs_out:
-                continue
-            doc = np.concatenate(docs_out)
-            start = np.concatenate(pos_out).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc, pa.int64()), pa.array(start, pa.int32()),
-                 pa.array(start + 1, pa.int32())],
-                ["doc_id", "start", "end"])
-
-    out = blocks.mapInArrow(gen, "doc_id long, start int, end int")
-    return index.without_deleted(out)
+    return postings_hits(index, {int(t): [0] for t in terms["term_id"]},
+                         (0,), int(terms["cf"].sum()))
 
 
-def term_hits_via_postings(index: InvertedIndex, term: str) -> DataFrame:
-    """Single-term postings leaf (insensitive layer — postings are
-    built over @i tokens)."""
-    return hits_for_term_ids(index, index.lookup_terms([term]))
+def is_hot_term(index: InvertedIndex, folded: str) -> bool:
+    """The one hot-term rule: whether the hits of the @i-folded word
+    ``folded`` come from the forward-index probe rather than from its
+    postings. A term in ≥1/4 of all docs (df·4 ≥ n_docs) is hot — most
+    docs carry it anyway, so the JVM-side posexplode beats decoding its
+    posting list — unless it is an injected synonym value: the probe
+    compares primary tokens and would miss its stacked positions
+    (synonym keys and uninvolved terms keep the probe). An index
+    without positions always probes. The lookup is memoized."""
+    if not index.cfg.store_positions:
+        return True
+    info = index.lookup_terms([folded])
+    return (not info.empty and int(info["df"].sum()) * 4 >= index.n_docs
+            and folded not in index.synonym_injected_values)
 
 
 def term_hits_auto(index: InvertedIndex, term: str,
@@ -164,36 +143,21 @@ def term_hits_auto(index: InvertedIndex, term: str,
                    sensitivity: str = "i") -> DataFrame:
     """Cost-based term-hits leaf — the engine facade's default path.
 
-    Insensitive layer with stored positions → postings block decode
-    (reads only the term's blocks; a hapax anchor reads a few KB where
-    the probe scans every token array). A doc filter becomes a
-    semi-join against the filtered doc ids: doc_meta is read with only
-    (doc_id, filter columns) — token arrays stay unread. Sensitive
-    layer or positionless index → forward-index probe (the only path
-    that can compare original-case tokens).
+    A sensitive layer or a hot term (:func:`is_hot_term`, which also
+    covers an index without positions) → forward-index probe, the only
+    path that can compare original-case tokens. Otherwise the postings
+    block decode (:func:`hits_for_term_ids`; a hapax term reads a few KB
+    where the probe scans every token array), and a doc filter becomes
+    a semi-join against the filtered doc ids: doc_meta is read with
+    only (doc_id, filter columns) — token arrays stay unread.
 
-    Hot terms (df·4 ≥ n_docs, the collocations rule) keep the probe
-    even when postings exist: most docs carry the term anyway, so the
-    JVM-side posexplode beats shipping millions of decoded positions
-    through the Arrow kernel.
-
-    Same df-based physical choice the CQL executor makes for its
-    leaves (plans/executor.py _exec Term case; VERDICT r02 #2)."""
-    if sensitivity != "i" or not index.cfg.store_positions:
-        return term_hits(index, term, doc_filter, sensitivity)
+    The same rule decides the CQL executor's hot position-filter term
+    and :func:`collocations`' anchor (VERDICT r02 #2)."""
     from blacklab_spark.tokenizer import py_fold_insensitive
     folded = py_fold_insensitive(term)
-    info = index.lookup_terms([folded])
-    if (not info.empty and int(info["df"].sum()) * 4 >= index.n_docs
-            and folded not in index.synonym_injected_values):
-        # hot-term probe shortcut — sound unless the term exists
-        # somewhere ONLY as an injected synonym value (the probe
-        # compares primary values; postings carry the stacked
-        # alternatives). Synonym keys and uninvolved terms keep the
-        # fast path (r5 review: the blanket synonyms guard disabled
-        # it for every term on a synonym index).
+    if sensitivity != "i" or is_hot_term(index, folded):
         return term_hits(index, term, doc_filter, sensitivity)
-    hits = term_hits_via_postings(index, py_fold_insensitive(term))
+    hits = hits_for_term_ids(index, index.lookup_terms([folded]))
     if doc_filter is not None:
         allowed = index.doc_meta.filter(doc_filter).select("doc_id")
         hits = hits.join(allowed, "doc_id", "left_semi")
@@ -481,17 +445,12 @@ def collocations(index: InvertedIndex, term: str, window: int = 10,
 
     * rare term (df ≪ n_docs) → postings leaf + push the anchor's doc
       ids into the doc_meta scan: reads only the anchor's row groups;
-    * hot term (df ≥ n_docs/4) → single-pass probe: most docs carry
-      the anchor anyway, and the probe finds positions and context in
-      the same row — no join, no second corpus pass."""
+    * hot term (:func:`is_hot_term`) → single-pass probe: most docs
+      carry the anchor anyway, and the probe finds positions and
+      context in the same row — no join, no second corpus pass."""
     from blacklab_spark.tokenizer import py_fold_insensitive
     folded = py_fold_insensitive(term)
-    hot = True
-    if index.cfg.store_positions:
-        info = index.lookup_terms([folded])
-        hot = (not info.empty
-               and int(info["df"].sum()) * 4 >= index.n_docs)
-    if hot:
+    if is_hot_term(index, folded):
         dm = index.doc_meta
         if doc_filter is not None:
             dm = dm.filter(doc_filter)
@@ -562,6 +521,14 @@ def sample_hits_deterministic(hits: DataFrame, fraction: float,
     return hits.filter(F.substring(key, 1, width) < F.lit(thresh))
 
 
+def window_rows(rows: list, columns: list[str], first: int, size: int,
+                order_cols=("doc_id", "start")) -> list:
+    """The ``[first, first + size)`` window of collected hit ``rows``
+    (with ``columns``) in ``order_cols`` order."""
+    rows = sorted(rows, key=itemgetter(*map(columns.index, order_cols)))
+    return rows[first:first + size]
+
+
 def window_hits(hits: DataFrame, first: int, size: int,
                 order_cols: list[str] = ("doc_id", "start")) -> DataFrame:
     """Paging window with deterministic order (HitsAbstract.java:157-204).
@@ -575,10 +542,9 @@ def window_hits(hits: DataFrame, first: int, size: int,
     local frame instead: no Spark job, whatever the window."""
     rows = local_rows(hits)
     if rows is not None:
-        cols = hits.columns
-        rows = sorted(rows, key=itemgetter(*map(cols.index, order_cols)))
         return local_frame(hits.sparkSession, pd.DataFrame.from_records(
-            rows[first:first + size], columns=cols), hits.schema)
+            window_rows(rows, hits.columns, first, size, order_cols),
+            columns=hits.columns), hits.schema)
     from pyspark.sql import Window as W
     cols = [F.col(c) for c in order_cols]
     head = hits.orderBy(*cols).limit(first + size)

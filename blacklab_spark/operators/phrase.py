@@ -18,11 +18,14 @@ decision logic SURVEY.md §4.4):
   Best for rare phrases over huge corpora: touches only the terms'
   postings, never the corpus. Slots carry offsets, so a fixed-gap
   phrase (``"a" [] "b"``, offsets 0 and 2) is the same intersection.
-  Below ``hits.DRIVER_HITS_MAX_POSITIONS`` (the terms' Σcf) the blocks
-  are read with Arrow and the kernel runs once on the driver, giving a
-  local frame; at or above it the kernel runs per doc-range bucket in
-  ``applyInPandas``. A postings leaf (``hits.hits_for_term_ids``)
-  decodes on the driver through the same kernel with one slot.
+
+``postings_hits`` is the one code that turns posting blocks into hits:
+phrases, fixed-gap phrases and, with one slot, every postings leaf
+(``hits.hits_for_term_ids``: a term, regex, fuzzy or merged OR leaf).
+Below ``hits.DRIVER_HITS_MAX_POSITIONS`` (the terms' Σcf) the blocks
+are read with Arrow and the kernel runs once on the driver, giving a
+local frame sorted by (doc_id, start); at or above it the kernel runs
+per doc-range bucket in ``applyInPandas`` and the rows are unordered.
 
 Both must return identical hit lists (dual-path test ≙ reference
 _FI1/_FI2 goldens, test/test/hits.js:55-57). Hits are half-open token
@@ -144,7 +147,9 @@ def postings_hits(index: InvertedIndex, slots_of: dict[int, list[int]],
     Σcf, what the decode produces — picks the side: below
     ``hits.DRIVER_HITS_MAX_POSITIONS`` the blocks are read with Arrow
     and the kernel runs once on the driver, giving a local frame sorted
-    by (doc_id, start); otherwise it runs per bucket in Spark."""
+    by (doc_id, start); otherwise it runs per bucket in Spark and the
+    rows come in no particular order (``window_hits`` and
+    ``sort_hits`` order their own input)."""
     from blacklab_spark.operators import hits as H
     if not H.decodes_on_driver(n_positions):
         blocks = index.postings.filter(
@@ -154,7 +159,7 @@ def postings_hits(index: InvertedIndex, slots_of: dict[int, list[int]],
                .groupBy("bucket")
                .applyInPandas(_phrase_kernel(slots_of, offsets),
                               HITS_SCHEMA))
-        return index.without_deleted(out).orderBy("doc_id", "start")
+        return index.without_deleted(out)
     from blacklab_spark.operators.scoring import local_frame
     blocks = index.posting_blocks(list(slots_of), POSITION_COLUMNS)
     hits = _phrase_kernel(slots_of, offsets)(None, blocks)

@@ -137,7 +137,13 @@ def regex_terms(index: InvertedIndex, pattern: str) -> DataFrame:
     insensitive term dictionary is lowercased — the reference likewise
     desensitizes the pattern for @i matching (DesensitizeFilter)."""
     info = index.expand_regex(f"(?iu)^(?:{pattern})$")
-    terms = list(info["term"])
+    return terms_probe(index, list(info["term"]))
+
+
+def terms_probe(index: InvertedIndex, terms: list[str]) -> DataFrame:
+    """All positions of any of ``terms`` (@i dictionary terms) from one
+    forward-index probe: an array-overlap pre-filter, then posexplode
+    with an OR-set membership filter. No terms → no hits."""
     if not terms:
         return no_hits(index)
     dm = index.doc_meta

@@ -5,10 +5,12 @@ BLSpanQuery → BLSpans, SURVEY.md §3.1 steps 4-7), except the physical
 side is a Catalyst plan: each AST node maps to one operators.spans
 function, and Catalyst then handles join strategy, pushdown and AQE.
 
-Physical leaf strategy (round 2): Term/Regex leaves decode POSTING
-BLOCKS (hits_for_term_ids) instead of scanning the corpus's token
-arrays — a hapax-term CQL query now reads a few KB of blocks, not
-every doc. Below hits.DRIVER_HITS_MAX_POSITIONS (Σcf) a leaf or phrase
+Physical leaf strategy: a word-layer Term/Regex/Fuzzy leaf maps to its
+terms rows (_word_leaf_terms) and decodes their POSTING BLOCKS
+(hits_for_term_ids → phrase.postings_hits, the one block decoder of
+leaves, merged ORs and phrases) instead of scanning the corpus's token
+arrays — a hapax-term CQL query reads a few KB of blocks, not every
+doc. Below hits.DRIVER_HITS_MAX_POSITIONS (Σcf) a leaf or phrase
 decodes on the driver and returns a local frame. Sequences of width-1
 leaves pick between three plans from term statistics, mirroring the
 reference's cost-based
@@ -75,6 +77,17 @@ FISEQ_MAX_ANCHOR_DOCS = 65536
 _NO_STATS = 1 << 60   # non-word layers have no dictionary stats
 
 
+def _word_leaf_terms(index: InvertedIndex, c: Q.Pattern) -> pd.DataFrame:
+    """The terms rows (term, term_id, df, cf) a word-layer Term, Regex or
+    Fuzzy leaf matches: its dictionary lookup or expansion (memoized
+    per index)."""
+    if isinstance(c, Q.Term):
+        return index.lookup_terms([c.text])
+    if isinstance(c, Q.Regex):
+        return index.expand_regex(f"(?iu)^(?:{c.pattern})$")
+    return index.expand_fuzzy(c.text, c.max_edits)
+
+
 def _leaf_info(index: InvertedIndex, c: Q.Pattern):
     """(cf, df, terms rows) for a width-1 leaf, from the terms table.
     Non-word annotation layers carry no postings/stats → effectively
@@ -82,10 +95,7 @@ def _leaf_info(index: InvertedIndex, c: Q.Pattern):
     CAN be verified by the forward-index probe."""
     if getattr(c, "layer", "word") != "word":
         return (_NO_STATS, _NO_STATS, None)
-    if isinstance(c, Q.Term):
-        info = index.lookup_terms([c.text])
-    else:
-        info = index.expand_regex(f"(?iu)^(?:{c.pattern})$")
+    info = _word_leaf_terms(index, c)
     return (int(info["cf"].sum()), int(info["df"].sum()), info)
 
 
@@ -266,20 +276,11 @@ def _or_merge_term_ids_uncached(index: InvertedIndex,
     (the SimplestMatcher family, query rewriting.md:30-64)."""
     if not index.cfg.store_positions:
         return None
-    infos = []
-    for c in clauses:
-        if getattr(c, "layer", None) != "word":
-            return None
-        if isinstance(c, Q.Term):
-            info = index.lookup_terms([c.text])
-        elif isinstance(c, Q.Regex):
-            info = index.expand_regex(f"(?iu)^(?:{c.pattern})$")
-        elif isinstance(c, Q.Fuzzy):
-            info = index.expand_fuzzy(c.text, c.max_edits)
-        else:
-            return None
-        infos.append(info[["term_id", "cf"]])
-    rows = pd.concat(infos, ignore_index=True)
+    if not all(isinstance(c, (Q.Term, Q.Regex, Q.Fuzzy))
+               and c.layer == "word" for c in clauses):
+        return None
+    rows = pd.concat([_word_leaf_terms(index, c)[["term_id", "cf"]]
+                      for c in clauses], ignore_index=True)
     if not rows["term_id"].is_unique:
         return None          # overlap → union semantics must keep dups
     return rows
@@ -343,11 +344,13 @@ def _fiseq_synonym_unsafe(index: InvertedIndex, clauses) -> bool:
     return False               # an injected value — stay on postings
 
 
-def _is_hot_term(index: InvertedIndex, text: str) -> bool:
-    """The collocations df-rule: a term in ≥1/4 of all docs is 'hot' —
-    probing beats decoding its posting list (lookup is memoized)."""
-    info = index.lookup_terms([text])
-    return not info.empty and int(info["df"].sum()) * 4 >= index.n_docs
+def _probes_filter_term(index: InvertedIndex, f: Q.Pattern) -> bool:
+    """Whether a position filter's filter clause runs as a forward-index
+    probe of only the producer's docs: a word-layer Term that
+    :func:`hits.is_hot_term` calls hot."""
+    from blacklab_spark.operators.hits import is_hot_term
+    return (isinstance(f, Q.Term) and f.layer == "word"
+            and is_hot_term(index, _fold_i(f.text)))
 
 
 def _fixed_width(p: Q.Pattern) -> int | None:
@@ -619,32 +622,19 @@ def _compile_constraint(c, layers: set[str],
 
 
 def _exec(index: InvertedIndex, p: Q.Pattern) -> DataFrame:
-    if isinstance(p, Q.Term):
-        if p.layer != "word":
-            return S.annot_term(index, p.layer, p.text)
+    if isinstance(p, Q.Term) and p.layer != "word":
+        return S.annot_term(index, p.layer, p.text)
+    if isinstance(p, Q.Regex) and p.layer != "word":
+        return S.annot_regex(index, p.layer, p.pattern)
+    if isinstance(p, Q.Fuzzy) and p.layer != "word":
+        raise ValueError("fuzzy matching supports the word layer "
+                         f"only, got layer {p.layer!r}")
+    if isinstance(p, (Q.Term, Q.Regex, Q.Fuzzy)):
+        terms = _word_leaf_terms(index, p)
         if index.cfg.store_positions:
             from blacklab_spark.operators.hits import hits_for_term_ids
-            return hits_for_term_ids(index, index.lookup_terms([p.text]))
-        return S.term(index, p.text)
-    if isinstance(p, Q.Regex):
-        if p.layer != "word":
-            return S.annot_regex(index, p.layer, p.pattern)
-        if index.cfg.store_positions:
-            from blacklab_spark.operators.hits import hits_for_term_ids
-            return hits_for_term_ids(
-                index, index.expand_regex(f"(?iu)^(?:{p.pattern})$"))
-        return S.regex_terms(index, p.pattern)
-    if isinstance(p, Q.Fuzzy):
-        if p.layer != "word":
-            raise ValueError("fuzzy matching supports the word layer "
-                             f"only, got layer {p.layer!r}")
-        info = index.expand_fuzzy(p.text, p.max_edits)
-        if info.empty:
-            return S.no_hits(index)
-        if index.cfg.store_positions:
-            from blacklab_spark.operators.hits import hits_for_term_ids
-            return hits_for_term_ids(index, info)
-        return S.or_(*[S.term(index, t) for t in info["term"]])
+            return hits_for_term_ids(index, terms)
+        return S.terms_probe(index, list(terms["term"]))
     if isinstance(p, Q.NoHits):
         return S.no_hits(index)
     if isinstance(p, Q.AnyToken):
@@ -747,17 +737,8 @@ def _exec(index: InvertedIndex, p: Q.Pattern) -> DataFrame:
                             p.filter.attr_val, spans=pruned,
                             adjust=p.filter.adjust,
                             attr_range=p.filter.attr_range)
-        elif (isinstance(p.filter, Q.Term) and p.filter.layer == "word"
-              and index.cfg.store_positions
-              # forward-index probe sees PRIMARY word values only —
-              # unsound exactly when the filter term exists somewhere
-              # ONLY as an injected synonym value (synonym keys and
-              # uninvolved terms are safe: injection stacks values AT
-              # key positions, never the key elsewhere)
-              and _fold_i(p.filter.text)
-              not in index.synonym_injected_values
-              and _is_hot_term(index, p.filter.text)):
-            # HOT filter term (the collocations df-rule): probe the
+        elif _probes_filter_term(index, p.filter):
+            # HOT filter term (hits.is_hot_term): probe the
             # token arrays of ONLY the producer's docs instead of
             # decoding the hot term's full postings — a CCNot product
             # like ``[word!="the"] "visa"`` then reads a few thousand
@@ -1067,60 +1048,77 @@ def explain(cql: str, index: InvertedIndex | None = None) -> str:
              f"{'inf' if g.len_max is None else g.len_max}] "
              f"unique={g.unique}"]
     if index is not None:
-        for node in _walk(rewritten):
-            if isinstance(node, Q.Or):
-                merged = _or_merge_term_ids(index, node.clauses)
-                if merged is not None:
-                    lines.append(
-                        f"or {Q.pattern_str(node)} -> merged postings "
-                        f"decode ({len(merged)} terms, one block scan)"
-                        + _decode_note(merged))
-                elif _or_annot_merge(node.clauses) is not None:
-                    layer = node.clauses[0].layer
-                    lines.append(
-                        f"or {Q.pattern_str(node)} -> single "
-                        f"{layer}-layer probe (one forward-index pass)")
-                continue
-            if isinstance(node, Q.Seq) and not any(
-                    _has_capture(c) for c in node.clauses):
-                choice = _seq_choice(index, node.clauses)
-                generic_desc = "pairwise positional joins over " \
-                               "postings leaves"
-                if choice[0] == "generic":
-                    gs = [_guar(index, c) for c in node.clauses]
-                    if all(g.unique for g in gs) and \
-                            sum(1 for g in gs if not g.fixed_width) <= 1:
-                        generic_desc += " (output dedup elided — " \
-                                        "SpanGuarantees)"
-                desc = {"fiseq": "FiSeq (anchor postings + forward-"
-                                 "index verify)",
-                        "phrase": "postings position-intersection",
-                        "empty": "no-hits (term absent)",
-                        "generic": generic_desc}[choice[0]]
-                extra = ""
-                if choice[0] == "phrase":
-                    extra = (f", offsets {list(choice[2])}" + _decode_note(
-                        index.lookup_terms(choice[1])))
-                if choice[0] == "fiseq":
-                    a = choice[1]
-                    extra = (f" [anchor clause {a}: "
-                             f"cf={choice[2][a][0]}, df={choice[2][a][1]}]")
-                lines.append(
-                    f"seq {Q.pattern_str(node)} -> {desc}{extra}")
-            elif isinstance(node, Q.Fuzzy):
-                info = index.expand_fuzzy(node.text, node.max_edits)
-                lines.append(f"leaf {Q.pattern_str(node)} -> fuzzy "
-                             f"dictionary expansion ({len(info)} terms) + "
-                             "postings decode" + _decode_note(info))
-            elif isinstance(node, (Q.Term, Q.Regex)):
-                layer = getattr(node, "layer", "word")
-                if layer == "word" and index.cfg.store_positions:
-                    strat = "postings block decode" + _decode_note(
-                        _leaf_info(index, node)[2])
-                else:
-                    strat = f"forward-index probe ({layer} layer)"
-                lines.append(f"leaf {Q.pattern_str(node)} -> {strat}")
+        _explain_physical(index, rewritten, lines)
     return "\n".join(lines)
+
+
+def _explain_physical(index: InvertedIndex, node: Q.Pattern,
+                      lines: list[str]) -> None:
+    """Append explain()'s line for the physical choice ``_exec`` makes
+    at ``node``, then the lines of the nodes under it that run on their
+    own: none under a merged OR (one decode or probe), only the
+    producer under a position filter whose hot filter term probes the
+    producer's docs."""
+    kids = _children(node)
+    if isinstance(node, Q.Or):
+        merged = _or_merge_term_ids(index, node.clauses)
+        if merged is not None:
+            lines.append(
+                f"or {Q.pattern_str(node)} -> merged postings "
+                f"decode ({len(merged)} terms, one block scan)"
+                + _decode_note(merged))
+            kids = []
+        elif _or_annot_merge(node.clauses) is not None:
+            layer = node.clauses[0].layer
+            lines.append(
+                f"or {Q.pattern_str(node)} -> single "
+                f"{layer}-layer probe (one forward-index pass)")
+            kids = []
+    elif isinstance(node, Q.PosFilter) and \
+            _probes_filter_term(index, node.filter):
+        lines.append(f"leaf {Q.pattern_str(node.filter)} -> forward-index "
+                     "probe of the producer's docs (hot term)")
+        kids = [node.producer]
+    elif isinstance(node, Q.Seq) and not any(
+            _has_capture(c) for c in node.clauses):
+        choice = _seq_choice(index, node.clauses)
+        generic_desc = "pairwise positional joins over " \
+                       "postings leaves"
+        if choice[0] == "generic":
+            gs = [_guar(index, c) for c in node.clauses]
+            if all(g.unique for g in gs) and \
+                    sum(1 for g in gs if not g.fixed_width) <= 1:
+                generic_desc += " (output dedup elided — " \
+                                "SpanGuarantees)"
+        desc = {"fiseq": "FiSeq (anchor postings + forward-"
+                         "index verify)",
+                "phrase": "postings position-intersection",
+                "empty": "no-hits (term absent)",
+                "generic": generic_desc}[choice[0]]
+        extra = ""
+        if choice[0] == "phrase":
+            extra = (f", offsets {list(choice[2])}" + _decode_note(
+                index.lookup_terms(choice[1])))
+        if choice[0] == "fiseq":
+            a = choice[1]
+            extra = (f" [anchor clause {a}: "
+                     f"cf={choice[2][a][0]}, df={choice[2][a][1]}]")
+        lines.append(f"seq {Q.pattern_str(node)} -> {desc}{extra}")
+    elif isinstance(node, (Q.Term, Q.Regex, Q.Fuzzy)) and \
+            node.layer == "word":
+        terms = _word_leaf_terms(index, node)
+        strat = (f"fuzzy dictionary expansion ({len(terms)} terms) + "
+                 if isinstance(node, Q.Fuzzy) else "")
+        if index.cfg.store_positions:
+            strat += "postings block decode" + _decode_note(terms)
+        else:
+            strat += "forward-index probe (word layer)"
+        lines.append(f"leaf {Q.pattern_str(node)} -> {strat}")
+    elif isinstance(node, (Q.Term, Q.Regex)):
+        lines.append(f"leaf {Q.pattern_str(node)} -> forward-index "
+                     f"probe ({node.layer} layer)")
+    for c in kids:
+        _explain_physical(index, c, lines)
 
 
 def _decode_note(terms: pd.DataFrame) -> str:
@@ -1133,25 +1131,24 @@ def _decode_note(terms: pd.DataFrame) -> str:
             f"{H.DRIVER_HITS_MAX_POSITIONS}: {side}]")
 
 
-def _walk(p: Q.Pattern):
-    yield p
-    for attr in ("clauses",):
-        if hasattr(p, attr):
-            for c in getattr(p, attr):
-                yield from _walk(c)
+def _children(p: Q.Pattern) -> list[Q.Pattern]:
+    """The sub-patterns of ``p``: its clauses, nested clause,
+    position-filter producer and filter, binary nodes' named operands
+    (Overlap a/b, RelMatch/CrossField source/target, RelFunc optional
+    target) and RelMulti child relations' targets."""
+    out = list(getattr(p, "clauses", ()))
     if hasattr(p, "clause"):
-        yield from _walk(p.clause)
+        out.append(p.clause)
     if hasattr(p, "producer"):
-        yield from _walk(p.producer)
-        yield from _walk(p.filter)
-    # binary nodes with named operands (Overlap a/b, RelMatch/
-    # CrossField source/target, RelFunc optional target)
-    for attr in ("a", "b", "source"):
+        out += [p.producer, p.filter]
+    for attr in ("a", "b", "source", "target"):
         v = getattr(p, attr, None)
         if isinstance(v, Q.Pattern):
-            yield from _walk(v)
-    tgt = getattr(p, "target", None)
-    if isinstance(tgt, Q.Pattern):
-        yield from _walk(tgt)
-    for br in getattr(p, "branches", ()):   # RelMulti child relations
-        yield from _walk(br.target)
+            out.append(v)
+    return out + [br.target for br in getattr(p, "branches", ())]
+
+
+def _walk(p: Q.Pattern):
+    yield p
+    for c in _children(p):
+        yield from _walk(c)

@@ -704,7 +704,8 @@ class BlsApp:
 
         counted = hits
         # a local frame (a postings leaf or phrase decoded on the
-        # driver) collects without a job: count its rows here
+        # driver) collects without a job: count and window its rows
+        # here, one collect for both
         from blacklab_spark.operators.scoring import local_rows
         local = None if sort else local_rows(hits)
         if sort:
@@ -715,6 +716,9 @@ class BlsApp:
             except ValueError as e:
                 raise BlsError(400, "UNKNOWN_SORT_PROPERTY",
                                str(e)) from None
+        elif local is not None:
+            from blacklab_spark.operators.hits import window_rows
+            window = window_rows(local, hits.columns, first, number)
         else:
             from blacklab_spark.operators.hits import window_hits
             window = window_hits(hits, first, number).collect()

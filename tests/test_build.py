@@ -477,7 +477,7 @@ def test_synonym_hot_filter_term_uses_postings(spark, tiny_pdf,
     return EVERY visa hit — the probe path returns none of them (no
     primary token 'the' at a visa position)."""
     from blacklab_spark.engine import SearchEngine
-    from blacklab_spark.plans.executor import _is_hot_term
+    from blacklab_spark.operators.hits import is_hot_term
     out = str(tmp_path / "synhot_idx")
     df = spark.createDataFrame(tiny_pdf)
     build_index(spark, df, out,
@@ -485,13 +485,35 @@ def test_synonym_hot_filter_term_uses_postings(spark, tiny_pdf,
                             num_partitions=2,
                             synonyms={"visa": ["the"]}))
     eng = SearchEngine.open(spark, out)
-    # the guard only matters if the term qualifies as hot here
-    assert _is_hot_term(eng.index, "the")
+    # the guard only matters if the term qualifies as hot by df here
+    info = eng.index.lookup_terms(["the"])
+    assert int(info["df"].sum()) * 4 >= eng.index.n_docs
+    assert not is_hot_term(eng.index, "the")
     visa = sorted((r["doc_id"], r["start"])
                   for r in eng.find('"visa"').collect())
     filt = sorted((r["doc_id"], r["start"])
                   for r in eng.find('"visa" containing "the"').collect())
     assert visa and filt == visa
+
+
+def test_synonym_hot_collocations_count_stacked_positions(spark, tiny_pdf,
+                                                         tmp_path):
+    """collocations of a hot term that is an injected synonym value
+    counts the context of every stacked position: it equals
+    collocations_from_hits over the term's CQL hits (the forward-index
+    probe sees primary values only and would miss them)."""
+    from blacklab_spark.engine import SearchEngine
+    from blacklab_spark.operators import hits as H
+    out = str(tmp_path / "syncolloc_idx")
+    build_index(spark, spark.createDataFrame(tiny_pdf), out,
+                BuildConfig(block_size=8, bucket_size=16,
+                            num_partitions=2,
+                            synonyms={"visa": ["the"]}))
+    eng = SearchEngine.open(spark, out)
+    got = sorted(map(tuple, H.collocations(eng.index, "the", 3).collect()))
+    want = sorted(map(tuple, H.collocations_from_hits(
+        eng.index, eng.find('"the"'), 3).collect()))
+    assert got == want and got
 
 
 def test_synonym_guard_narrowed_to_injected_values(spark, tiny_pdf,
@@ -503,8 +525,8 @@ def test_synonym_guard_narrowed_to_injected_values(spark, tiny_pdf,
     either path are identical."""
     from blacklab_spark.engine import SearchEngine
     from blacklab_spark.plans import query as Q
-    from blacklab_spark.plans.executor import (_fiseq_synonym_unsafe,
-                                               _is_hot_term)
+    from blacklab_spark.operators.hits import is_hot_term
+    from blacklab_spark.plans.executor import _fiseq_synonym_unsafe
     out = str(tmp_path / "syng_idx")
     df = spark.createDataFrame(tiny_pdf)
     build_index(spark, df, out,
@@ -521,7 +543,7 @@ def test_synonym_guard_narrowed_to_injected_values(spark, tiny_pdf,
     assert _fiseq_synonym_unsafe(idx, [Q.Regex("perm.*")])
     # hot uninvolved filter term goes through the probe and agrees
     # with the postings truth
-    assert _is_hot_term(idx, "the")
+    assert is_hot_term(idx, "the")
     got = sorted((r["doc_id"], r["start"])
                  for r in eng.find('"visa" containing "visa"').collect())
     visa = sorted((r["doc_id"], r["start"])

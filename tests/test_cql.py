@@ -80,6 +80,22 @@ def test_explain(idx, monkeypatch):
     assert "driver decode" not in s and s.count("Spark decode") == 3
 
 
+def test_explain_names_the_leaf_plan_exec_runs(idx):
+    """explain() prints the plan _exec runs: a hot position-filter term
+    probes the producer's docs instead of decoding its postings, and a
+    merged OR's children get no lines of their own (they are not
+    decoded one by one)."""
+    the = idx.lookup_terms(["the"])
+    assert int(the["df"].sum()) * 4 >= idx.n_docs    # hot by df
+    s = explain('"visa" containing "the"', idx)
+    assert ('leaf "the" -> forward-index probe of the producer\'s docs'
+            in s)
+    assert 'leaf "the" -> postings' not in s
+    assert 'leaf "visa" -> postings block decode' in s
+    s = explain('"visa" | "good"', idx)
+    assert "merged postings decode (2 terms" in s and "leaf" not in s
+
+
 # ---------------- executor vs oracle ----------------
 @pytest.fixture(scope="module")
 def idx(tiny_engine):
@@ -418,11 +434,11 @@ def test_term_leaf_below_bound_is_a_local_frame(idx):
 def test_postings_leaf_equals_probe_leaf(idx):
     """Dual physical path: postings-decoded term hits ≡ token-array
     probe hits (≙ reference _FI1/_FI2 equality)."""
-    from blacklab_spark.operators.hits import (term_hits,
-                                               term_hits_via_postings)
+    from blacklab_spark.operators.hits import hits_for_term_ids, term_hits
     for t in ["visa", "the", "good"]:
         probe = sorted(map(tuple, term_hits(idx, t).collect()))
-        post = sorted(map(tuple, term_hits_via_postings(idx, t).collect()))
+        post = sorted(map(tuple, hits_for_term_ids(
+            idx, idx.lookup_terms([t])).collect()))
         assert probe == post and probe
 
 
@@ -441,15 +457,21 @@ def test_fiseq_equals_generic_join(idx, monkeypatch, hits_paths):
         assert fiseq == generic and fiseq
 
 
-def test_fiseq_regex_anchor(idx, monkeypatch):
-    """FiSeq with the REGEX clause as the rare anchor side."""
+def test_fiseq_regex_anchor(idx, tiny_oracle, monkeypatch, hits_paths):
+    """FiSeq with the REGEX clause as the rare anchor side, on both
+    sides of the driver decode bound."""
     from blacklab_spark.plans import executor as E
     q = '[word="vis."] "application"'
-    monkeypatch.setattr(E, "FI_MATCH_FACTOR", 0)
-    fiseq = sorted(map(tuple, find(idx, q).collect()))
-    monkeypatch.setattr(E, "FI_MATCH_FACTOR", 10 ** 18)
-    generic = sorted(map(tuple, find(idx, q).collect()))
-    assert fiseq == generic and fiseq
+    want = sorted((d, p, p + 2) for d, toks in otoks(tiny_oracle).items()
+                  for p in range(len(toks) - 1)
+                  if re.fullmatch("vis.", toks[p])
+                  and toks[p + 1] == "application")
+    for _ in hits_paths:
+        monkeypatch.setattr(E, "FI_MATCH_FACTOR", 0)
+        fiseq = hits_of(find(idx, q))
+        monkeypatch.setattr(E, "FI_MATCH_FACTOR", 10 ** 18)
+        generic = hits_of(find(idx, q))
+        assert fiseq == generic == want and want
 
 
 # ---------------- round-2: global constraint syntax ------------------
@@ -827,9 +849,10 @@ def test_parse_fuzzy_and_settings():
         parse('[]~1')     # fuzzy only on plain terms
 
 
-def test_find_fuzzy_term(idx, tiny_oracle):
+def test_find_fuzzy_term(idx, tiny_oracle, hits_paths):
     """"visa"~1 must hit every dictionary term within 1 edit of visa
-    — including visa itself — and equal the union of exact probes."""
+    — including visa itself — and equal the union of exact probes, on
+    both sides of the driver decode bound."""
     terms = [t for t in tiny_oracle.postings if _edit1("visa", t)]
     assert "visa" in terms
     expected = sorted(
@@ -837,9 +860,8 @@ def test_find_fuzzy_term(idx, tiny_oracle):
         for t in terms
         for d in tiny_oracle.doc_ids
         for p, tok in enumerate(tiny_oracle.tokens[d]) if tok == t)
-    got = sorted(map(tuple, find(idx, '"visa"~1')
-                     .select("doc_id", "start", "end").collect()))
-    assert got == expected
+    for _ in hits_paths:
+        assert hits_of(find(idx, '"visa"~1')) == expected
 
 
 def _edit1(a: str, b: str) -> bool:

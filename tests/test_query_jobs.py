@@ -274,6 +274,30 @@ def test_hits_page_below_hits_bound_equals_spark_page(spark, tiny_index_dir,
     assert got == want and got["hits"]
 
 
+@pytest.mark.parametrize("patt", _HITS_PAGES)
+def test_hits_page_collects_a_local_frame_once(spark, tiny_index_dir,
+                                               monkeypatch, patt):
+    """An unsorted page over a driver-decoded hits frame collects the
+    frame once, for its window and its counts both."""
+    from blacklab_spark.operators import hits as H
+    from blacklab_spark.operators import scoring
+    from blacklab_spark.server import BlsApp
+    real, collects = scoring.local_rows, []
+
+    def counting(df):
+        rows = real(df)
+        if rows is not None:
+            collects.append(len(rows))
+        return rows
+    monkeypatch.setattr(scoring, "local_rows", counting)
+    monkeypatch.setattr(H, "local_rows", counting)
+    app = BlsApp(SearchEngine.open(spark, tiny_index_dir), corpus="t")
+    st, _, body = app.handle("/blacklab-server/t/hits",
+                             {"patt": [patt], "number": ["20"]})
+    assert st == 200 and json.loads(body)["hits"]
+    assert len(collects) == 1
+
+
 @pytest.mark.parametrize("first,size", [(0, 5), (3, 20), (0, 10_000),
                                         (10_000, 20)])
 def test_window_of_a_local_frame_runs_no_job(spark, tiny_index_dir,

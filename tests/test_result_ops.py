@@ -355,9 +355,10 @@ def test_term_hits_auto_hot_term_uses_probe(tiny_engine):
     df = tiny_engine.term_hits(term)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "doc_meta" in plan
-    from blacklab_spark.operators.hits import term_hits_via_postings
+    from blacklab_spark.operators.hits import hits_for_term_ids
     a = sorted(map(tuple, df.collect()))
-    b = sorted(map(tuple, term_hits_via_postings(idx, term).collect()))
+    b = sorted(map(tuple, hits_for_term_ids(
+        idx, idx.lookup_terms([term])).collect()))
     assert a == b and a
 
 
