@@ -347,10 +347,11 @@ def _fiseq_synonym_unsafe(index: InvertedIndex, clauses) -> bool:
 def _probes_filter_term(index: InvertedIndex, f: Q.Pattern) -> bool:
     """Whether a position filter's filter clause runs as a forward-index
     probe of only the producer's docs: a word-layer Term that
-    :func:`hits.is_hot_term` calls hot."""
+    :func:`hits.is_hot_term` calls hot, on an index with positions
+    (without them the filter's leaf is a whole-corpus probe)."""
     from blacklab_spark.operators.hits import is_hot_term
-    return (isinstance(f, Q.Term) and f.layer == "word"
-            and is_hot_term(index, _fold_i(f.text)))
+    return (index.cfg.store_positions and isinstance(f, Q.Term)
+            and f.layer == "word" and is_hot_term(index, _fold_i(f.text)))
 
 
 def _fixed_width(p: Q.Pattern) -> int | None:

@@ -442,6 +442,32 @@ def test_postings_leaf_equals_probe_leaf(idx):
         assert probe == post and probe
 
 
+@pytest.fixture(scope="module")
+def nopos_idx(spark, tiny_pdf, tmp_path_factory):
+    """The tiny corpus indexed without positions."""
+    from blacklab_spark.build import build_index
+    from blacklab_spark.config import BuildConfig
+    from blacklab_spark.index import open_index
+    out = str(tmp_path_factory.mktemp("nopos") / "idx")
+    build_index(spark, spark.createDataFrame(tiny_pdf), out,
+                BuildConfig(block_size=8, bucket_size=16, num_partitions=2,
+                            store_positions=False))
+    return open_index(spark, out)
+
+
+@pytest.mark.parametrize("q", ['"visa"', '[word="vis."]', '"visa"~1',
+                               '"visa" | "good"', '"visa" containing "the"'])
+def test_positionless_word_leaves_probe(idx, nopos_idx, q):
+    """Without positions every word leaf, a position filter's hot term
+    included, runs the forward-index probe over its terms rows, and
+    its hits equal the postings decode's."""
+    assert hits_of(find(nopos_idx, q)) == hits_of(find(idx, q))
+    leaves = [ln for ln in explain(q, nopos_idx).splitlines()
+              if ln.startswith(("leaf ", "or "))]
+    assert leaves and all(ln.endswith("forward-index probe (word layer)")
+                          for ln in leaves)
+
+
 def test_fiseq_equals_generic_join(idx, monkeypatch, hits_paths):
     """FiSeq (anchor postings + forward-index verify) must produce the
     same hits as the generic positional-join plan for the same query
